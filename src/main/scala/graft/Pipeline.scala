@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model._
@@ -17,8 +17,11 @@ import graft.sources.Readers
   *
   * Control flow (batch discovery, status transitions, file moves) is
   * driver-side and idempotent; all record-level work is DataFrame
-  * plans, so each batch scales with executors. Batches are per-file to
-  * mirror the reference's unit of work (etl/ingest.py:71-77); at
+  * plans, so each batch scales with executors. Each stage call runs in
+  * one [[operators.Provenance.batched]] scope, so it appends each
+  * control table once for all the batches it moves. Batches are
+  * per-file to mirror the reference's unit of work
+  * (etl/ingest.py:71-77); at
   * 100 TB the same stages run unchanged with globs instead of single
   * files since every operator is a plain DataFrame transform.
   *
@@ -60,7 +63,7 @@ final class Pipeline(
     * compensating pass a streaming watch pairs with, since Spark file
     * sources never surface zero-byte files.
     */
-  def ingest(sourceBase: String, skipIfSeen: Boolean = false): Seq[String] = {
+  def ingest(sourceBase: String, skipIfSeen: Boolean = false): Seq[String] = provenance.batched {
     registry.filter(_.active).flatMap { spec =>
       val srcDir = Paths.get(s"$sourceBase/${spec.name}")
       if (!Files.isDirectory(srcDir)) Nil
@@ -97,8 +100,8 @@ final class Pipeline(
   // Stage 2: VALIDATE (etl/validate.py:225-306)
   // ------------------------------------------------------------------
 
-  def validatePending(): Seq[(String, Boolean)] =
-    pendingBatches("INGESTED").map { case (batchId, source, rawPath) =>
+  def validatePending(): Seq[(String, Boolean)] = provenance.batched {
+    pendingBatches("INGESTED").map { case (batchId, source, rawPath, _) =>
       val spec = registry.find(_.name == source)
       val result =
         if (!Files.exists(Paths.get(rawPath))) ValidationResult(valid = false, 0, Nil, Seq("missing_file"))
@@ -106,7 +109,8 @@ final class Pipeline(
           case None => ValidationResult(valid = true, 0, Nil, Nil) // VALIDATION_SKIPPED
           case Some(sp) => sp.format match {
             case SourceFormat.Csv   => Validator.validate(Readers.csv(spark, sp, rawPath), sp)
-            case SourceFormat.Jsonl => Validator.validate(Readers.jsonl(spark, sp, rawPath), sp)
+            // every JSONL row is checked (etl/validate.py:127-158)
+            case SourceFormat.Jsonl => Validator.validate(Readers.jsonl(spark, sp, rawPath), sp, probeAll = true)
             case SourceFormat.Hl7   => Validator.validateHl7(Readers.hl7Messages(spark, rawPath), sp)
           }
         }
@@ -129,13 +133,14 @@ final class Pipeline(
       }
       batchId -> result.valid
     }
+  }
 
   // ------------------------------------------------------------------
   // Stage 3: SCRUB_PHI (etl/scrub_phi.py:280-318)
   // ------------------------------------------------------------------
 
-  def scrubPending(): Seq[String] =
-    pendingBatches("VALIDATED").map { case (batchId, source, rawPath) =>
+  def scrubPending(): Seq[String] = provenance.batched {
+    pendingBatches("VALIDATED").map { case (batchId, source, rawPath, _) =>
       val spec = registry.find(_.name == source).getOrElse(sys.error(s"unknown source $source"))
       val fileName = Paths.get(rawPath).getFileName.toString
       val outPath = zone("curated", source, fileName)
@@ -159,50 +164,51 @@ final class Pipeline(
       fired.toSeq.sorted.foreach(r => provenance.recordRule(batchId, r, "applied"))
       batchId
     }
+  }
 
-  /** Collect (rowCount, totalReplacements, firedRules) from a scrubbed
-    * frame carrying the Scrubber bookkeeping columns (A1/A2/A3).
+  /** Hand a scrubbed frame, less its Scrubber bookkeeping columns
+    * (A1/A2/A3), to `write`, and return (rowCount, totalReplacements,
+    * firedRules) observed on the job that writes it (the util/Actions
+    * pattern) instead of by a job of their own.
     */
-  private def scrubStats(scrubbed: DataFrame): (Long, Long, Set[String]) = {
-    val row = scrubbed.agg(
-      count(lit(1)),
-      coalesce(sum(col("_redactions")), lit(0L)),
-      coalesce(array_distinct(flatten(collect_list(col("_fired_rules")))), array())).collect()(0)
-    (row.getLong(0), row.getLong(1), row.getSeq[String](2).toSet)
+  private def writeScrubbed(scrubbed: DataFrame)(write: DataFrame => Unit): (Long, Long, Set[String]) = {
+    val obs = Observation()
+    write(scrubbed.observe(obs,
+      count(lit(1)).as("n"),
+      coalesce(sum(col("_redactions")), lit(0L)).as("replacements"),
+      coalesce(array_distinct(flatten(collect_list(col("_fired_rules")))), array()).as("fired"))
+      .drop("_redactions", "_fired_rules"))
+    val m = obs.get
+    (m("n").asInstanceOf[Long], m("replacements").asInstanceOf[Long],
+      m("fired").asInstanceOf[scala.collection.Seq[String]].toSet)
   }
 
   private def scrubCsvFile(spec: SourceSpec, in: String, out: Path): (Long, Long, Set[String]) = {
     // preserve the file's own header set (K3): read with inferred header
     val df = Readers.csvInferHeader(spark, in)
-    val scrubbed = Scrubber.scrubTabular(df, spec, rules)
-    val stats = scrubStats(scrubbed)
-    writeSingleFile(scrubbed.drop("_redactions", "_fired_rules"), out, "csv")
-    stats
+    writeScrubbed(Scrubber.scrubTabular(df, spec, rules))(writeSingleFile(_, out, "csv"))
   }
 
   private def scrubJsonlFile(spec: SourceSpec, in: String, out: Path): (Long, Long, Set[String]) = {
     // cache: Spark disallows projecting only _corrupt_record from a raw
     // JSON scan; per-batch files are small so this is a driver-cheap fix
     val df = Readers.jsonl(spark, spec, in).cache()
-    val scrubbed = Scrubber.scrubTabular(df.drop("_corrupt_record"), spec, rules, byName = true)
-    val stats = scrubStats(scrubbed)
     // invalid JSON lines pass through verbatim (etl/scrub_phi.py:155-160)
     val corrupt = df.select(col("_corrupt_record").as("line")).filter(col("line").isNotNull)
-    val valid = scrubbed.drop("_redactions", "_fired_rules")
-    val lines = valid.select(to_json(struct(valid.columns.toIndexedSeq.map(col): _*)).as("line"))
-      .unionByName(corrupt)
-    writeSingleFile(lines, out, "text")
-    stats
+    try writeScrubbed(Scrubber.scrubTabular(df.drop("_corrupt_record"), spec, rules, byName = true)) { valid =>
+      val lines = valid.select(to_json(struct(valid.columns.toIndexedSeq.map(col): _*)).as("line"))
+      writeSingleFile(lines.unionByName(corrupt), out, "text")
+    } finally df.unpersist()
   }
 
   private def scrubHl7File(spec: SourceSpec, in: String, out: Path): (Long, Long, Set[String]) = {
     val messages = Readers.hl7Messages(spark, in)
-    val scrubbed = Scrubber.scrubHl7(messages, spec, rules)
-    val n = scrubbed.count()
+    val obs = Observation()
+    val scrubbed = Scrubber.scrubHl7(messages, spec, rules).observe(obs, count(lit(1)).as("n"))
     // message framing round-trip: each message followed by a blank line
     // (etl/scrub_phi.py:270 writes "\n".join(lines) + "\n\n")
     writeSingleFile(scrubbed.select(concat(col("message"), lit("\n")).as("value")), out, "text")
-    (n, 0L, Set("PHI_HL7_POSITIONAL"))
+    (obs.get("n").asInstanceOf[Long], 0L, Set("PHI_HL7_POSITIONAL"))
   }
 
   /** Write a small per-batch artifact as ONE file at `out` (reference
@@ -227,9 +233,10 @@ final class Pipeline(
   // Stage 4: TRANSFORM (etl/transform.py:159-241)
   // ------------------------------------------------------------------
 
-  def transformPending(): Seq[(String, String)] =
-    pendingBatches("SCRUBBED").map { case (batchId, source, _) =>
-      val curatedPath = latestCuratedPath(batchId)
+  def transformPending(): Seq[(String, String)] = provenance.batched {
+    pendingBatches("SCRUBBED").map { case (batchId, source, rawPath, curated) =>
+      val curatedPath = Option(curated).getOrElse(
+        zone("curated", source, Paths.get(rawPath).getFileName.toString).toString)
       val spec = registry.find(_.name == source)
       val df = spec.map(_.format) match {
         case Some(SourceFormat.Csv)   => Readers.csvInferHeader(spark, curatedPath)
@@ -239,7 +246,9 @@ final class Pipeline(
       }
       val canonical = Canonicalizer.canonicalize(source, df)
       val outDir = zone("qlm_ready", source, ts(), batchId)
-      canonical.write.mode("overwrite").parquet(outDir.toString)
+      // one part file per batch, like the reference's one parquet per
+      // batch, so final_sha256 hashes the whole artifact
+      canonical.coalesce(1).write.mode("overwrite").parquet(outDir.toString)
       val partFile = graft.util.Fs.list(outDir)
         .find(_.getFileName.toString.endsWith(".parquet")).map(_.toString).getOrElse(outDir.toString)
       val sha = Provenance.sha256File(partFile)
@@ -248,22 +257,17 @@ final class Pipeline(
         Map("version_path" -> outDir.toString))
       batchId -> outDir.toString
     }
+  }
 
   // ------------------------------------------------------------------
 
-  private def pendingBatches(status: String): Seq[(String, String, String)] =
+  /** (batch_id, source_name, raw_file_path, curated_path) of the
+    * batches in `status`, FIFO.
+    */
+  private def pendingBatches(status: String): Seq[(String, String, String, String)] =
     provenance.pending(status)
-      .select("batch_id", "source_name", "raw_file_path")
-      .collect().toSeq.map(r => (r.getString(0), r.getString(1), r.getString(2)))
-
-  private def latestCuratedPath(batchId: String): String = {
-    val r = provenance.batches.filter(col("batch_id") === batchId)
-      .select("curated_path", "raw_file_path", "source_name").collect()(0)
-    Option(r.getString(0)).getOrElse {
-      val raw = Paths.get(r.getString(1))
-      zone("curated", r.getString(2), raw.getFileName.toString).toString
-    }
-  }
+      .select("batch_id", "source_name", "raw_file_path", "curated_path")
+      .collect().toSeq.map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3)))
 
   /** Full run over a source directory tree. */
   def runAll(sourceBase: String): Unit = {

@@ -27,10 +27,12 @@ trait ControlBackend {
 }
 
 /** Append-only parquet event log per control table under
-  * `<root>/_control/`. Every append is a tiny parquet file, so the
-  * backend self-compacts: once a table exceeds `autoCompactAt` part
-  * files, it is rewritten as a single consolidated file set (write to
-  * temp + dir swap, so readers see either the old or the new layout).
+  * `<root>/_control/`. Every append writes one small parquet file —
+  * one per table per pipeline stage call under
+  * [[Provenance.batched]], one per event outside it — so the backend
+  * self-compacts: once a table exceeds `autoCompactAt` part files, it
+  * is rewritten as a single consolidated file set (write to temp + dir
+  * swap, so readers see either the old or the new layout).
   * Control-plane appends are driver-side and serialized per pipeline
   * (mirroring the reference's single-threaded UPDATE flow), which makes
   * the count-then-compact check race-free in practice.

@@ -4,9 +4,13 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.security.MessageDigest
 import java.time.format.DateTimeFormatter
 import java.time.{Instant, ZoneOffset}
+import java.util.concurrent.atomic.AtomicLong
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Provenance + batch state machine (reference: etl/provenance_recorder.py,
   * etl/audit.py, db/init.sql:3-36,90-98).
@@ -16,8 +20,17 @@ import org.apache.spark.sql.functions._
   * [[ControlBackend]] (parquet by default, JDBC-shaped contract), with
   * "current batch state" derived by a last-event-wins aggregation — the
   * idempotent Spark analogue of the reference's single-threaded
-  * UPDATEs. Appends are tiny driver-side writes; reads are normal
-  * DataFrame scans, so lineage queries distribute like any other.
+  * UPDATEs. Reads are normal DataFrame scans, so lineage queries
+  * distribute like any other.
+  *
+  * Writes: outside a [[batched]] scope every event is its own
+  * driver-side `append`. Inside one, the calling thread's events are
+  * buffered and written when the scope exits, as ONE local frame (one
+  * file on the parquet backend) per touched table — so a pipeline
+  * stage pays one append per control table however many batches it
+  * moves. Each buffered row keeps the `event_time` taken when it was
+  * recorded, so last-event-wins is unchanged; reads inside a scope do
+  * not see its buffered rows.
   */
 final class Provenance(spark: SparkSession, backend: ControlBackend) {
   import Provenance._
@@ -26,60 +39,103 @@ final class Provenance(spark: SparkSession, backend: ControlBackend) {
   def this(spark: SparkSession, root: String) =
     this(spark, new ParquetControlBackend(spark, root))
 
-  private def append(name: String, df: DataFrame): Unit = backend.append(name, df)
+  /** The calling thread's open scope; null outside any. */
+  private val scope = new ThreadLocal[Scope]
+  private val lastMillis = new AtomicLong(0L)
 
-  private def readOrEmpty(name: String, empty: => DataFrame): DataFrame =
-    backend.read(name)(empty)
+  private def write(table: String, rows: Seq[Row]): Unit =
+    backend.append(table, spark.createDataFrame(rows.asJava, tableSchemas(table)).coalesce(1))
 
-  def nowTs: String =
-    DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss.SSS").withZone(ZoneOffset.UTC).format(Instant.now())
+  private def record(table: String, row: Row): Unit = scope.get match {
+    case b: Buffer => b.rows.getOrElseUpdate(table, mutable.ArrayBuffer.empty) += row
+    case _ => write(table, Seq(row))
+  }
+
+  private def readOrEmpty(name: String): DataFrame =
+    backend.read(name)(spark.createDataFrame(java.util.List.of[Row](), tableSchemas(name)))
+
+  /** Buffer every event this thread records while `body` runs, then
+    * append each touched control table once — also when `body` throws,
+    * so the events of the batches finished before the failure persist
+    * (a failing write is then attached to the exception as
+    * suppressed). Nested scopes join the outer one; other threads keep
+    * appending per event.
+    */
+  def batched[A](body: => A): A =
+    if (scope.get != null) body
+    else {
+      val buf = new Buffer
+      scope.set(buf)
+      var failed: Throwable = null
+      try body
+      catch { case t: Throwable => failed = t; throw t }
+      finally {
+        scope.remove()
+        try buf.rows.foreach { case (table, rows) => write(table, rows.toSeq) }
+        catch { case t: Throwable if failed != null => failed.addSuppressed(t) }
+      }
+    }
+
+  /** Run `body` with every event appended on its own, [[batched]]
+    * scopes inside included: the per-event control plane that specs
+    * compare the batched one against.
+    */
+  private[graft] def perEvent[A](body: => A): A = {
+    val outer = scope.get
+    scope.set(PerEvent)
+    try body finally scope.set(outer)
+  }
+
+  /** Event time, strictly increasing per instance: a buffered scope
+    * records events faster than one per millisecond, and a tie would
+    * make FIFO order and last-event-wins ambiguous.
+    */
+  def nowTs: String = {
+    val now = System.currentTimeMillis()
+    TsFormat.format(Instant.ofEpochMilli(lastMillis.updateAndGet(last => math.max(last + 1, now))))
+  }
+
+  private def batchEvent(batchId: String, status: String, source: String = null,
+      filePath: String = null, rawSha: String = null, errorDetails: String = null,
+      totalRows: Long = 0L, curatedSha: String = null, curatedPath: String = null,
+      finalSha: String = null, versionPath: String = null): Unit =
+    record("provenance_batch_events", Row.fromTuple(BatchEvent(batchId, source, filePath,
+      rawSha, status, nowTs, errorDetails, totalRows, curatedSha, curatedPath, finalSha, versionPath)))
 
   /** create_batch, status=INGESTED (provenance_recorder.py:10-17);
     * duplicate batch_ids are collapsed by the last-event-wins view,
     * mirroring ON CONFLICT DO NOTHING idempotence.
     */
   def createBatch(batchId: String, source: String, filePath: String, rawSha: String): Unit =
-    append("provenance_batch_events",
-      Seq((batchId, source, filePath, rawSha, "INGESTED", nowTs, null: String, 0L, null: String, null: String, null: String, null: String))
-        .toDF(batchCols: _*))
+    batchEvent(batchId, "INGESTED", source = source, filePath = filePath, rawSha = rawSha)
 
   def updateStatus(batchId: String, status: String, errorDetails: String = null): Unit =
-    append("provenance_batch_events",
-      Seq((batchId, null: String, null: String, null: String, status, nowTs, errorDetails, 0L, null: String, null: String, null: String, null: String))
-        .toDF(batchCols: _*))
+    batchEvent(batchId, status, errorDetails = errorDetails)
 
   def updateCuratedHash(batchId: String, sha: String, curatedPath: String): Unit =
-    append("provenance_batch_events",
-      Seq((batchId, null: String, null: String, null: String, "SCRUBBED", nowTs, null: String, 0L, sha, curatedPath, null: String, null: String))
-        .toDF(batchCols: _*))
+    batchEvent(batchId, "SCRUBBED", curatedSha = sha, curatedPath = curatedPath)
 
   def updateFinalHash(batchId: String, sha: String, versionPath: String): Unit =
-    append("provenance_batch_events",
-      Seq((batchId, null: String, null: String, null: String, "COMPLETED", nowTs, null: String, 0L, null: String, null: String, sha, versionPath))
-        .toDF(batchCols: _*))
+    batchEvent(batchId, "COMPLETED", finalSha = sha, versionPath = versionPath)
 
   def setRowCount(batchId: String, status: String, n: Long): Unit =
-    append("provenance_batch_events",
-      Seq((batchId, null: String, null: String, null: String, status, nowTs, null: String, n, null: String, null: String, null: String, null: String))
-        .toDF(batchCols: _*))
+    batchEvent(batchId, status, totalRows = n)
 
-  def recordStep(batchId: String, stepName: String, details: Map[String, String]): Unit = {
-    val json = detailsJson(details)
-    append("provenance_steps", Seq((batchId, stepName, nowTs, json)).toDF("batch_id", "step_name", "step_time", "details_json"))
-  }
+  def recordStep(batchId: String, stepName: String, details: Map[String, String]): Unit =
+    record("provenance_steps", Row(batchId, stepName, nowTs, detailsJson(details)))
 
   def recordRule(batchId: String, ruleId: String, action: String): Unit =
-    append("provenance_rules_applied", Seq((batchId, ruleId, action, nowTs)).toDF("batch_id", "rule_id", "action", "created_at"))
+    record("provenance_rules_applied", Row(batchId, ruleId, action, nowTs))
 
   def writeAudit(actor: String, action: String, details: String): Unit =
-    append("audit_log", Seq((actor, action, details, nowTs)).toDF("actor", "action", "details", "created_at"))
+    record("audit_log", Row(actor, action, details, nowTs))
 
   /** Current batch state: per batch, last non-null value per field in
     * event order (the UPDATE-semantics view). row_number + first-value
     * aggregation keeps this a single shuffle by batch_id.
     */
   def batches: DataFrame = {
-    val ev = readOrEmpty("provenance_batch_events", spark.emptyDataset[BatchEvent].toDF())
+    val ev = readOrEmpty("provenance_batch_events")
     ev.groupBy($"batch_id").agg(
       max_by($"source_name", when($"source_name".isNotNull, $"event_time")).as("source_name"),
       max_by($"raw_file_path", when($"raw_file_path".isNotNull, $"event_time")).as("raw_file_path"),
@@ -94,14 +150,11 @@ final class Provenance(spark: SparkSession, backend: ControlBackend) {
       max_by($"version_path", when($"version_path".isNotNull, $"event_time")).as("version_path"))
   }
 
-  def steps: DataFrame =
-    readOrEmpty("provenance_steps", Seq.empty[(String, String, String, String)].toDF("batch_id", "step_name", "step_time", "details_json"))
+  def steps: DataFrame = readOrEmpty("provenance_steps")
 
-  def rulesApplied: DataFrame =
-    readOrEmpty("provenance_rules_applied", Seq.empty[(String, String, String, String)].toDF("batch_id", "rule_id", "action", "created_at"))
+  def rulesApplied: DataFrame = readOrEmpty("provenance_rules_applied")
 
-  def auditLog: DataFrame =
-    readOrEmpty("audit_log", Seq.empty[(String, String, String, String)].toDF("actor", "action", "details", "created_at"))
+  def auditLog: DataFrame = readOrEmpty("audit_log")
 
   /** Pending-batch queue for a stage (S10): status filter + FIFO order. */
   def pending(status: String): DataFrame =
@@ -114,7 +167,7 @@ final class Provenance(spark: SparkSession, backend: ControlBackend) {
     * call (too heavy for a per-file check in a streaming watch).
     */
   def hasIngested(rawFilePath: String, rawSha256: String): Boolean = {
-    val ev = readOrEmpty("provenance_batch_events", spark.emptyDataset[BatchEvent].toDF())
+    val ev = readOrEmpty("provenance_batch_events")
     !ev.filter($"raw_file_path" === rawFilePath && $"raw_sha256" === rawSha256).isEmpty
   }
 
@@ -160,15 +213,31 @@ object Provenance {
       error_details: String, total_rows: Long, curated_sha256: String,
       curated_path: String, final_sha256: String, version_path: String)
 
-  val batchCols: Seq[String] = Seq(
-    "batch_id", "source_name", "raw_file_path", "raw_sha256", "status",
-    "event_time", "error_details", "total_rows", "curated_sha256",
-    "curated_path", "final_sha256", "version_path")
+  /** The control tables and their row schemas (db/init.sql:3-98
+    * table-per-concern layout).
+    */
+  val tableSchemas: Map[String, StructType] = {
+    def strings(cols: String*) = StructType(cols.map(StructField(_, StringType)))
+    Map(
+      "provenance_batch_events" -> Encoders.product[BatchEvent].schema,
+      "provenance_steps" -> strings("batch_id", "step_name", "step_time", "details_json"),
+      "provenance_rules_applied" -> strings("batch_id", "rule_id", "action", "created_at"),
+      "audit_log" -> strings("actor", "action", "details", "created_at"))
+  }
 
-  /** The control tables (db/init.sql:3-98 table-per-concern layout). */
-  val controlTables: Seq[String] = Seq(
-    "provenance_batch_events", "provenance_steps",
-    "provenance_rules_applied", "audit_log")
+  val controlTables: Seq[String] = tableSchemas.keys.toSeq
+
+  private val TsFormat =
+    DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss.SSS").withZone(ZoneOffset.UTC)
+
+  /** A thread's open [[Provenance.batched]] scope: buffered rows per
+    * table in first-touch order, or the per-event marker.
+    */
+  private sealed trait Scope
+  private final class Buffer extends Scope {
+    val rows = mutable.LinkedHashMap.empty[String, mutable.ArrayBuffer[Row]]
+  }
+  private case object PerEvent extends Scope
 
   /** F6: streaming SHA-256 of a local file (8 KiB chunks like
     * etl/ingest.py:18-25); used for the artifact hash chain.

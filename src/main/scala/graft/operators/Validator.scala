@@ -18,16 +18,18 @@ final case class ValidationResult(
   *
   * Reference behaviors preserved:
   *  - column-presence diff is driver-side over df.columns (validate.py:100-105);
-  *  - type probes run on the first `sampleRows` rows only, while the
-  *    row count stays exact (validate.py:111-120);
+  *  - CSV type probes run on the first `sampleRows` rows only, while
+  *    the row count stays exact (validate.py:111-120); JSONL checks
+  *    every row (validate.py:127-158);
   *  - at most `maxErrorSamples` error strings are retained (validate.py:123);
   *  - empty string counts as null for nullability checks (validate.py:115-116);
   *  - unknown declared types pass (validate.py:23-34).
   *
   * Scale: the probe frame is a limit(sampleRows) — Catalyst plans it as
-  * a LocalLimit that short-circuits the scan; the exact count is a
-  * separate count(*) over the (columnar, pushed-down) source, so a
-  * 100 TB file never materializes per-row error objects.
+  * a LocalLimit that short-circuits the scan — or, for JSONL, the whole
+  * frame, whose scan stops at the maxErrorSamples-th error; the exact
+  * count is a separate count(*) over the (columnar, pushed-down)
+  * source, so a 100 TB file never materializes per-row error objects.
   */
 object Validator {
 
@@ -125,14 +127,17 @@ object Validator {
     else filter(array(checks: _*), x => x.isNotNull)
   }
 
-  /** Validate a tabular batch frame against its metadata. */
-  def validate(df: DataFrame, spec: SourceSpec): ValidationResult = {
+  /** Validate a tabular batch frame against its metadata. The probes
+    * cover the first [[SampleRows]] rows (CSV, validate.py:111-120), or
+    * every row with `probeAll` (JSONL, validate.py:127-158).
+    */
+  def validate(df: DataFrame, spec: SourceSpec, probeAll: Boolean = false): ValidationResult = {
     val expected = spec.fields.map(_.name)
     val missing = expected.diff(df.columns.toSeq)
     val rowCount = df.count() // exact, full scan — columnar + pushdown
-    val sampled = df.limit(SampleRows)
-    val probe = sampled
-      .select(explode(errorArray(sampled, spec)).as("error"))
+    val probed = if (probeAll) df else df.limit(SampleRows)
+    val probe = probed
+      .select(explode(errorArray(probed, spec)).as("error"))
       .limit(MaxErrorSamples)
     val errors = probe.collect().map(_.getString(0)).toSeq
     ValidationResult(missing.isEmpty && errors.isEmpty, rowCount, missing, errors)

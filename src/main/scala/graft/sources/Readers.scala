@@ -61,15 +61,16 @@ object Readers {
 
   /** HL7 v2 scan (S6): messages are text blocks separated by blank
     * lines (reference: etl/validate.py:179-184 splits on "\n\n").
-    * `lineSep` gives one DataFrame row per message; trailing whitespace
-    * trimmed and empty chunks dropped like the reference's
-    * `[m.strip() for m in text.split("\n\n") if m.strip()]`.
+    * `lineSep` gives one DataFrame row per message; surrounding
+    * whitespace (newlines included, so a file's final newline never
+    * becomes part of a message) stripped and empty chunks dropped like
+    * the reference's `[m.strip() for m in text.split("\n\n") if m.strip()]`.
     */
   def hl7Messages(spark: SparkSession, path: String): DataFrame =
     spark.read
       .option("lineSep", "\n\n")
       .text(path)
-      .select(trim(col("value")).as("message"))
+      .select(regexp_replace(col("value"), "\\A\\s+|\\s+\\z", "").as("message"))
       .filter(length(col("message")) > 0)
 
   /** HL7 PID/OBX field extraction (S7) as pure column expressions over

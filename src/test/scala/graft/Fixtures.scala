@@ -2,6 +2,23 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 
+import org.apache.spark.sql.DataFrame
+
+import graft.operators.ControlBackend
+
+/** Counts the appends per control table that reach `inner`. */
+final class CountingControlBackend(inner: ControlBackend) extends ControlBackend {
+  private val counts = scala.collection.mutable.Map.empty[String, Int]
+  override def append(table: String, df: DataFrame): Unit = {
+    synchronized(counts(table) = counts.getOrElse(table, 0) + 1)
+    inner.append(table, df)
+  }
+  override def read(table: String)(empty: => DataFrame): DataFrame = inner.read(table)(empty)
+  override def compact(table: String): Unit = inner.compact(table)
+  /** Appends per table since the last call. */
+  def drain(): Map[String, Int] = synchronized { val m = counts.toMap; counts.clear(); m }
+}
+
 /** Clinical test fixtures matching FIXTURES.md (shapes of the
   * reference's synthetic generator, independently implemented).
   */

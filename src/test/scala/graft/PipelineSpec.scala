@@ -3,7 +3,12 @@ package graft
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.model.Seeds
+import graft.operators.{ParquetControlBackend, Scrubber}
+import graft.sources.Readers
 
 /** End-to-end pipeline smoke over generated clinical fixtures: statuses,
   * quarantine, hash chain, canonical artifacts (SURVEY.md §5.4).
@@ -113,5 +118,161 @@ class PipelineSpec extends SparkSpec {
     assert(curated.contains("this is { not json"))
     assert(!curated.contains("maria.williams@example.com"))
     assert(curated.contains("[REDACTED_NAME]"))
+  }
+
+  test("a JSONL file with an invalid line after the first 200 rows is quarantined") {
+    val base = Fixtures.tmpDir("srcjl")
+    val good = Fixtures.jsonlGood.linesIterator.next()
+    Fixtures.write(base.resolve("clinic_b/late_bad.jsonl"),
+      Seq.fill(300)(good).mkString("", "\n", "\n") + "this is { not json\n")
+    val lake = Fixtures.tmpDir("lakejl").toString
+    val p = new Pipeline(spark, lake)
+    p.ingest(base.toString)
+    assert(p.validatePending().map(_._2) == Seq(false))
+    assert(p.provenance.batches.select("status").collect().map(_.getString(0)).toSeq ==
+      Seq("FAILED_VALIDATION"))
+    assert(Files.exists(Paths.get(lake, "quarantine", "clinic_b", "late_bad.jsonl")))
+    assert(!Files.exists(Paths.get(lake, "raw", "clinic_b", "late_bad.jsonl")))
+  }
+
+  test("an HL7 file ending in a newline gives one canonical row per message") {
+    val third = Fixtures.hl7Good.split("\n\n")(0).replace("MSG1", "MSG9")
+    val text = Fixtures.hl7Good + "\n" + third + "\n"
+    val base = Fixtures.tmpDir("srchl7")
+    val file = Fixtures.write(base.resolve("hospital_c_hl7/three.hl7"), text)
+    val messages = Readers.hl7Messages(spark, file.toString).collect().map(_.getString(0))
+    assert(messages.length == 3 && messages.forall(m => m == m.trim && m.nonEmpty))
+    val p = new Pipeline(spark, Fixtures.tmpDir("lakehl7").toString)
+    p.runAll(base.toString)
+    val Seq((status, version)) = p.provenance.batches.select("status", "version_path").collect()
+      .map(r => (r.getString(0), r.getString(1))).toSeq
+    assert(status == "COMPLETED")
+    val canon = spark.read.parquet(version)
+    assert(canon.count() == 3)
+    assert(canon.filter(col("patient_id").isNull).isEmpty, "no all-null row")
+  }
+
+  test("a CSV read as several splits gives one qlm_ready part hashed as final_sha256") {
+    val rows = (1 to 600).map(i => s"P$i,Name $i,123-45-6789,1971-04-12,2025-02-01,Flu,note $i")
+    val base = Fixtures.tmpDir("srcsplit")
+    Fixtures.write(base.resolve("hospital_a/big.csv"),
+      (Fixtures.csvGood.linesIterator.next() +: rows).mkString("", "\n", "\n"))
+    val p = new Pipeline(spark, Fixtures.tmpDir("lakesplit").toString)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "4k")
+    val r = try {
+      p.runAll(base.toString)
+      val r = p.provenance.batches.collect()(0)
+      assert(Readers.csvInferHeader(spark, r.getAs[String]("curated_path")).rdd.getNumPartitions > 1,
+        "the curated file must be read as several splits")
+      r
+    } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    assert(r.getAs[String]("status") == "COMPLETED")
+    val parts = graft.util.Fs.list(Paths.get(r.getAs[String]("version_path")))
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+    assert(parts.size == 1)
+    assert(graft.operators.Provenance.sha256File(parts.head.toString) == r.getAs[String]("final_sha256"))
+    assert(spark.read.parquet(r.getAs[String]("version_path")).count() == 600)
+  }
+
+  private def countingPipeline(lake: String): (Pipeline, CountingControlBackend) = {
+    val be = new CountingControlBackend(new ParquetControlBackend(spark, lake))
+    (new Pipeline(spark, lake, controlBackend = Some(be)), be)
+  }
+
+  test("each stage call appends each control table at most once") {
+    val base = Fixtures.sourceTree(Fixtures.tmpDir("srcbatch"))
+    val (p, be) = countingPipeline(Fixtures.tmpDir("lakebatch").toString)
+    val stages = Seq[(String, () => Any)](
+      "ingest" -> (() => p.ingest(base.toString)),
+      "validate" -> (() => p.validatePending()),
+      "scrub" -> (() => p.scrubPending()),
+      "transform" -> (() => p.transformPending()))
+    val perStage = stages.map { case (name, run) => run(); name -> be.drain() }.toMap
+    perStage.foreach { case (name, counts) =>
+      assert(counts.values.forall(_ == 1), s"$name: $counts")
+    }
+    assert(perStage("ingest").keySet ==
+      Set("provenance_batch_events", "provenance_steps", "audit_log"))
+    assert(perStage("scrub").keySet ==
+      Set("provenance_batch_events", "provenance_steps", "provenance_rules_applied"))
+    assert(p.provenance.batches.filter(col("status") === "COMPLETED").count() == 3)
+  }
+
+  test("a batched run writes the same control rows as the per-event path") {
+    val base = Fixtures.sourceTree(Fixtures.tmpDir("srceq")).toString
+    def controlRows(perEvent: Boolean): Map[String, Seq[String]] = {
+      val lake = Fixtures.tmpDir("lakeeq").toString
+      val p = new Pipeline(spark, lake)
+      if (perEvent) p.provenance.perEvent(p.runAll(base)) else p.runAll(base)
+      // timestamps aside: event times, and the clock in batch ids and
+      // version directories; paths relative to the lake
+      def norm(df: DataFrame, timeCol: String): Seq[String] =
+        df.drop(timeCol).collect().toSeq.map(_.toSeq.map(v => s"$v"
+          .replace(lake, "<lake>").replaceAll("_\\d{14}", "_<ts>")
+          .replaceAll("\\d{8}T\\d{6}", "<ts>")).mkString("|")).sorted
+      val pr = p.provenance
+      Map("batches" -> norm(pr.batches, "ingest_time"), "steps" -> norm(pr.steps, "step_time"),
+        "rules" -> norm(pr.rulesApplied, "created_at"), "audit" -> norm(pr.auditLog, "created_at"))
+    }
+    val batched = controlRows(perEvent = false)
+    val perEvent = controlRows(perEvent = true)
+    assert(batched("batches").size == 6 && batched("steps").size == 18)
+    Seq("batches", "steps", "rules", "audit").foreach(t =>
+      assert(batched(t) == perEvent(t), s"$t differs"))
+  }
+
+  test("a stage that fails at batch k keeps the events of batches 1..k-1") {
+    val base = Fixtures.sourceTree(Fixtures.tmpDir("srcfail"))
+    val (p, be) = countingPipeline(Fixtures.tmpDir("lakefail").toString)
+    p.ingest(base.toString)
+    p.validatePending()
+    val queue = p.provenance.pending("VALIDATED").select("batch_id", "raw_file_path")
+      .collect().map(r => (r.getString(0), r.getString(1))).toSeq
+    assert(queue.size == 3)
+    Files.delete(Paths.get(queue(1)._2)) // batch 2's raw file vanishes
+    be.drain()
+    intercept[Exception](p.scrubPending())
+    assert(be.drain().values.forall(_ == 1))
+    val status = p.provenance.batches.select("batch_id", "status").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(queue.map(b => status(b._1)) == Seq("SCRUBBED", "VALIDATED", "VALIDATED"))
+    val scrubSteps = p.provenance.steps.filter(col("step_name") === "SCRUB_PHI")
+      .select("batch_id").collect().map(_.getString(0)).toSeq
+    assert(scrubSteps == Seq(queue(0)._1))
+    assert(p.provenance.batchRules(queue(0)._1).count() > 0)
+  }
+
+  test("scrub stats observed on the write equal a separate aggregation") {
+    val base = Fixtures.sourceTree(Fixtures.tmpDir("srcobs"))
+    val p = new Pipeline(spark, Fixtures.tmpDir("lakeobs").toString)
+    p.ingest(base.toString)
+    p.validatePending()
+    val scrubbed = p.scrubPending()
+    assert(scrubbed.size == 3)
+    val raw = p.provenance.batches.select("batch_id", "source_name", "raw_file_path").collect()
+      .map(r => r.getString(0) -> (r.getString(1), r.getString(2))).toMap
+    def aggStats(df: DataFrame): (Long, Long, Set[String]) = {
+      val r = df.agg(count(lit(1)), coalesce(sum(col("_redactions")), lit(0L)),
+        coalesce(array_distinct(flatten(collect_list(col("_fired_rules")))), array())).collect()(0)
+      (r.getLong(0), r.getLong(1), r.getSeq[String](2).toSet)
+    }
+    scrubbed.foreach { id =>
+      val (source, path) = raw(id)
+      val expected = source match {
+        case "hospital_a" => aggStats(Scrubber.scrubTabular(
+          Readers.csvInferHeader(spark, path), Seeds.hospitalA, Seeds.phiRulesV1))
+        case "clinic_b" => aggStats(Scrubber.scrubTabular(
+          Readers.jsonl(spark, Seeds.clinicB, path).drop("_corrupt_record"),
+          Seeds.clinicB, Seeds.phiRulesV1, byName = true))
+        case "hospital_c_hl7" =>
+          (Readers.hl7Messages(spark, path).count(), 0L, Set("PHI_HL7_POSITIONAL"))
+      }
+      val details = p.provenance.batchTimeline(id).filter(col("step_name") === "SCRUB_PHI")
+        .select(get_json_object(col("details_json"), "$.rows"),
+          get_json_object(col("details_json"), "$.replacements")).collect()(0)
+      val rules = p.provenance.batchRules(id).select("rule_id").collect().map(_.getString(0)).toSet
+      assert((details.getString(0).toLong, details.getString(1).toLong, rules) == expected, source)
+      assert(expected._1 > 0, source)
+    }
   }
 }

@@ -66,6 +66,49 @@ class ProvenanceSpec extends SparkSpec {
         .select(get_json_object(col("details_json"), "$.rows")).collect()(0).getString(0)
       assert(details == "7")
     }
+
+    test(s"[$label] a batched scope appends each table once, with the per-event rows") {
+      val be = new CountingControlBackend(mkBackend())
+      val p = new Provenance(spark, be)
+      p.batched {
+        p.createBatch("b1", "s", "/f1", "h1")
+        p.createBatch("b2", "s", "/f2", "h2")
+        p.batched(p.setRowCount("b1", "VALIDATED", 7L)) // joins the outer scope
+        p.recordStep("b1", "INGEST", Map("k" -> "v"))
+        p.recordStep("b1", "VALIDATION_PASSED", Map("rows" -> "7"))
+        p.recordRule("b1", "PHI_SSN", "applied")
+        p.writeAudit("tester", "RUN", "ok")
+        assert(be.drain().isEmpty, "nothing is written before the scope exits")
+      }
+      assert(be.drain() == Provenance.controlTables.map(_ -> 1).toMap)
+      val state = p.batches.orderBy("batch_id")
+        .select("batch_id", "status", "total_rows", "raw_sha256").collect().map(_.toSeq).toSeq
+      assert(state == Seq(Seq("b1", "VALIDATED", 7L, "h1"), Seq("b2", "INGESTED", 0L, "h2")))
+      assert(p.pending("INGESTED").select("batch_id").collect().map(_.getString(0)).toSeq == Seq("b2"))
+      assert(p.batchTimeline("b1").select("step_name").collect().map(_.getString(0)).toSeq ==
+        Seq("INGEST", "VALIDATION_PASSED"))
+      assert(p.batchRules("b1").count() == 1 && p.auditLog.count() == 1)
+    }
+  }
+
+  test("a batched scope writes one parquet file per table; other threads append at once") {
+    import java.nio.file.Paths
+    val lake = Fixtures.tmpDir("prov").toString
+    val be = new CountingControlBackend(new ParquetControlBackend(spark, lake))
+    val p = new Provenance(spark, be)
+    def files = graft.util.Fs.list(Paths.get(s"$lake/_control/provenance_batch_events"))
+      .count(_.toString.endsWith(".parquet"))
+    p.batched {
+      (1 to 5).foreach(i => p.createBatch(s"b$i", "s", s"/f$i", "h"))
+      val other = new Thread(() => p.createBatch("other", "s", "/o", "h"))
+      other.start()
+      other.join()
+      assert(be.drain() == Map("provenance_batch_events" -> 1))
+      assert(p.batches.select("batch_id").collect().map(_.getString(0)).toSeq == Seq("other"))
+    }
+    assert(be.drain() == Map("provenance_batch_events" -> 1))
+    assert(files == 2)
+    assert(p.batches.count() == 6)
   }
 
   test("parquet backend auto-compacts past the file threshold, data intact") {
