@@ -19,11 +19,14 @@ import graft.sources.Readers
   * driver-side and idempotent; all record-level work is DataFrame
   * plans, so each batch scales with executors. Each stage call runs in
   * one [[operators.Provenance.batched]] scope, so it appends each
-  * control table once for all the batches it moves. Batches are
-  * per-file to mirror the reference's unit of work
-  * (etl/ingest.py:71-77); at
-  * 100 TB the same stages run unchanged with globs instead of single
-  * files since every operator is a plain DataFrame transform.
+  * control table once for all the batches it moves, and reads its
+  * queue from driver-local control rows without a Spark job. Batches
+  * are per-file to mirror the reference's unit of work
+  * (etl/ingest.py:71-77), and so are the stages: each runs its Spark
+  * jobs once per file, so stage jobs grow linearly with the file
+  * count. The operators are plain DataFrame transforms that would take
+  * a set of files as well; one scan per source per stage is not built
+  * yet.
   *
   * Deliberate behavioral fix vs the reference: TRANSFORM reads the
   * *curated* (scrubbed) file, not the raw one — the reference
@@ -264,10 +267,9 @@ final class Pipeline(
   /** (batch_id, source_name, raw_file_path, curated_path) of the
     * batches in `status`, FIFO.
     */
-  private def pendingBatches(status: String): Seq[(String, String, String, String)] =
-    provenance.pending(status)
-      .select("batch_id", "source_name", "raw_file_path", "curated_path")
-      .collect().toSeq.map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3)))
+  private[graft] def pendingBatches(status: String): Seq[(String, String, String, String)] =
+    provenance.pending(status).map(r => (r.getAs[String]("batch_id"), r.getAs[String]("source_name"),
+      r.getAs[String]("raw_file_path"), r.getAs[String]("curated_path")))
 
   /** Full run over a source directory tree. */
   def runAll(sourceBase: String): Unit = {

@@ -1,25 +1,31 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 import scala.collection.concurrent.TrieMap
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
 /** Storage seam for the control plane. The reference keeps all batch /
   * step / rule / audit state in Postgres behind a tiny DB module
   * (reference: etl/db.py:12-63; tables in db/init.sql:3-98); the engine
   * only ever needs two verbs per control table — INSERT rows and
-  * SELECT * — so that pair is the whole contract. `Provenance` derives
-  * every state view relationally on top of `read`, which keeps the
-  * backend swappable: parquet for a lake-native control plane, JDBC
-  * (append = batched INSERT, read = SELECT *) where an RDBMS is the
-  * system of record like the reference's Postgres.
+  * SELECT * — so that pair is the whole contract. Rows are positional
+  * in the table's [[Provenance.tableSchemas]] order, and a control
+  * table is a few KB to MB of metadata, so both verbs move driver-local
+  * rows: `Provenance` folds every state view in plain Scala over
+  * `rows`, and no read launches a Spark job once the rows are loaded.
+  * The backend stays swappable: parquet for a lake-native control
+  * plane, JDBC (append = batched INSERT, rows = SELECT) where an RDBMS
+  * is the system of record like the reference's Postgres.
   */
 trait ControlBackend {
-  def append(table: String, df: DataFrame): Unit
-  def read(table: String)(empty: => DataFrame): DataFrame
+  def append(table: String, rows: Seq[Row]): Unit
+  def rows(table: String): Seq[Row]
   /** Storage-maintenance hook; no-op for stores that self-compact
     * (an RDBMS needs nothing here).
     */
@@ -33,17 +39,52 @@ trait ControlBackend {
   * self-compacts: once a table exceeds `autoCompactAt` part files, it
   * is rewritten as a single consolidated file set (write to temp + dir
   * swap, so readers see either the old or the new layout).
-  * Control-plane appends are driver-side and serialized per pipeline
-  * (mirroring the reference's single-threaded UPDATE flow), which makes
-  * the count-then-compact check race-free in practice.
+  *
+  * Reads are served from a driver-side cache of rows keyed by part-file
+  * name: part files are immutable, this backend's own appends and
+  * compactions record their rows directly, and a read lists the table
+  * dir and loads only the files it has not seen (after a restart,
+  * another writer's append, or another writer's compaction) with one
+  * Spark read. All of it runs under one lock, which also serializes
+  * the count-then-compact check.
   */
 final class ParquetControlBackend(spark: SparkSession, root: String,
     autoCompactAt: Int = 64) extends ControlBackend {
 
+  /** Cached rows per table, by part-file name. Guarded by `this`. */
+  private val cache = mutable.Map.empty[String, mutable.LinkedHashMap[String, Seq[Row]]]
+
   private def dir(table: String) = s"$root/_control/$table"
 
-  private def partFileCount(table: String): Int =
-    graft.util.Fs.list(Paths.get(dir(table))).count(_.toString.endsWith(".parquet"))
+  /** Part-file names of `table`, in name order. */
+  private def partFiles(table: String): Seq[String] =
+    graft.util.Fs.list(Paths.get(dir(table))).map(_.getFileName.toString)
+      .filter(f => f.endsWith(".parquet") && !f.startsWith(".") && !f.startsWith("_")).sorted
+
+  /** The cached files of `table` that are still listed (a compaction
+    * elsewhere removes the ones it folded).
+    */
+  private def known(table: String, listed: Seq[String]): mutable.LinkedHashMap[String, Seq[Row]] = {
+    val files = cache.getOrElseUpdate(table, mutable.LinkedHashMap.empty)
+    files.filterInPlace((f, _) => listed.contains(f))
+  }
+
+  /** Record `rows` as the content of the one file this backend just
+    * wrote. When more than one file is new, another writer's files
+    * arrived too and none is recorded: the next read loads them all.
+    */
+  private def claim(table: String, rows: Seq[Row]): Seq[String] = {
+    val listed = partFiles(table)
+    val files = known(table, listed)
+    listed.filterNot(files.contains) match {
+      case Seq(own) => files(own) = rows
+      case _ =>
+    }
+    listed
+  }
+
+  private def frame(table: String, rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(rows.asJava, Provenance.tableSchemas(table)).coalesce(1)
 
   /** Repair a compact that crashed mid-swap: the table dir is missing
     * but the complete previous generation sits in `_old` — move it
@@ -58,38 +99,61 @@ final class ParquetControlBackend(spark: SparkSession, root: String,
     if (!Files.exists(p) && Files.exists(old)) Files.move(old, p)
   }
 
-  override def append(table: String, df: DataFrame): Unit = {
+  override def append(table: String, rows: Seq[Row]): Unit = synchronized {
     recover(table)
-    df.write.mode(SaveMode.Append).parquet(dir(table))
-    if (autoCompactAt > 0 && partFileCount(table) > autoCompactAt) compact(table)
+    frame(table, rows).write.mode(SaveMode.Append).parquet(dir(table))
+    if (autoCompactAt > 0 && claim(table, rows).size > autoCompactAt) compact(table)
   }
 
-  override def read(table: String)(empty: => DataFrame): DataFrame = {
-    recover(table)
-    if (Files.exists(Paths.get(dir(table)))) spark.read.parquet(dir(table)) else empty
+  override def rows(table: String): Seq[Row] = synchronized {
+    refresh(table)
+    cache(table).values.flatten.toSeq
   }
 
-  override def compact(table: String): Unit = {
+  /** Bring the cached files of `table` in line with its listing: drop
+    * the vanished, load the unseen.
+    */
+  private def refresh(table: String, relist: Boolean = true): Unit = {
     recover(table)
+    val listed = partFiles(table)
+    val files = known(table, listed)
+    val unseen = listed.filterNot(files.contains)
+    if (unseen.nonEmpty)
+      try files ++= load(table, unseen)
+      catch {
+        // a listed file can vanish in another writer's compaction swap;
+        // its rows then sit in the compacted file: list once more
+        case _: Exception if relist && unseen.exists(f => !Files.exists(Paths.get(dir(table), f))) =>
+          refresh(table, relist = false)
+      }
+  }
+
+  /** Rows of each of `files`, read in one Spark job. */
+  private def load(table: String, files: Seq[String]): Seq[(String, Seq[Row])] = {
+    val schema = Provenance.tableSchemas(table)
+    val byFile = spark.read.schema(schema).parquet(files.map(f => s"${dir(table)}/$f"): _*)
+      .select(schema.fieldNames.map(col).toIndexedSeq :+ col("_metadata.file_name"): _*)
+      .collect().groupBy(_.getString(schema.length))
+    files.map(f => f -> byFile.getOrElse(f, Array.empty[Row]).toSeq
+      .map(r => new GenericRowWithSchema(r.toSeq.init.toArray, schema): Row))
+  }
+
+  override def compact(table: String): Unit = synchronized {
+    val all = rows(table)
     val p = Paths.get(dir(table))
     if (Files.exists(p)) {
       val old = Paths.get(dir(table) + "_old")
       // stale generations (only possible AFTER a successful swap, so
       // the main dir is the newest data) would break the moves below
       graft.util.Fs.deleteRecursively(old)
-      val df = spark.read.parquet(dir(table)).coalesce(1)
       val tmp = dir(table) + "_compact_tmp"
       graft.util.Fs.deleteRecursively(Paths.get(tmp))
-      df.write.mode(SaveMode.Overwrite).parquet(tmp)
+      frame(table, all).write.mode(SaveMode.Overwrite).parquet(tmp)
       Files.move(p, old)
       Files.move(Paths.get(tmp), p)
       graft.util.Fs.deleteRecursively(old) // best-effort cleanup
-      // Known small race: a DataFrame PLANNED before this swap holds
-      // the old part-file paths and will fail fast (FileNotFound) if
-      // collected afterwards — retention couldn't help, since the
-      // rename invalidates the planned paths either way. Control-plane
-      // reads are tiny and re-plan on retry; data is never lost (the
-      // swap is repair-safe via recover()).
+      cache.remove(table)
+      claim(table, all)
     }
   }
 }
@@ -98,21 +162,22 @@ final class ParquetControlBackend(spark: SparkSession, root: String,
   * (etl/db.py:12-63 over Postgres), runnable here against embedded
   * Derby (which ships with Spark). Appends are driver-side batched
   * INSERTs exactly like the reference's single-threaded psycopg2 flow;
-  * reads come back through Spark's JDBC source so every lineage query
-  * is still a distributed DataFrame plan. Tables are created on demand
-  * from the DataFrame schema with quoted (case-preserving) identifiers
-  * so read-back column names match the engine's expectations.
-  */
-/** @param statementListener invoked with every SQL statement this
+  * reads are one plain `SELECT` of the table's columns over the same
+  * connection, so lineage and stage queues read the system of record
+  * directly, with no Spark job. Tables are created on demand from the
+  * control table's schema with quoted (case-preserving) identifiers so
+  * read-back column names match the engine's expectations.
+  *
+  * @param statementListener invoked with every SQL statement this
   *   backend hands to JDBC, in emission order — the seam
   *   ProvenanceSpec's golden-file test records through, so an
   *   accidental dialect drift shows as a readable statement diff
   *   rather than a property failure. Default: no-op.
   */
-final class JdbcControlBackend(spark: SparkSession, url: String,
+final class JdbcControlBackend(url: String,
     statementListener: String => Unit = _ => ()) extends ControlBackend {
-  import java.sql.{Connection, DriverManager, SQLException, Types}
-  import org.apache.spark.sql.types.{IntegerType, LongType}
+  import java.sql.{Connection, DriverManager, ResultSet, SQLException, Types}
+  import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
   JdbcControlBackend.init()
 
   /** Resolved from the URL, so pointing the same code at
@@ -131,7 +196,7 @@ final class JdbcControlBackend(spark: SparkSession, url: String,
   private def jdbcType(f: org.apache.spark.sql.types.StructField): Int = f.dataType match {
     case LongType => Types.BIGINT
     case IntegerType => Types.INTEGER
-    case org.apache.spark.sql.types.DoubleType => Types.DOUBLE
+    case DoubleType => Types.DOUBLE
     case _ if JdbcControlBackend.unboundedTextFields.contains(f.name) => Types.CLOB
     case _ => Types.VARCHAR
   }
@@ -153,41 +218,63 @@ final class JdbcControlBackend(spark: SparkSession, url: String,
 
   /** CONTRACT: control-plane rows ONLY — batch/step/rule/audit records,
     * O(1..100) rows per call, never a data-plane frame. The append
-    * necessarily funnels through the driver (same as the reference's
-    * psycopg2 INSERT flow), so a data-plane misuse would both OOM the
-    * driver and hammer the RDBMS; nothing in the type signature stops
-    * that, so a hard row cap does: the frame is fetched with
-    * limit(cap+1) — the guard itself can't OOM — and over-cap appends
-    * abort with a clear error instead of degrading.
+    * funnels through the driver (same as the reference's psycopg2
+    * INSERT flow), so a data-plane misuse would both OOM the driver and
+    * hammer the RDBMS; a hard row cap makes over-cap appends abort with
+    * a clear error, before any statement runs, instead of degrading.
     */
-  override def append(table: String, df: DataFrame): Unit = withConn { c =>
-    val rows = df.limit(JdbcControlBackend.MaxControlRows + 1).collect()
-    require(rows.length <= JdbcControlBackend.MaxControlRows,
+  override def append(table: String, rows: Seq[Row]): Unit = {
+    require(rows.size <= JdbcControlBackend.MaxControlRows,
       s"JdbcControlBackend.append('$table') got more than " +
         s"${JdbcControlBackend.MaxControlRows} rows — this backend is for " +
         "control-plane records only; write data-plane frames to the lake " +
         "(parquet/VersionedTable), not the RDBMS")
-    ensureTable(c, table, df.schema)
-    val ins = JdbcControlBackend.insertSql(table, df.schema)
-    statementListener(ins)
-    val ps = c.prepareStatement(ins)
-    try {
-      rows.foreach { row =>
-        df.schema.indices.foreach { i =>
-          val v = row.get(i)
-          if (v == null) ps.setNull(i + 1, jdbcType(df.schema(i)))
-          else ps.setObject(i + 1, v)
+    val schema = Provenance.tableSchemas(table)
+    withConn { c =>
+      ensureTable(c, table, schema)
+      val ins = JdbcControlBackend.insertSql(table, schema)
+      statementListener(ins)
+      val ps = c.prepareStatement(ins)
+      try {
+        rows.foreach { row =>
+          schema.indices.foreach { i =>
+            val v = row.get(i)
+            if (v == null) ps.setNull(i + 1, jdbcType(schema(i)))
+            else ps.setObject(i + 1, v)
+          }
+          ps.addBatch()
         }
-        ps.addBatch()
-      }
-      ps.executeBatch()
-    } finally ps.close()
+        ps.executeBatch()
+      } finally ps.close()
+    }
   }
 
-  override def read(table: String)(empty: => DataFrame): DataFrame =
-    if (!withConn(tableExists(_, table))) empty
-    else spark.read.format("jdbc")
-      .option("url", url).option("dbtable", s""""$table"""").load()
+  override def rows(table: String): Seq[Row] = withConn { c =>
+    if (!tableExists(c, table)) Nil
+    else {
+      val schema = Provenance.tableSchemas(table)
+      val sql = JdbcControlBackend.selectSql(table, schema)
+      statementListener(sql)
+      val st = c.createStatement()
+      try {
+        val rs = st.executeQuery(sql)
+        val out = Vector.newBuilder[Row]
+        while (rs.next())
+          out += new GenericRowWithSchema(schema.indices.map(i => column(rs, i + 1, schema(i))).toArray, schema)
+        out.result()
+      } finally st.close()
+    }
+  }
+
+  private def column(rs: ResultSet, i: Int, f: org.apache.spark.sql.types.StructField): Any = {
+    val v = f.dataType match {
+      case LongType => rs.getLong(i)
+      case IntegerType => rs.getInt(i)
+      case DoubleType => rs.getDouble(i)
+      case _ => rs.getString(i)
+    }
+    if (rs.wasNull) null else v
+  }
 }
 
 object JdbcControlBackend {
@@ -200,10 +287,10 @@ object JdbcControlBackend {
 
   /** The dialect seam — the ONLY place backend SQL may vary. Every
     * statement this backend emits (enumerated by [[createTableSql]] /
-    * [[insertSql]], pinned by ProvenanceSpec's portability test) is
-    * the ANSI intersection of Derby and Postgres: quoted
-    * case-preserving identifiers, `CREATE TABLE`, positional-`?`
-    * `INSERT` — no upserts (the control plane is append-only, state
+    * [[insertSql]] / [[selectSql]], pinned by ProvenanceSpec's
+    * portability test) is the ANSI intersection of Derby and Postgres:
+    * quoted case-preserving identifiers, `CREATE TABLE`, positional-`?`
+    * `INSERT`, a plain column-list `SELECT` — no upserts (the control plane is append-only, state
     * transitions are new rows), no sequences/SERIAL, no vendor DDL.
     * What genuinely differs between the engines is captured here:
     * the unbounded-text type name (Derby CLOB / Postgres TEXT — Derby
@@ -223,8 +310,8 @@ object JdbcControlBackend {
     * dialect's unbounded type so a long value can't make this backend
     * reject an append the parquet and in-memory backends accept (Derby
     * SQLState 22001 truncation). Key/short fields stay VARCHAR — Derby
-    * forbids comparisons on CLOB, and Spark pushes equality filters
-    * (batch_id etc.) into the query.
+    * forbids comparisons on CLOB, so a keyed lookup (batch_id etc.)
+    * needs them comparable.
     */
   val unboundedTextFields = Set("details_json", "error_details", "details")
 
@@ -245,6 +332,12 @@ object JdbcControlBackend {
     s"""CREATE TABLE "$table" ($cols)"""
   }
 
+  /** The one query the backend can emit (dialect-invariant): every
+    * column of the table, quoted, in schema order.
+    */
+  def selectSql(table: String, schema: StructType): String =
+    schema.map(f => s""""${f.name}"""").mkString("SELECT ", ", ", s""" FROM "$table"""")
+
   /** The complete DML the backend can emit (dialect-invariant). */
   def insertSql(table: String, schema: StructType): String = {
     val cols = schema.map(f => s""""${f.name}"""").mkString(", ")
@@ -262,26 +355,17 @@ object JdbcControlBackend {
 }
 
 /** RDBMS-contract stand-in: rows live in driver memory, appends are
-  * transactional row inserts, reads rebuild a DataFrame from the stored
-  * rows — behaviorally what a JDBC backend returns from SELECT *. Kept
-  * alongside [[JdbcControlBackend]] as the dependency-free contract
-  * reference.
+  * transactional row inserts, reads return the stored rows —
+  * behaviorally what a JDBC backend returns from SELECT. Kept alongside
+  * [[JdbcControlBackend]] as the dependency-free contract reference.
   */
-final class InMemoryControlBackend(spark: SparkSession) extends ControlBackend {
+final class InMemoryControlBackend extends ControlBackend {
 
-  private val tables = TrieMap.empty[String, (StructType, Vector[Row])]
+  private val tables = TrieMap.empty[String, Vector[Row]]
 
-  override def append(table: String, df: DataFrame): Unit = synchronized {
-    val rows = df.collect().toVector
-    tables.get(table) match {
-      case Some((schema, existing)) => tables.update(table, (schema, existing ++ rows))
-      case None => tables.update(table, (df.schema, rows))
-    }
+  override def append(table: String, rows: Seq[Row]): Unit = synchronized {
+    tables.update(table, tables.getOrElse(table, Vector.empty) ++ rows)
   }
 
-  override def read(table: String)(empty: => DataFrame): DataFrame =
-    tables.get(table) match {
-      case Some((schema, rows)) => spark.createDataFrame(rows.asJava, schema)
-      case None => empty
-    }
+  override def rows(table: String): Seq[Row] = tables.getOrElse(table, Vector.empty)
 }

@@ -9,7 +9,8 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Provenance + batch state machine (reference: etl/provenance_recorder.py,
@@ -18,23 +19,32 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * The reference keeps all control-flow state in Postgres; here the
   * control plane is an append-only event log per table behind a
   * [[ControlBackend]] (parquet by default, JDBC-shaped contract), with
-  * "current batch state" derived by a last-event-wins aggregation — the
-  * idempotent Spark analogue of the reference's single-threaded
-  * UPDATEs. Reads are normal DataFrame scans, so lineage queries
-  * distribute like any other.
+  * "current batch state" derived by a last-event-wins fold — the
+  * idempotent analogue of the reference's single-threaded UPDATEs.
+  * Reads are driver-local: the backend hands over the table's rows
+  * (the parquet backend from a cache it tops up only with part files it
+  * has not seen), and the batch fold, the stage queues and the lineage
+  * queries are plain Scala over them, so none launches a Spark job. The
+  * DataFrame accessors ([[batches]], [[steps]], …) wrap the same rows
+  * in a local relation for callers that join them with data.
+  *
+  * Scale bound: the driver holds every control event row, and each
+  * state read folds all batch events. That is cheap for the thousands
+  * of batches a lake of per-file batches has; past about 10^6 batches
+  * the [[JdbcControlBackend]] — the reference's own architecture — is
+  * the answer.
   *
   * Writes: outside a [[batched]] scope every event is its own
   * driver-side `append`. Inside one, the calling thread's events are
-  * buffered and written when the scope exits, as ONE local frame (one
-  * file on the parquet backend) per touched table — so a pipeline
-  * stage pays one append per control table however many batches it
-  * moves. Each buffered row keeps the `event_time` taken when it was
+  * buffered and written when the scope exits, as ONE append (one file
+  * on the parquet backend) per touched table — so a pipeline stage
+  * pays one append per control table however many batches it moves.
+  * Each buffered row keeps the `event_time` taken when it was
   * recorded, so last-event-wins is unchanged; reads inside a scope do
   * not see its buffered rows.
   */
 final class Provenance(spark: SparkSession, backend: ControlBackend) {
   import Provenance._
-  import spark.implicits._
 
   def this(spark: SparkSession, root: String) =
     this(spark, new ParquetControlBackend(spark, root))
@@ -43,16 +53,16 @@ final class Provenance(spark: SparkSession, backend: ControlBackend) {
   private val scope = new ThreadLocal[Scope]
   private val lastMillis = new AtomicLong(0L)
 
-  private def write(table: String, rows: Seq[Row]): Unit =
-    backend.append(table, spark.createDataFrame(rows.asJava, tableSchemas(table)).coalesce(1))
-
-  private def record(table: String, row: Row): Unit = scope.get match {
-    case b: Buffer => b.rows.getOrElseUpdate(table, mutable.ArrayBuffer.empty) += row
-    case _ => write(table, Seq(row))
+  private def record(table: String, values: Any*): Unit = {
+    val row = new GenericRowWithSchema(values.toArray, tableSchemas(table))
+    scope.get match {
+      case b: Buffer => b.rows.getOrElseUpdate(table, mutable.ArrayBuffer.empty) += row
+      case _ => backend.append(table, Seq(row))
+    }
   }
 
-  private def readOrEmpty(name: String): DataFrame =
-    backend.read(name)(spark.createDataFrame(java.util.List.of[Row](), tableSchemas(name)))
+  private def frame(rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(rows.asJava, schema)
 
   /** Buffer every event this thread records while `body` runs, then
     * append each touched control table once — also when `body` throws,
@@ -71,7 +81,7 @@ final class Provenance(spark: SparkSession, backend: ControlBackend) {
       catch { case t: Throwable => failed = t; throw t }
       finally {
         scope.remove()
-        try buf.rows.foreach { case (table, rows) => write(table, rows.toSeq) }
+        try buf.rows.foreach { case (table, rows) => backend.append(table, rows.toSeq) }
         catch { case t: Throwable if failed != null => failed.addSuppressed(t) }
       }
     }
@@ -99,8 +109,8 @@ final class Provenance(spark: SparkSession, backend: ControlBackend) {
       filePath: String = null, rawSha: String = null, errorDetails: String = null,
       totalRows: Long = 0L, curatedSha: String = null, curatedPath: String = null,
       finalSha: String = null, versionPath: String = null): Unit =
-    record("provenance_batch_events", Row.fromTuple(BatchEvent(batchId, source, filePath,
-      rawSha, status, nowTs, errorDetails, totalRows, curatedSha, curatedPath, finalSha, versionPath)))
+    record("provenance_batch_events", batchId, source, filePath, rawSha, status, nowTs,
+      errorDetails, totalRows, curatedSha, curatedPath, finalSha, versionPath)
 
   /** create_batch, status=INGESTED (provenance_recorder.py:10-17);
     * duplicate batch_ids are collapsed by the last-event-wins view,
@@ -122,82 +132,78 @@ final class Provenance(spark: SparkSession, backend: ControlBackend) {
     batchEvent(batchId, status, totalRows = n)
 
   def recordStep(batchId: String, stepName: String, details: Map[String, String]): Unit =
-    record("provenance_steps", Row(batchId, stepName, nowTs, detailsJson(details)))
+    record("provenance_steps", batchId, stepName, nowTs, detailsJson(details))
 
   def recordRule(batchId: String, ruleId: String, action: String): Unit =
-    record("provenance_rules_applied", Row(batchId, ruleId, action, nowTs))
+    record("provenance_rules_applied", batchId, ruleId, action, nowTs)
 
   def writeAudit(actor: String, action: String, details: String): Unit =
-    record("audit_log", Row(actor, action, details, nowTs))
+    record("audit_log", actor, action, details, nowTs)
 
-  /** Current batch state: per batch, last non-null value per field in
-    * event order (the UPDATE-semantics view). row_number + first-value
-    * aggregation keeps this a single shuffle by batch_id.
+  /** Current batch state, one row per batch in [[BatchSchema]], in
+    * first-event order: per field the last non-null value in event-time
+    * order (on a tie, the later-stored event), `ingest_time` the first
+    * event time and `total_rows` the largest count (the
+    * UPDATE-semantics view).
     */
-  def batches: DataFrame = {
-    val ev = readOrEmpty("provenance_batch_events")
-    ev.groupBy($"batch_id").agg(
-      max_by($"source_name", when($"source_name".isNotNull, $"event_time")).as("source_name"),
-      max_by($"raw_file_path", when($"raw_file_path".isNotNull, $"event_time")).as("raw_file_path"),
-      max_by($"raw_sha256", when($"raw_sha256".isNotNull, $"event_time")).as("raw_sha256"),
-      max_by($"status", when($"status".isNotNull, $"event_time")).as("status"),
-      min($"event_time").as("ingest_time"),
-      max_by($"error_details", when($"error_details".isNotNull, $"event_time")).as("error_details"),
-      max($"total_rows").as("total_rows"),
-      max_by($"curated_sha256", when($"curated_sha256".isNotNull, $"event_time")).as("curated_sha256"),
-      max_by($"curated_path", when($"curated_path".isNotNull, $"event_time")).as("curated_path"),
-      max_by($"final_sha256", when($"final_sha256".isNotNull, $"event_time")).as("final_sha256"),
-      max_by($"version_path", when($"version_path".isNotNull, $"event_time")).as("version_path"))
+  def batchRows: Seq[Row] = {
+    val state = mutable.LinkedHashMap.empty[String, BatchFold]
+    backend.rows("provenance_batch_events").foreach(ev =>
+      state.getOrElseUpdate(ev.getString(0), new BatchFold).add(ev))
+    state.values.map(_.row).toSeq
   }
 
-  def steps: DataFrame = readOrEmpty("provenance_steps")
+  def batches: DataFrame = frame(batchRows, BatchSchema)
 
-  def rulesApplied: DataFrame = readOrEmpty("provenance_rules_applied")
+  def steps: DataFrame = table("provenance_steps")
 
-  def auditLog: DataFrame = readOrEmpty("audit_log")
+  def rulesApplied: DataFrame = table("provenance_rules_applied")
+
+  def auditLog: DataFrame = table("audit_log")
+
+  private def table(name: String): DataFrame = frame(backend.rows(name), tableSchemas(name))
+
+  private def str(r: Row, field: String): String = r.getAs[String](field)
+
+  private def newestFirst(rows: Seq[Row]): Seq[Row] =
+    rows.sortBy(str(_, "ingest_time"))(Ordering[String].reverse)
 
   /** Pending-batch queue for a stage (S10): status filter + FIFO order. */
-  def pending(status: String): DataFrame =
-    batches.filter($"status" === status).orderBy($"ingest_time")
+  def pending(status: String): Seq[Row] =
+    batchRows.filter(str(_, "status") == status).sortBy(str(_, "ingest_time"))
 
-  /** Cheap ingest-idempotence probe: has any event registered this raw
-    * path with this content hash? Scans the raw event log with a
-    * pushed-down filter — deliberately NOT the [[batches]] view, whose
-    * last-event-wins aggregation costs a groupBy over the whole log per
-    * call (too heavy for a per-file check in a streaming watch).
+  /** Ingest-idempotence probe: has any event registered this raw path
+    * with this content hash? A scan of the raw events, without the
+    * [[batchRows]] fold.
     */
-  def hasIngested(rawFilePath: String, rawSha256: String): Boolean = {
-    val ev = readOrEmpty("provenance_batch_events")
-    !ev.filter($"raw_file_path" === rawFilePath && $"raw_sha256" === rawSha256).isEmpty
-  }
+  def hasIngested(rawFilePath: String, rawSha256: String): Boolean =
+    backend.rows("provenance_batch_events").exists(r =>
+      str(r, "raw_file_path") == rawFilePath && str(r, "raw_sha256") == rawSha256)
 
   // ---- lineage queries (api/app.py:63-152) ----
 
-  def batchById(batchId: String): DataFrame = batches.filter($"batch_id" === batchId)
+  def batchById(batchId: String): Seq[Row] = batchRows.filter(str(_, "batch_id") == batchId)
 
-  def batchTimeline(batchId: String): DataFrame =
-    steps.filter($"batch_id" === batchId).orderBy($"step_time")
+  def batchTimeline(batchId: String): Seq[Row] =
+    backend.rows("provenance_steps").filter(str(_, "batch_id") == batchId).sortBy(str(_, "step_time"))
 
-  def batchRules(batchId: String): DataFrame =
-    rulesApplied.filter($"batch_id" === batchId).orderBy($"created_at")
+  def batchRules(batchId: String): Seq[Row] =
+    backend.rows("provenance_rules_applied").filter(str(_, "batch_id") == batchId)
+      .sortBy(str(_, "created_at"))
 
-  def latestBatches(source: Option[String], n: Int = 20): DataFrame =
-    source.fold(batches)(s => batches.filter($"source_name" === s))
-      .orderBy($"ingest_time".desc).limit(n)
+  def latestBatches(source: Option[String], n: Int = 20): Seq[Row] =
+    newestFirst(batchRows.filter(r => source.forall(_ == str(r, "source_name")))).take(n)
 
-  def search(status: Option[String], source: Option[String]): DataFrame = {
-    var df = batches
-    status.foreach(s => df = df.filter($"status" === s))
-    source.foreach(s => df = df.filter($"source_name" === s))
-    df.orderBy($"ingest_time".desc)
-  }
+  def search(status: Option[String], source: Option[String]): Seq[Row] =
+    newestFirst(batchRows.filter(r =>
+      status.forall(_ == str(r, "status")) && source.forall(_ == str(r, "source_name"))))
 
   /** Audit tail (O4, README.md:223-226): latest n audit entries. */
   def auditTail(n: Int = 50): DataFrame =
-    auditLog.orderBy($"created_at".desc).limit(n)
+    auditLog.orderBy(col("created_at").desc).limit(n)
 
   def statusRollup: DataFrame =
-    batches.groupBy($"source_name", $"status").count().orderBy($"source_name", $"status")
+    batches.groupBy("source_name", "status").count().orderBy("source_name", "status")
 
   /** Compact every control table (delegates to the backend's storage
     * maintenance; the parquet backend also self-compacts on append past
@@ -226,6 +232,39 @@ object Provenance {
   }
 
   val controlTables: Seq[String] = tableSchemas.keys.toSeq
+
+  /** Row schema of the folded batch state: the event columns, with the
+    * first event time as `ingest_time`.
+    */
+  val BatchSchema: StructType = StructType(tableSchemas("provenance_batch_events").map(f =>
+    if (f.name == "event_time") f.copy(name = "ingest_time") else f))
+
+  private val EventTime = BatchSchema.fieldIndex("ingest_time")
+  private val TotalRows = BatchSchema.fieldIndex("total_rows")
+  /** Columns folded last-non-null-wins: all but batch_id (the key),
+    * event_time (min, as ingest_time) and total_rows (max).
+    */
+  private val LastWins = BatchSchema.indices.filterNot(Set(0, EventTime, TotalRows)).toArray
+
+  /** One batch's running [[Provenance.batchRows]] state. */
+  private final class BatchFold {
+    private val values = new Array[Any](BatchSchema.length)
+    private val times = new Array[String](BatchSchema.length)
+
+    def add(ev: Row): Unit = {
+      val t = ev.getString(EventTime)
+      values(0) = ev.get(0)
+      LastWins.foreach { i =>
+        if (!ev.isNullAt(i) && (times(i) == null || t >= times(i))) { values(i) = ev.get(i); times(i) = t }
+      }
+      if (values(EventTime) == null || t < values(EventTime).asInstanceOf[String]) values(EventTime) = t
+      if (!ev.isNullAt(TotalRows) &&
+          (values(TotalRows) == null || ev.getLong(TotalRows) > values(TotalRows).asInstanceOf[Long]))
+        values(TotalRows) = ev.get(TotalRows)
+    }
+
+    def row: Row = new GenericRowWithSchema(values, BatchSchema)
+  }
 
   private val TsFormat =
     DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss.SSS").withZone(ZoneOffset.UTC)

@@ -1,11 +1,14 @@
 package graft.service
 
+import java.io.StringWriter
 import java.net.{InetSocketAddress, URLDecoder}
 import java.nio.charset.StandardCharsets
 
+import com.fasterxml.jackson.core.{JsonFactory, JsonGenerator}
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.Provenance
 
@@ -21,14 +24,17 @@ import graft.operators.Provenance
   *     desc, capped at N (default 20; the reference's search is
   *     unbounded, the cap is the robust choice for a collect-and-serve)
   *
-  * Each route delegates to the corresponding [[Provenance]] DataFrame
-  * query (batchById / batchTimeline / batchRules / latestBatches /
-  * search) and serializes with Dataset.toJSON, so the service is a thin
-  * driver-side veneer — all real work stays distributed Spark plans.
-  * Control-plane result sets are small by construction (per-batch rows,
-  * top-N), which is what makes collect-and-serve correct here.
+  * Each route delegates to the corresponding [[Provenance]] query
+  * (batchById / batchTimeline / batchRules / latestBatches / search),
+  * which folds driver-local control rows in plain Scala, and serializes
+  * the rows with Jackson exactly as Spark's `Dataset.toJSON` would
+  * (schema field order, null fields omitted) — so a request launches no
+  * Spark job. Control-plane result sets are small by construction
+  * (per-batch rows, top-N). A negative `?limit=` or a query string
+  * that does not decode is a client error: 400 with a `detail`.
   */
 final class LineageService(provenance: Provenance, bindPort: Int = 0) {
+  import LineageService.{jsonArray, jsonObject}
 
   private var server: HttpServer = _
 
@@ -42,39 +48,39 @@ final class LineageService(provenance: Provenance, bindPort: Int = 0) {
 
   def stop(): Unit = if (server != null) server.stop(0)
 
-  private def jsonRows(df: DataFrame): Seq[String] = df.toJSON.collect().toSeq
-
-  private def arr(rows: Seq[String]): String = rows.mkString("[", ",", "]")
-
-  private def route(path: String, params: Map[String, String]): (Int, String) =
+  private def route(path: String, params: Map[String, String]): (Int, String) = {
+    // ?limit= caps the rows served (default 20); the reference's search
+    // is unbounded (api/app.py:136-152), but an unfiltered search over a
+    // large control plane must not serialize every batch row
+    def limit: Int = {
+      val n = params.get("limit").flatMap(_.toIntOption).getOrElse(20)
+      if (n < 0) throw new IllegalArgumentException(s"limit must be non-negative, got $n")
+      n
+    }
     path.split("/").filter(_.nonEmpty).toList match {
       case "provenance" :: "batch" :: id :: Nil =>
-        jsonRows(provenance.batchById(id)).headOption
-          .map((200, _)).getOrElse((404, """{"detail":"Batch ID not found"}"""))
+        provenance.batchById(id).headOption
+          .map(r => (200, jsonObject(r, Provenance.BatchSchema)))
+          .getOrElse((404, """{"detail":"Batch ID not found"}"""))
       case "provenance" :: "steps" :: id :: Nil =>
-        (200, arr(jsonRows(provenance.batchTimeline(id))))
+        (200, jsonArray(provenance.batchTimeline(id), Provenance.tableSchemas("provenance_steps")))
       case "provenance" :: "rules" :: id :: Nil =>
-        (200, arr(jsonRows(provenance.batchRules(id))))
+        (200, jsonArray(provenance.batchRules(id), Provenance.tableSchemas("provenance_rules_applied")))
       case "provenance" :: "source" :: name :: Nil =>
-        val limit = params.get("limit").flatMap(_.toIntOption).getOrElse(20)
-        (200, arr(jsonRows(provenance.latestBatches(Some(name), limit))))
+        (200, jsonArray(provenance.latestBatches(Some(name), limit), Provenance.BatchSchema))
       case "provenance" :: "search" :: Nil =>
-        // ?limit= caps the collect (default 20, like /source) — the
-        // reference's search is unbounded (api/app.py:136-152), but an
-        // unfiltered search over a large control plane must not pull
-        // every batch row onto the service thread
-        val limit = params.get("limit").flatMap(_.toIntOption).getOrElse(20)
-        (200, arr(jsonRows(provenance.search(params.get("status"),
-          params.get("source")).limit(limit))))
+        (200, jsonArray(provenance.search(params.get("status"), params.get("source")).take(limit),
+          Provenance.BatchSchema))
       case _ => (404, """{"detail":"Not Found"}""")
     }
+  }
 
   private def handler: HttpHandler = (ex: HttpExchange) => {
     val (code, body) =
-      try route(ex.getRequestURI.getPath, parseQuery(ex.getRequestURI.getQuery))
+      try route(ex.getRequestURI.getPath, parseQuery(ex.getRequestURI.getRawQuery))
       catch {
-        case e: Throwable =>
-          (500, s"""{"detail":${escape(Option(e.getMessage).getOrElse("error"))}}""")
+        case e: IllegalArgumentException => (400, detail(e))
+        case e: Throwable => (500, detail(e))
       }
     val bytes = body.getBytes(StandardCharsets.UTF_8)
     ex.getResponseHeaders.set("Content-Type", "application/json")
@@ -83,11 +89,53 @@ final class LineageService(provenance: Provenance, bindPort: Int = 0) {
     ex.close()
   }
 
+  /** Form-decodes the raw (still percent-encoded) query once; a
+    * malformed escape throws IllegalArgumentException.
+    */
   private def parseQuery(q: String): Map[String, String] =
     Option(q).getOrElse("").split("&").filter(_.contains("=")).map { kv =>
       val Array(k, v) = kv.split("=", 2)
-      URLDecoder.decode(k, "UTF-8") -> URLDecoder.decode(v, "UTF-8")
+      URLDecoder.decode(k, StandardCharsets.UTF_8) -> URLDecoder.decode(v, StandardCharsets.UTF_8)
     }.toMap
 
-  private def escape(s: String): String = Provenance.jsonEscape(s)
+  private def detail(e: Throwable): String =
+    s"""{"detail":${Provenance.jsonEscape(Option(e.getMessage).getOrElse("error"))}}"""
+}
+
+object LineageService {
+  private val jsonFactory = new JsonFactory()
+
+  /** `rows` as a JSON array, byte for byte what Spark's `Dataset.toJSON`
+    * writes for them joined into one: Spark's JSON writer is Jackson
+    * too, so fields follow `schema` order, null fields are omitted,
+    * longs are numbers and strings take Jackson's default escapes.
+    */
+  def jsonArray(rows: Seq[Row], schema: StructType): String = write { g =>
+    g.writeStartArray()
+    rows.foreach(writeRow(g, _, schema))
+    g.writeEndArray()
+  }
+
+  /** One row as a JSON object, as [[jsonArray]] writes it. */
+  def jsonObject(row: Row, schema: StructType): String = write(writeRow(_, row, schema))
+
+  private def write(body: JsonGenerator => Unit): String = {
+    val out = new StringWriter
+    val g = jsonFactory.createGenerator(out)
+    body(g)
+    g.close()
+    out.toString
+  }
+
+  private def writeRow(g: JsonGenerator, r: Row, schema: StructType): Unit = {
+    g.writeStartObject()
+    schema.fields.indices.filterNot(r.isNullAt).foreach { i =>
+      g.writeFieldName(schema(i).name)
+      r.get(i) match {
+        case n: Long => g.writeNumber(n)
+        case v => g.writeString(v.toString)
+      }
+    }
+    g.writeEndObject()
+  }
 }

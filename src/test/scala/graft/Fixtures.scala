@@ -2,18 +2,18 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.Row
 
 import graft.operators.ControlBackend
 
 /** Counts the appends per control table that reach `inner`. */
 final class CountingControlBackend(inner: ControlBackend) extends ControlBackend {
   private val counts = scala.collection.mutable.Map.empty[String, Int]
-  override def append(table: String, df: DataFrame): Unit = {
+  override def append(table: String, rows: Seq[Row]): Unit = {
     synchronized(counts(table) = counts.getOrElse(table, 0) + 1)
-    inner.append(table, df)
+    inner.append(table, rows)
   }
-  override def read(table: String)(empty: => DataFrame): DataFrame = inner.read(table)(empty)
+  override def rows(table: String): Seq[Row] = inner.rows(table)
   override def compact(table: String): Unit = inner.compact(table)
   /** Appends per table since the last call. */
   def drain(): Map[String, Int] = synchronized { val m = counts.toMap; counts.clear(); m }
@@ -23,6 +23,19 @@ final class CountingControlBackend(inner: ControlBackend) extends ControlBackend
   * reference's synthetic generator, independently implemented).
   */
 object Fixtures {
+
+  /** GET `path` from a local server: (status, body). */
+  def httpGet(port: Int, path: String): (Int, String) = {
+    val conn = new java.net.URL(s"http://127.0.0.1:$port$path").openConnection()
+      .asInstanceOf[java.net.HttpURLConnection]
+    conn.setConnectTimeout(5000)
+    conn.setReadTimeout(30000)
+    val code = conn.getResponseCode
+    val stream = if (code >= 400) conn.getErrorStream else conn.getInputStream
+    val body = new String(stream.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+    conn.disconnect()
+    (code, body)
+  }
 
   def tmpDir(prefix: String): Path = Files.createTempDirectory(prefix)
 

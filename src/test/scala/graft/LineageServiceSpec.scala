@@ -1,27 +1,20 @@
 package graft
 
-import java.net.{HttpURLConnection, URL}
-import scala.io.Source
+import java.net.URI
+import scala.jdk.CollectionConverters._
 
-import graft.operators.{InMemoryControlBackend, JdbcControlBackend, Provenance}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions._
+
+import graft.operators.{ControlBackend, InMemoryControlBackend, JdbcControlBackend, ParquetControlBackend, Provenance}
 import graft.service.LineageService
 
 class LineageServiceSpec extends SparkSpec {
 
-  private def get(port: Int, path: String): (Int, String) = {
-    val conn = new URL(s"http://127.0.0.1:$port$path").openConnection()
-      .asInstanceOf[HttpURLConnection]
-    conn.setConnectTimeout(5000)
-    conn.setReadTimeout(30000)
-    val code = conn.getResponseCode
-    val stream = if (code >= 400) conn.getErrorStream else conn.getInputStream
-    val body = Source.fromInputStream(stream, "UTF-8").mkString
-    conn.disconnect()
-    (code, body)
-  }
+  private def get(port: Int, path: String): (Int, String) = Fixtures.httpGet(port, path)
 
   test("all five reference endpoints serve provenance state as JSON") {
-    val p = new Provenance(spark, new InMemoryControlBackend(spark))
+    val p = new Provenance(spark, new InMemoryControlBackend)
     p.createBatch("b1", "hospital_a", "/raw/f1.csv", "sha1")
     p.setRowCount("b1", "VALIDATED", 10L)
     p.recordStep("b1", "INGEST", Map("k" -> "v"))
@@ -71,7 +64,7 @@ class LineageServiceSpec extends SparkSpec {
     // Pipeline → JdbcControlBackend(Derby) → LineageService
     val base = Fixtures.sourceTree(Fixtures.tmpDir("srcjdbc"))
     val lake = Fixtures.tmpDir("lakejdbc").toString
-    val be = new JdbcControlBackend(spark,
+    val be = new JdbcControlBackend(
       s"jdbc:derby:${Fixtures.tmpDir("derbye2e")}/db;create=true")
     val p = new Pipeline(spark, lake, controlBackend = Some(be))
     p.ingest(base.toString)
@@ -103,5 +96,97 @@ class LineageServiceSpec extends SparkSpec {
       val (cr, rules) = get(port, s"/provenance/rules/$b1")
       assert(cr == 200 && rules.contains("PHI_"))
     } finally svc.stop()
+  }
+
+  test("a negative limit or a malformed query escape is a 400; an escaped percent sign is a value") {
+    val p = new Provenance(spark, new InMemoryControlBackend)
+    p.createBatch("b1", "hospital_a", "/raw/f1.csv", "sha1")
+    p.createBatch("b2", "100%zz", "/raw/f2.csv", "sha2")
+    val svc = new LineageService(p)
+    val port = svc.start()
+    try {
+      for (path <- Seq("/provenance/source/hospital_a?limit=-1", "/provenance/search?limit=-3")) {
+        val (code, body) = get(port, path)
+        assert(code == 400, s"$path: $code $body")
+        assert(body.startsWith("""{"detail":"limit must be non-negative""") && body.endsWith("}"), s"$path: $body")
+      }
+      // a malformed escape never reaches the routes: the HTTP server
+      // refuses the request line
+      assert(get(port, "/provenance/search?status=%zz")._1 == 400)
+      // the query is decoded once: %25 is a literal percent sign, not
+      // the start of a second, malformed escape
+      val (code, body) = get(port, "/provenance/search?source=100%25zz")
+      assert(code == 200 && body.contains("\"batch_id\":\"b2\"") && !body.contains("b1"), s"$code $body")
+    } finally svc.stop()
+  }
+
+  test("every route returns the bytes Dataset.toJSON gives for the same rows, on every backend") {
+    // control characters, quotes, backslashes and non-ASCII text in
+    // every kind of field the routes serve
+    val odd = "q\"uote \\back\ttab\nline\bbs\fff é 中文 \uD83D\uDE00"
+    val backends: Seq[(String, () => ControlBackend)] = Seq(
+      "parquet" -> (() => new ParquetControlBackend(spark, Fixtures.tmpDir("provjson").toString)),
+      "in-memory" -> (() => new InMemoryControlBackend),
+      "jdbc (embedded derby)" -> (() => new JdbcControlBackend(
+        s"jdbc:derby:${Fixtures.tmpDir("derbyjson")}/db;create=true")))
+    for ((label, mk) <- backends) {
+      val be = mk()
+      val p = new Provenance(spark, be)
+      p.batched {
+        p.createBatch("b1", odd, s"/raw/$odd.csv", "sha1")
+        p.setRowCount("b1", "VALIDATED", 42L)
+        p.updateCuratedHash("b1", s"cur-$odd", s"/curated/$odd")
+        p.createBatch("b2", odd, "/raw/f2.csv", "sha2")
+        p.updateStatus("b2", "FAILED_VALIDATION", s"bad row: $odd")
+        p.createBatch("b3", "clinic_b", s"/raw/$odd.jsonl", "sha3")
+        p.recordStep("b1", "INGEST", Map("raw_path" -> odd))
+        p.recordStep("b1", odd, Map("rows" -> "42"))
+        p.recordRule("b1", s"PHI_$odd", "applied")
+        p.recordRule("b1", "PHI_SSN", odd)
+      }
+      p.updateFinalHash("b1", "sha-fin", s"/qlm/$odd")
+
+      // the reference: the Spark plans and Dataset.toJSON each route ran
+      // on, over the backend's own rows
+      def table(t: String) = spark.createDataFrame(be.rows(t).asJava, Provenance.tableSchemas(t))
+      val ev = table("provenance_batch_events")
+      def last(c: String) = max_by(col(c), when(col(c).isNotNull, col("event_time"))).as(c)
+      val batches = ev.groupBy(col("batch_id")).agg(last("source_name"), last("raw_file_path"),
+        last("raw_sha256"), last("status"), min(col("event_time")).as("ingest_time"),
+        last("error_details"), max(col("total_rows")).as("total_rows"), last("curated_sha256"),
+        last("curated_path"), last("final_sha256"), last("version_path"))
+      def arr(df: DataFrame) = df.toJSON.collect().mkString("[", ",", "]")
+      val newest = col("ingest_time").desc
+      val expected = Seq(
+        "/provenance/batch/b1" -> batches.filter(col("batch_id") === "b1").toJSON.collect().head,
+        "/provenance/steps/b1" -> arr(table("provenance_steps").filter(col("batch_id") === "b1")
+          .orderBy("step_time")),
+        "/provenance/rules/b1" -> arr(table("provenance_rules_applied").filter(col("batch_id") === "b1")
+          .orderBy("created_at")),
+        s"/provenance/source/$odd?limit=1" -> arr(batches.filter(col("source_name") === odd)
+          .orderBy(newest).limit(1)),
+        s"/provenance/source/$odd?limit=5" -> arr(batches.filter(col("source_name") === odd)
+          .orderBy(newest).limit(5)),
+        s"/provenance/search?source=$odd" -> arr(batches.filter(col("source_name") === odd)
+          .orderBy(newest).limit(20)),
+        "/provenance/search?status=INGESTED&limit=5" -> arr(batches.filter(col("status") === "INGESTED")
+          .orderBy(newest).limit(5)))
+
+      val svc = new LineageService(p)
+      val port = svc.start()
+      try expected.foreach { case (route, want) =>
+        val (path, query) = route.split("\\?", 2) match {
+          case Array(pa, q) => (pa, q)
+          case Array(pa) => (pa, null)
+        }
+        val (code, body) = get(port, new URI("http", null, "127.0.0.1", port, path, query, null)
+          .toASCIIString.stripPrefix(s"http://127.0.0.1:$port"))
+        assert(code == 200, s"[$label] $route: $body")
+        assert(body == want, s"[$label] $route")
+        assert(!body.contains("null") && body.contains("\\b") && body.contains("\\f"),
+          s"[$label] $route: null fields are omitted, \\b and \\f take short escapes: $body")
+      } finally svc.stop()
+      assert(expected.count(_._2.contains("\"total_rows\":42")) == 3, s"[$label] total_rows is a number")
+    }
   }
 }

@@ -3,11 +3,13 @@ package graft
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.model.Seeds
-import graft.operators.{ParquetControlBackend, Scrubber}
+import graft.operators.{ParquetControlBackend, Provenance, Scrubber}
+import graft.service.LineageService
 import graft.sources.Readers
 
 /** End-to-end pipeline smoke over generated clinical fixtures: statuses,
@@ -82,10 +84,10 @@ class PipelineSpec extends SparkSpec {
     assert(names == Set("[REDACTED_NAME]"))
 
     // lineage queries answer over the run
-    assert(p.provenance.batchTimeline(transformed.head._1).count() >= 3)
-    assert(p.provenance.latestBatches(Some("hospital_a"), 10).count() == 2)
-    assert(p.provenance.search(Some("FAILED_VALIDATION"), None).count() == 3)
-    assert(p.provenance.batchRules(scrubbed.head).count() >= 1)
+    assert(p.provenance.batchTimeline(transformed.head._1).size >= 3)
+    assert(p.provenance.latestBatches(Some("hospital_a"), 10).size == 2)
+    assert(p.provenance.search(Some("FAILED_VALIDATION"), None).size == 3)
+    assert(p.provenance.batchRules(scrubbed.head).size >= 1)
   }
 
   test("control plan schedules and runs the four stages in order") {
@@ -226,8 +228,8 @@ class PipelineSpec extends SparkSpec {
     val (p, be) = countingPipeline(Fixtures.tmpDir("lakefail").toString)
     p.ingest(base.toString)
     p.validatePending()
-    val queue = p.provenance.pending("VALIDATED").select("batch_id", "raw_file_path")
-      .collect().map(r => (r.getString(0), r.getString(1))).toSeq
+    val queue = p.provenance.pending("VALIDATED")
+      .map(r => (r.getAs[String]("batch_id"), r.getAs[String]("raw_file_path")))
     assert(queue.size == 3)
     Files.delete(Paths.get(queue(1)._2)) // batch 2's raw file vanishes
     be.drain()
@@ -239,7 +241,7 @@ class PipelineSpec extends SparkSpec {
     val scrubSteps = p.provenance.steps.filter(col("step_name") === "SCRUB_PHI")
       .select("batch_id").collect().map(_.getString(0)).toSeq
     assert(scrubSteps == Seq(queue(0)._1))
-    assert(p.provenance.batchRules(queue(0)._1).count() > 0)
+    assert(p.provenance.batchRules(queue(0)._1).nonEmpty)
   }
 
   test("scrub stats observed on the write equal a separate aggregation") {
@@ -267,12 +269,90 @@ class PipelineSpec extends SparkSpec {
         case "hospital_c_hl7" =>
           (Readers.hl7Messages(spark, path).count(), 0L, Set("PHI_HL7_POSITIONAL"))
       }
-      val details = p.provenance.batchTimeline(id).filter(col("step_name") === "SCRUB_PHI")
+      val details = p.provenance.steps.filter(col("batch_id") === id && col("step_name") === "SCRUB_PHI")
         .select(get_json_object(col("details_json"), "$.rows"),
           get_json_object(col("details_json"), "$.replacements")).collect()(0)
-      val rules = p.provenance.batchRules(id).select("rule_id").collect().map(_.getString(0)).toSet
+      val rules = p.provenance.batchRules(id).map(_.getAs[String]("rule_id")).toSet
       assert((details.getString(0).toLong, details.getString(1).toLong, rules) == expected, source)
       assert(expected._1 > 0, source)
     }
+  }
+
+  /** `body`'s result and the Spark jobs launched while it ran, counted
+    * on the listener bus between two marker jobs.
+    */
+  private def jobsDuring[A](body: => A): (A, Int) = {
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    def mark(m: String): Unit = {
+      sc.setJobDescription(m)
+      try spark.range(1).count() finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      mark("jobs-during:start")
+      val a = body
+      mark("jobs-during:end")
+      val deadline = System.nanoTime() + 30000000000L
+      while (!jobs.contains("jobs-during:end") && System.nanoTime() < deadline) Thread.sleep(5)
+      val during = jobs.asScala.toSeq.dropWhile(_ != "jobs-during:start")
+        .dropWhile(_ == "jobs-during:start").takeWhile(_ != "jobs-during:end")
+      assert(jobs.contains("jobs-during:end"), "end marker never reached the listener")
+      (a, during.size)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("stage queues and lineage requests launch no Spark jobs; a cold reader sees the same rows") {
+    val base = Fixtures.sourceTree(Fixtures.tmpDir("srcnojobs"))
+    val lake = Fixtures.tmpDir("lakenojobs").toString
+    val p = new Pipeline(spark, lake)
+    assert(jobsDuring(spark.range(3).count())._2 > 0, "the counter must see a job")
+    var queueJobs = 0
+    def queue(status: String, stage: => Unit): Unit = {
+      val (q, n) = jobsDuring(p.pendingBatches(status))
+      assert(q.nonEmpty, status)
+      queueJobs += n
+      stage
+    }
+    p.ingest(base.toString)
+    queue("INGESTED", p.validatePending())
+    queue("VALIDATED", p.scrubPending())
+    queue("SCRUBBED", p.transformPending())
+    assert(queueJobs == 0, "the three stage-queue reads launched Spark jobs")
+
+    val id = p.provenance.pending("COMPLETED").head.getAs[String]("batch_id")
+    val svc = new LineageService(p.provenance)
+    val port = svc.start()
+    try {
+      val (responses, lineageJobs) = jobsDuring(Seq(s"/provenance/batch/$id", s"/provenance/steps/$id",
+        s"/provenance/rules/$id", "/provenance/source/hospital_a?limit=5",
+        "/provenance/search?status=COMPLETED&source=clinic_b").map(Fixtures.httpGet(port, _)))
+      assert(responses.forall(r => r._1 == 200 && r._2 != "[]"), responses)
+      assert(lineageJobs == 0, "the five lineage requests launched Spark jobs")
+    } finally svc.stop()
+
+    // a second instance on the same lake root starts with a cold cache,
+    // and after the writer's compaction finds its cached files gone
+    def control(pr: Provenance): Seq[Seq[String]] =
+      Seq(pr.batches, pr.steps, pr.rulesApplied, pr.auditLog).map(_.collect().map(_.toString).toSeq.sorted)
+    val reader = new Provenance(spark, lake)
+    def sameRows(when: String): Unit = {
+      val writer = control(p.provenance)
+      assert(writer.map(_.size) == Seq(6, 18, writer(2).size, 6) && writer(2).nonEmpty, when)
+      assert(control(reader) == writer, s"a reader that was warm $when")
+      assert(control(new Provenance(spark, lake)) == writer, s"a cold reader $when")
+    }
+    sameRows("after the run")
+    p.provenance.compact()
+    sameRows("after compact()")
+    // the state between compact's two moves of a crashed swap
+    val events = Paths.get(lake, "_control", "provenance_batch_events")
+    Files.move(events, Paths.get(s"$events" + "_old"))
+    sameRows("after the mid-swap crash repair")
+    assert(Files.exists(events))
   }
 }

@@ -13,8 +13,8 @@ class ProvenanceSpec extends SparkSpec {
     */
   private def backends: Seq[(String, () => ControlBackend)] = Seq(
     "parquet" -> (() => new ParquetControlBackend(spark, Fixtures.tmpDir("prov").toString)),
-    "in-memory" -> (() => new InMemoryControlBackend(spark)),
-    "jdbc (embedded derby)" -> (() => new JdbcControlBackend(spark,
+    "in-memory" -> (() => new InMemoryControlBackend),
+    "jdbc (embedded derby)" -> (() => new JdbcControlBackend(
       s"jdbc:derby:${Fixtures.tmpDir("derby")}/db;create=true")))
 
   for ((label, mkBackend) <- backends) {
@@ -48,8 +48,8 @@ class ProvenanceSpec extends SparkSpec {
       p.createBatch("b1", "s", "/f1", "h")
       p.createBatch("b2", "s", "/f2", "h")
       p.updateStatus("b1", "VALIDATED")
-      val pending = p.pending("INGESTED").select("batch_id").collect().map(_.getString(0))
-      assert(pending.toSeq == Seq("b2"))
+      val pending = p.pending("INGESTED").map(_.getAs[String]("batch_id"))
+      assert(pending == Seq("b2"))
     }
 
     test(s"[$label] steps / rules / audit append and order") {
@@ -58,11 +58,11 @@ class ProvenanceSpec extends SparkSpec {
       p.recordStep("b1", "VALIDATION_PASSED", Map("rows" -> "7"))
       p.recordRule("b1", "PHI_SSN", "applied")
       p.writeAudit("tester", "RUN", "ok")
-      val steps = p.batchTimeline("b1").select("step_name").collect().map(_.getString(0))
-      assert(steps.toSeq == Seq("INGEST", "VALIDATION_PASSED"))
-      assert(p.batchRules("b1").count() == 1)
+      val steps = p.batchTimeline("b1").map(_.getAs[String]("step_name"))
+      assert(steps == Seq("INGEST", "VALIDATION_PASSED"))
+      assert(p.batchRules("b1").size == 1)
       assert(p.auditLog.count() == 1)
-      val details = p.batchTimeline("b1").filter(col("step_name") === "VALIDATION_PASSED")
+      val details = p.steps.filter(col("batch_id") === "b1" && col("step_name") === "VALIDATION_PASSED")
         .select(get_json_object(col("details_json"), "$.rows")).collect()(0).getString(0)
       assert(details == "7")
     }
@@ -84,10 +84,10 @@ class ProvenanceSpec extends SparkSpec {
       val state = p.batches.orderBy("batch_id")
         .select("batch_id", "status", "total_rows", "raw_sha256").collect().map(_.toSeq).toSeq
       assert(state == Seq(Seq("b1", "VALIDATED", 7L, "h1"), Seq("b2", "INGESTED", 0L, "h2")))
-      assert(p.pending("INGESTED").select("batch_id").collect().map(_.getString(0)).toSeq == Seq("b2"))
-      assert(p.batchTimeline("b1").select("step_name").collect().map(_.getString(0)).toSeq ==
+      assert(p.pending("INGESTED").map(_.getAs[String]("batch_id")) == Seq("b2"))
+      assert(p.batchTimeline("b1").map(_.getAs[String]("step_name")) ==
         Seq("INGEST", "VALIDATION_PASSED"))
-      assert(p.batchRules("b1").count() == 1 && p.auditLog.count() == 1)
+      assert(p.batchRules("b1").size == 1 && p.auditLog.count() == 1)
     }
   }
 
@@ -148,8 +148,7 @@ class ProvenanceSpec extends SparkSpec {
     for ((label, mk) <- backends) {
       val p = new Provenance(spark, mk())
       p.recordStep("b1", "VALIDATION_FAILED", Map("errors" -> big))
-      val json = p.batchTimeline("b1")
-        .select("details_json").collect()(0).getString(0)
+      val json = p.batchTimeline("b1").head.getAs[String]("details_json")
       assert(json.contains("x" * 100), s"[$label] long value must persist")
       // RFC 8259: control characters must be escaped in the JSON blob
       assert(!json.exists(c => c == '\n' || c == '\t'), s"[$label] raw control char in JSON")
@@ -157,21 +156,19 @@ class ProvenanceSpec extends SparkSpec {
   }
 
   test("jdbc backend rejects a data-plane-sized append with a clear error") {
-    import spark.implicits._
-    val be = new JdbcControlBackend(spark,
+    import org.apache.spark.sql.Row
+    val be = new JdbcControlBackend(
       s"jdbc:derby:${Fixtures.tmpDir("derbycap")}/db;create=true")
+    def steps(n: Int) = (1 to n).map(i => Row(s"b$i", "INGEST", s"t$i", "{}"))
     // at the cap: accepted
-    be.append("cap_ok", (1 to JdbcControlBackend.MaxControlRows)
-      .map(i => (i.toLong, s"r$i")).toDF("id", "v"))
-    assert(be.read("cap_ok")(spark.emptyDataFrame).count() ==
-      JdbcControlBackend.MaxControlRows)
+    be.append("provenance_steps", steps(JdbcControlBackend.MaxControlRows))
+    assert(be.rows("provenance_steps").size == JdbcControlBackend.MaxControlRows)
     // one over: refused before any insert, with the contract in the message
     val e = intercept[IllegalArgumentException] {
-      be.append("cap_no", (0 to JdbcControlBackend.MaxControlRows)
-        .map(i => (i.toLong, s"r$i")).toDF("id", "v"))
+      be.append("provenance_rules_applied", steps(JdbcControlBackend.MaxControlRows + 1))
     }
     assert(e.getMessage.contains("control-plane"))
-    assert(be.read("cap_no")(spark.emptyDataFrame).isEmpty,
+    assert(be.rows("provenance_rules_applied").isEmpty,
       "refused append must not create/populate the table")
   }
 
@@ -179,7 +176,7 @@ class ProvenanceSpec extends SparkSpec {
   // the Derby-backed e2e above must therefore exercise only SQL a
   // Postgres swap would also accept. The backend pins that by
   // construction — every emitted statement comes from
-  // createTableSql/insertSql, and the dialect object is the only
+  // createTableSql/insertSql/selectSql, and the dialect object is the only
   // permitted variation point — and this test enumerates the emitted
   // SQL to keep it that way.
   test("jdbc backend emits only the Derby/Postgres-portable SQL subset") {
@@ -205,6 +202,11 @@ class ProvenanceSpec extends SparkSpec {
       """"score", "details_json") VALUES (?, ?, ?, ?, ?)""")
     // dialect-invariant DML: no vendor syntax can hide in the insert
     assert(!ins.contains("`") && !ins.toUpperCase.contains("SERIAL"))
+    // the one query: a quoted column list, no vendor paging or hints
+    val sel = JdbcControlBackend.selectSql("batches", schema)
+    assert(sel == """SELECT "batch_id", "n_rows", "retry", "score", "details_json" FROM "batches"""")
+    assert(!sel.contains("`") && !Seq("LIMIT", "TOP", "FETCH", "*")
+      .exists(sel.toUpperCase.contains))
     // URL routing: the swap is config-only
     assert(JdbcControlBackend.dialectForUrl("jdbc:postgresql://h/db") ==
       JdbcControlBackend.Postgres)
@@ -222,7 +224,7 @@ class ProvenanceSpec extends SparkSpec {
   // diff like any schema migration.
   test("jdbc backend full-lifecycle statement stream matches the golden file") {
     val stmts = scala.collection.mutable.ArrayBuffer.empty[String]
-    val p = new Provenance(spark, new JdbcControlBackend(spark,
+    val p = new Provenance(spark, new JdbcControlBackend(
       s"jdbc:derby:${Fixtures.tmpDir("derbygold")}/db;create=true", stmts += _))
     // the reference pipeline's full happy path plus one failure probe:
     // create → validated count → curated → final, steps, a PHI rule,
@@ -235,7 +237,7 @@ class ProvenanceSpec extends SparkSpec {
     p.recordStep("b1", "VALIDATION_PASSED", Map("rows" -> "42"))
     p.recordRule("b1", "PHI_SSN", "applied")
     p.writeAudit("tester", "RUN", "ok")
-    p.pending("INGESTED").collect()
+    p.pending("INGESTED")
     val actual = stmts.mkString("\n")
     val goldenPath = java.nio.file.Paths.get(
       "src/test/resources/jdbc_control_statements.golden")
