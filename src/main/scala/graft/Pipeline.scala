@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model._
@@ -172,14 +172,18 @@ final class Pipeline(
   /** Hand a scrubbed frame, less its Scrubber bookkeeping columns
     * (A1/A2/A3), to `write`, and return (rowCount, totalReplacements,
     * firedRules) observed on the job that writes it (the util/Actions
-    * pattern) instead of by a job of their own.
+    * pattern) instead of by a job of their own. Replacements and rules
+    * count only the rows where `scrubbedRow` holds.
     */
-  private def writeScrubbed(scrubbed: DataFrame)(write: DataFrame => Unit): (Long, Long, Set[String]) = {
+  private def writeScrubbed(scrubbed: DataFrame, scrubbedRow: Column = lit(true))(
+      write: DataFrame => Unit): (Long, Long, Set[String]) = {
     val obs = Observation()
     write(scrubbed.observe(obs,
       count(lit(1)).as("n"),
-      coalesce(sum(col("_redactions")), lit(0L)).as("replacements"),
-      coalesce(array_distinct(flatten(collect_list(col("_fired_rules")))), array()).as("fired"))
+      coalesce(sum(when(scrubbedRow, col("_redactions"))), lit(0L)).as("replacements"),
+      // distinct rule sets, not one array per row: a few per batch
+      coalesce(array_distinct(flatten(collect_set(when(scrubbedRow, col("_fired_rules"))))), array())
+        .as("fired"))
       .drop("_redactions", "_fired_rules"))
     val m = obs.get
     (m("n").asInstanceOf[Long], m("replacements").asInstanceOf[Long],
@@ -193,15 +197,16 @@ final class Pipeline(
   }
 
   private def scrubJsonlFile(spec: SourceSpec, in: String, out: Path): (Long, Long, Set[String]) = {
-    // cache: Spark disallows projecting only _corrupt_record from a raw
-    // JSON scan; per-batch files are small so this is a driver-cheap fix
-    val df = Readers.jsonl(spark, spec, in).cache()
-    // invalid JSON lines pass through verbatim (etl/scrub_phi.py:155-160)
-    val corrupt = df.select(col("_corrupt_record").as("line")).filter(col("line").isNotNull)
-    try writeScrubbed(Scrubber.scrubTabular(df.drop("_corrupt_record"), spec, rules, byName = true)) { valid =>
-      val lines = valid.select(to_json(struct(valid.columns.toIndexedSeq.map(col): _*)).as("line"))
-      writeSingleFile(lines.unionByName(corrupt), out, "text")
-    } finally df.unpersist()
+    // scrubTabular carries _corrupt_record through untouched; a line that
+    // did not parse is not scrubbed, so it counts no replacement or rule
+    val scrubbed = Scrubber.scrubTabular(Readers.jsonl(spark, spec, in), spec, rules, byName = true)
+    writeScrubbed(scrubbed, scrubbedRow = col("_corrupt_record").isNull) { df =>
+      val fields = df.columns.toIndexedSeq.filter(_ != "_corrupt_record").map(col)
+      // an invalid JSON line passes through verbatim, in its place
+      // (etl/scrub_phi.py:155-160)
+      writeSingleFile(df.select(coalesce(col("_corrupt_record"), to_json(struct(fields: _*))).as("line")),
+        out, "text")
+    }
   }
 
   private def scrubHl7File(spec: SourceSpec, in: String, out: Path): (Long, Long, Set[String]) = {

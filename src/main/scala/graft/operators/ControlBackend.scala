@@ -1,14 +1,14 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.util.UUID
 import scala.collection.concurrent.TrieMap
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Storage seam for the control plane. The reference keeps all batch /
   * step / rule / audit state in Postgres behind a tiny DB module
@@ -33,32 +33,40 @@ trait ControlBackend {
 }
 
 /** Append-only parquet event log per control table under
-  * `<root>/_control/`. Every append writes one small parquet file —
-  * one per table per pipeline stage call under
-  * [[Provenance.batched]], one per event outside it — so the backend
+  * `<root>/_control/`, written and read on the driver with parquet's own
+  * writer and reader over local files: no Spark job, no Hadoop
+  * committer. Every append writes one small parquet file — one per
+  * table per pipeline stage call under [[Provenance.batched]], one per
+  * event outside it — to a hidden `.*.tmp` name, then publishes it
+  * under its `part-<epoch ms>-<uuid>.parquet` name with an atomic
+  * rename, so a listing never shows a partial file. The files are plain
+  * parquet in [[Provenance.tableSchemas]] (UTF-8 strings, int64
+  * `total_rows`), readable by any parquet reader. The backend
   * self-compacts: once a table exceeds `autoCompactAt` part files, it
-  * is rewritten as a single consolidated file set (write to temp + dir
-  * swap, so readers see either the old or the new layout).
+  * is rewritten as one file (written to a temp dir, then a dir swap, so
+  * readers see either the old or the new layout).
   *
   * Reads are served from a driver-side cache of rows keyed by part-file
-  * name: part files are immutable, this backend's own appends and
-  * compactions record their rows directly, and a read lists the table
-  * dir and loads only the files it has not seen (after a restart,
-  * another writer's append, or another writer's compaction) with one
-  * Spark read. All of it runs under one lock, which also serializes
-  * the count-then-compact check.
+  * name: part files are immutable, and this backend records the rows of
+  * each file it writes under the name it wrote, so its own appends and
+  * compactions never read anything back. A read lists the table dir
+  * and loads only the files it has not seen (after a restart, another
+  * writer's append, or another writer's compaction). All of it runs
+  * under one lock, which also serializes the count-then-compact check.
   */
-final class ParquetControlBackend(spark: SparkSession, root: String,
-    autoCompactAt: Int = 64) extends ControlBackend {
+final class ParquetControlBackend(root: String, autoCompactAt: Int = 64) extends ControlBackend {
+  import ParquetControlBackend._
 
   /** Cached rows per table, by part-file name. Guarded by `this`. */
   private val cache = mutable.Map.empty[String, mutable.LinkedHashMap[String, Seq[Row]]]
 
-  private def dir(table: String) = s"$root/_control/$table"
+  private def dir(table: String): Path = Paths.get(root, "_control", table)
+
+  private def sibling(table: String, suffix: String): Path = Paths.get(s"${dir(table)}$suffix")
 
   /** Part-file names of `table`, in name order. */
   private def partFiles(table: String): Seq[String] =
-    graft.util.Fs.list(Paths.get(dir(table))).map(_.getFileName.toString)
+    graft.util.Fs.list(dir(table)).map(_.getFileName.toString)
       .filter(f => f.endsWith(".parquet") && !f.startsWith(".") && !f.startsWith("_")).sorted
 
   /** The cached files of `table` that are still listed (a compaction
@@ -69,23 +77,6 @@ final class ParquetControlBackend(spark: SparkSession, root: String,
     files.filterInPlace((f, _) => listed.contains(f))
   }
 
-  /** Record `rows` as the content of the one file this backend just
-    * wrote. When more than one file is new, another writer's files
-    * arrived too and none is recorded: the next read loads them all.
-    */
-  private def claim(table: String, rows: Seq[Row]): Seq[String] = {
-    val listed = partFiles(table)
-    val files = known(table, listed)
-    listed.filterNot(files.contains) match {
-      case Seq(own) => files(own) = rows
-      case _ =>
-    }
-    listed
-  }
-
-  private def frame(table: String, rows: Seq[Row]): DataFrame =
-    spark.createDataFrame(rows.asJava, Provenance.tableSchemas(table)).coalesce(1)
-
   /** Repair a compact that crashed mid-swap: the table dir is missing
     * but the complete previous generation sits in `_old` — move it
     * back BEFORE any read or append. (Reading through a fallback
@@ -94,15 +85,16 @@ final class ParquetControlBackend(spark: SparkSession, root: String,
     * compact, deletes — the whole history.)
     */
   private def recover(table: String): Unit = {
-    val p = Paths.get(dir(table))
-    val old = Paths.get(dir(table) + "_old")
-    if (!Files.exists(p) && Files.exists(old)) Files.move(old, p)
+    val old = sibling(table, "_old")
+    if (!Files.exists(dir(table)) && Files.exists(old)) Files.move(old, dir(table))
   }
 
   override def append(table: String, rows: Seq[Row]): Unit = synchronized {
     recover(table)
-    frame(table, rows).write.mode(SaveMode.Append).parquet(dir(table))
-    if (autoCompactAt > 0 && claim(table, rows).size > autoCompactAt) compact(table)
+    val name = writeFile(dir(table), Provenance.tableSchemas(table), rows)
+    val listed = partFiles(table)
+    known(table, listed)(name) = rows
+    if (autoCompactAt > 0 && listed.size > autoCompactAt) compact(table)
   }
 
   override def rows(table: String): Seq[Row] = synchronized {
@@ -117,44 +109,96 @@ final class ParquetControlBackend(spark: SparkSession, root: String,
     recover(table)
     val listed = partFiles(table)
     val files = known(table, listed)
-    val unseen = listed.filterNot(files.contains)
-    if (unseen.nonEmpty)
-      try files ++= load(table, unseen)
-      catch {
-        // a listed file can vanish in another writer's compaction swap;
-        // its rows then sit in the compacted file: list once more
-        case _: Exception if relist && unseen.exists(f => !Files.exists(Paths.get(dir(table), f))) =>
-          refresh(table, relist = false)
-      }
-  }
-
-  /** Rows of each of `files`, read in one Spark job. */
-  private def load(table: String, files: Seq[String]): Seq[(String, Seq[Row])] = {
     val schema = Provenance.tableSchemas(table)
-    val byFile = spark.read.schema(schema).parquet(files.map(f => s"${dir(table)}/$f"): _*)
-      .select(schema.fieldNames.map(col).toIndexedSeq :+ col("_metadata.file_name"): _*)
-      .collect().groupBy(_.getString(schema.length))
-    files.map(f => f -> byFile.getOrElse(f, Array.empty[Row]).toSeq
-      .map(r => new GenericRowWithSchema(r.toSeq.init.toArray, schema): Row))
+    try listed.filterNot(files.contains).foreach(f => files(f) = readFile(dir(table).resolve(f), schema))
+    catch {
+      // a listed file can vanish in another writer's compaction swap;
+      // its rows then sit in the compacted file: list once more
+      case _: java.io.IOException if relist && listed.exists(f => !Files.exists(dir(table).resolve(f))) =>
+        refresh(table, relist = false)
+    }
   }
 
   override def compact(table: String): Unit = synchronized {
     val all = rows(table)
-    val p = Paths.get(dir(table))
-    if (Files.exists(p)) {
-      val old = Paths.get(dir(table) + "_old")
+    if (Files.exists(dir(table))) {
+      val old = sibling(table, "_old")
       // stale generations (only possible AFTER a successful swap, so
       // the main dir is the newest data) would break the moves below
       graft.util.Fs.deleteRecursively(old)
-      val tmp = dir(table) + "_compact_tmp"
-      graft.util.Fs.deleteRecursively(Paths.get(tmp))
-      frame(table, all).write.mode(SaveMode.Overwrite).parquet(tmp)
-      Files.move(p, old)
-      Files.move(Paths.get(tmp), p)
+      val tmp = sibling(table, "_compact_tmp")
+      graft.util.Fs.deleteRecursively(tmp)
+      val name = writeFile(tmp, Provenance.tableSchemas(table), all)
+      Files.move(dir(table), old)
+      Files.move(tmp, dir(table))
       graft.util.Fs.deleteRecursively(old) // best-effort cleanup
-      cache.remove(table)
-      claim(table, all)
+      cache(table) = mutable.LinkedHashMap(name -> all)
     }
+  }
+}
+
+object ParquetControlBackend {
+  import org.apache.parquet.conf.PlainParquetConfiguration
+  import org.apache.parquet.example.data.Group
+  import org.apache.parquet.example.data.simple.SimpleGroup
+  import org.apache.parquet.hadoop.ParquetReader
+  import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
+  import org.apache.parquet.hadoop.metadata.CompressionCodecName
+  import org.apache.parquet.io.{LocalInputFile, LocalOutputFile}
+  import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Type, Types}
+  import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, INT64}
+
+  /** Parquet's own settings, without a Hadoop `Configuration`. */
+  private def conf = new PlainParquetConfiguration()
+
+  /** The parquet schema of a control table: longs as int64, the other
+    * columns (all strings) as UTF-8 binary, required where the column is
+    * not nullable.
+    */
+  private def messageType(schema: StructType): MessageType =
+    new MessageType("spark_schema", schema.map[Type] { f =>
+      val repetition = if (f.nullable) Type.Repetition.OPTIONAL else Type.Repetition.REQUIRED
+      val t =
+        if (f.dataType == LongType) Types.primitive(INT64, repetition)
+        else Types.primitive(BINARY, repetition).as(LogicalTypeAnnotation.stringType())
+      t.named(f.name)
+    }.asJava)
+
+  /** Write `rows` as one parquet file in `dir` and return its name. */
+  private def writeFile(dir: Path, schema: StructType, rows: Seq[Row]): String = {
+    Files.createDirectories(dir)
+    val name = f"part-${System.currentTimeMillis()}%013d-${UUID.randomUUID()}.parquet"
+    val tmp = dir.resolve(s".$name.tmp")
+    val parquetSchema = messageType(schema)
+    try {
+      val writer = ExampleParquetWriter.builder(new LocalOutputFile(tmp)).withConf(conf)
+        .withType(parquetSchema).withCompressionCodec(CompressionCodecName.SNAPPY).build()
+      try rows.foreach { r =>
+        val g = new SimpleGroup(parquetSchema)
+        schema.indices.filterNot(r.isNullAt).foreach { i =>
+          if (schema(i).dataType == LongType) g.add(i, r.getLong(i)) else g.add(i, r.getString(i))
+        }
+        writer.write(g)
+      } finally writer.close()
+      Files.move(tmp, dir.resolve(name), StandardCopyOption.ATOMIC_MOVE)
+    } catch { case t: Throwable => Files.deleteIfExists(tmp); throw t }
+    name
+  }
+
+  /** The rows of one part file in `schema`, columns matched by name. */
+  private def readFile(path: Path, schema: StructType): Seq[Row] = {
+    val reader = new ParquetReader.Builder[Group](new LocalInputFile(path), conf) {
+      override protected def getReadSupport = new GroupReadSupport
+    }.build()
+    try Iterator.continually(reader.read()).takeWhile(_ != null).map { g =>
+      val values = schema.map { f =>
+        if (g.getFieldRepetitionCount(f.name) == 0) null
+        else if (f.dataType == LongType) g.getLong(f.name, 0)
+        else g.getString(f.name, 0)
+      }
+      new GenericRowWithSchema(values.toArray, schema): Row
+    }.toVector
+    finally reader.close()
   }
 }
 

@@ -47,7 +47,7 @@ final class Provenance(spark: SparkSession, backend: ControlBackend) {
   import Provenance._
 
   def this(spark: SparkSession, root: String) =
-    this(spark, new ParquetControlBackend(spark, root))
+    this(spark, new ParquetControlBackend(root))
 
   /** The calling thread's open scope; null outside any. */
   private val scope = new ThreadLocal[Scope]

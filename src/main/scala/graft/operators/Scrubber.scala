@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import graft.model.{PhiRule, SourceSpec}
 
@@ -12,8 +11,13 @@ import graft.model.{PhiRule, SourceSpec}
   * rule list is *data* loaded once per run, the expressions are built
   * from it once, and Catalyst codegen compiles each regex once per task
   * — the Spark analogue of the reference's single compiled-regex reuse
-  * (etl/scrub_phi.py:26). No UDFs anywhere, so every scrub stays inside
-  * whole-stage codegen and scales linearly with executors.
+  * (etl/scrub_phi.py:26). No UDFs anywhere. The tabular scrub
+  * ([[scrubTabular]]) holds no higher-order function, so it stays inside
+  * whole-stage codegen, whose subexpression elimination evaluates each
+  * rule once per cell for the scrubbed value, the fired rules and the
+  * replacement count together. The HL7 scrub ([[scrubHl7]]) is built
+  * from `transform` over split lines and fields, which Spark evaluates
+  * interpreted.
   *
   * Semantics preserved from the reference:
   *  - rules apply case-insensitively, in rule_id order, sequentially —
@@ -35,26 +39,38 @@ object Scrubber {
       regexp_replace(acc, ciPattern(r.pattern), r.replacement)
     }
 
-  private def ciPattern(p: String): String = {
+  private[graft] def ciPattern(p: String): String = {
     val ok =
       try { java.util.regex.Pattern.compile(p); true }
       catch { case _: Exception => false }
     if (ok) "(?i)" + p else "(?i)" + java.util.regex.Pattern.quote(p)
   }
 
-  /** Which rules fired on a value — an array<string> of rule ids, used
-    * for the per-file rules_applied set (A3). Detection = "replacement
-    * changed the value at that point of the fold", matching the
-    * reference's subn count>0 on the running value.
+  /** The values of the rule fold over `c`: element 0 is `c`, element k
+    * the value after rules 1..k (the last one is [[applyRules]]).
     */
-  def firedRules(c: Column, rules: Seq[PhiRule]): Column = {
-    val (_, flags) = rules.foldLeft((c, Seq.empty[Column])) {
-      case ((acc, fs), r) =>
-        val next = regexp_replace(acc, ciPattern(r.pattern), r.replacement)
-        (next, fs :+ when(acc.isNotNull && (next =!= acc), lit(r.ruleId)))
+  private def chain(c: Column, rules: Seq[PhiRule]): Seq[Column] =
+    rules.scanLeft(c)((acc, r) => regexp_replace(acc, ciPattern(r.pattern), r.replacement))
+
+  /** Per rule, whether it fired: the replacement changed the value at
+    * that point of the fold, matching the reference's subn count>0 on
+    * the running value.
+    */
+  private def flags(chain: Seq[Column], rules: Seq[PhiRule]): Seq[(String, Column)] =
+    rules.zip(chain.zip(chain.tail)).map { case (r, (before, after)) =>
+      r.ruleId -> (before.isNotNull && after =!= before)
     }
-    filter(array(flags: _*), x => x.isNotNull)
-  }
+
+  private val noRules = typedLit(Seq.empty[String])
+
+  private def firedIds(flags: Seq[(String, Column)]): Column =
+    if (flags.isEmpty) noRules
+    else concat(flags.map { case (id, f) => when(f, array(lit(id))).otherwise(noRules) }: _*)
+
+  /** Which rules fired on a value — an array<string> of rule ids in rule
+    * order, used for the per-file rules_applied set (A3).
+    */
+  def firedRules(c: Column, rules: Seq[PhiRule]): Column = firedIds(flags(chain(c, rules), rules))
 
   /** Contextual whole-column redaction token for a PHI column (F3).
     * CSV branch: name-like column → NAME; "dob" in the column name or
@@ -85,7 +101,6 @@ object Scrubber {
     * aggregate then drop.
     */
   def scrubTabular(df: DataFrame, spec: SourceSpec, rules: Seq[PhiRule], byName: Boolean = false): DataFrame = {
-    val present = df.columns.toSet
     var redactions: Column = lit(0L)
     var fired: Column = array()
     val outCols: Seq[Column] = df.columns.toSeq.map { c =>
@@ -101,13 +116,15 @@ object Scrubber {
           fired = array_union(fired, array(lit(ruleId)))
           lit(token).as(c)
         case Some(_) =>
+          // one rule chain per column: the scrubbed value, the fired ids
+          // and the count all read its intermediate values
           val v = col(c)
-          val scrubbed = applyRules(v, rules)
-          val rf = firedRules(v, rules)
-          redactions = redactions + size(rf).cast(LongType)
-          fired = array_union(fired, rf)
+          val values = chain(v, rules)
+          val fs = flags(values, rules)
+          redactions = fs.foldLeft(redactions) { case (n, (_, f)) => n + when(f, 1L).otherwise(0L) }
+          fired = array_union(fired, firedIds(fs))
           // empty/null values pass through untouched (reference `if val:`)
-          when(v.isNull || v === "", v).otherwise(scrubbed).as(c)
+          when(v.isNull || v === "", v).otherwise(values.last).as(c)
         case None =>
           col(c) // column not in metadata → untouched (reference skips)
       }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -19,17 +19,20 @@ final case class ValidationResult(
   * Reference behaviors preserved:
   *  - column-presence diff is driver-side over df.columns (validate.py:100-105);
   *  - CSV type probes run on the first `sampleRows` rows only, while
-  *    the row count stays exact (validate.py:111-120); JSONL checks
-  *    every row (validate.py:127-158);
+  *    the row count stays exact (validate.py:111-120); JSONL and HL7
+  *    check every row (validate.py:127-158, 160-213);
   *  - at most `maxErrorSamples` error strings are retained (validate.py:123);
   *  - empty string counts as null for nullability checks (validate.py:115-116);
   *  - unknown declared types pass (validate.py:23-34).
   *
-  * Scale: the probe frame is a limit(sampleRows) — Catalyst plans it as
-  * a LocalLimit that short-circuits the scan — or, for JSONL, the whole
-  * frame, whose scan stops at the maxErrorSamples-th error; the exact
-  * count is a separate count(*) over the (columnar, pushed-down)
-  * source, so a 100 TB file never materializes per-row error objects.
+  * Scale: for CSV the probe frame is a limit(sampleRows) — Catalyst
+  * plans it as a LocalLimit that short-circuits the scan — and the
+  * exact count is a separate count(*) over the (columnar, pushed-down)
+  * source. Where the probe covers every row (JSONL, HL7), the exact
+  * count is observed on the probe's own scan, one Spark job: each
+  * partition reads to its end and keeps only its first
+  * maxErrorSamples errors, so a 100 TB file never ships per-row error
+  * objects to the driver.
   */
 object Validator {
 
@@ -134,13 +137,31 @@ object Validator {
   def validate(df: DataFrame, spec: SourceSpec, probeAll: Boolean = false): ValidationResult = {
     val expected = spec.fields.map(_.name)
     val missing = expected.diff(df.columns.toSeq)
-    val rowCount = df.count() // exact, full scan — columnar + pushdown
-    val probed = if (probeAll) df else df.limit(SampleRows)
-    val probe = probed
-      .select(explode(errorArray(probed, spec)).as("error"))
-      .limit(MaxErrorSamples)
-    val errors = probe.collect().map(_.getString(0)).toSeq
+    val (rowCount, errors) =
+      if (probeAll) countAndProbe(df, errorArray(df, spec))
+      else {
+        val probed = df.limit(SampleRows)
+        (df.count(), // exact, full scan — columnar + pushdown
+          probed.select(explode(errorArray(probed, spec))).limit(MaxErrorSamples)
+            .collect().map(_.getString(0)).toSeq)
+      }
     ValidationResult(missing.isEmpty && errors.isEmpty, rowCount, missing, errors)
+  }
+
+  /** The exact row count of `df` and the first [[MaxErrorSamples]]
+    * error strings of `errors` over every row, in one Spark job: the
+    * count is observed on the probe's scan, so no partition may stop
+    * early — each reads to its end and keeps its first samples.
+    */
+  private def countAndProbe(df: DataFrame, errors: Column): (Long, Seq[String]) = {
+    val obs = Observation()
+    val max = MaxErrorSamples
+    val samples = df.observe(obs, count(lit(1)).as("n"))
+      .select(explode(errors)).as(Encoders.STRING)
+      .mapPartitions(it => it.foldLeft(Vector.empty[String])((kept, e) =>
+        if (kept.size < max) kept :+ e else kept).iterator)(Encoders.STRING)
+      .collect().take(max).toSeq
+    (obs.get("n").asInstanceOf[Long], samples)
   }
 
   /** HL7 validation (etl/validate.py:160-213): every message must have
@@ -160,11 +181,7 @@ object Validator {
           val v = trim(arrGet(parts, lit(n)))
           when(pidLine.isNotNull && (v.isNull || v === ""), lit(s"missing_required:$name"))
         }
-    val errCol = filter(array(checks: _*), x => x.isNotNull)
-    val rowCount = messages.count()
-    val errors = messages.limit(SampleRows)
-      .select(explode(errCol).as("error")).limit(MaxErrorSamples)
-      .collect().map(_.getString(0)).toSeq
+    val (rowCount, errors) = countAndProbe(messages, filter(array(checks: _*), x => x.isNotNull))
     ValidationResult(errors.isEmpty, rowCount, Nil, errors)
   }
 }

@@ -125,7 +125,7 @@ class LineageServiceSpec extends SparkSpec {
     // every kind of field the routes serve
     val odd = "q\"uote \\back\ttab\nline\bbs\fff é 中文 \uD83D\uDE00"
     val backends: Seq[(String, () => ControlBackend)] = Seq(
-      "parquet" -> (() => new ParquetControlBackend(spark, Fixtures.tmpDir("provjson").toString)),
+      "parquet" -> (() => new ParquetControlBackend(Fixtures.tmpDir("provjson").toString)),
       "in-memory" -> (() => new InMemoryControlBackend),
       "jdbc (embedded derby)" -> (() => new JdbcControlBackend(
         s"jdbc:derby:${Fixtures.tmpDir("derbyjson")}/db;create=true")))

@@ -176,8 +176,54 @@ class PipelineSpec extends SparkSpec {
     assert(spark.read.parquet(r.getAs[String]("version_path")).count() == 600)
   }
 
+  test("an HL7 file whose message 230 of 250 has no PID segment is quarantined") {
+    val good = Fixtures.hl7Good.split("\n\n")(0).trim
+    def file(bad: Option[Int]): String = (1 to 250).map(i =>
+      if (bad.contains(i)) Fixtures.hl7MissingPid.trim else good.replace("MSG1", s"MSG$i")).mkString("", "\n\n", "\n")
+    val base = Fixtures.tmpDir("srchl7late")
+    Fixtures.write(base.resolve("hospital_c_hl7/a_late_bad.hl7"), file(Some(230)))
+    Fixtures.write(base.resolve("hospital_c_hl7/b_all_good.hl7"), file(None))
+    val lake = Fixtures.tmpDir("lakehl7late").toString
+    val p = new Pipeline(spark, lake)
+    p.ingest(base.toString)
+    assert(p.validatePending().map(_._2) == Seq(false, true))
+    val state = p.provenance.batchRows.map(r => Paths.get(r.getAs[String]("raw_file_path")).getFileName.toString ->
+      (r.getAs[String]("status"), r.getAs[String]("error_details"), r.getAs[Long]("total_rows"))).toMap
+    assert(state("a_late_bad.hl7") == (("FAILED_VALIDATION", "missing_PID_segment", 0L)))
+    assert(state("b_all_good.hl7") == (("VALIDATED", null, 250L)))
+    assert(Files.exists(Paths.get(lake, "quarantine", "hospital_c_hl7", "a_late_bad.hl7")))
+  }
+
+  test("with an all-nullable JSONL spec, an unparsable line passes scrub verbatim in its place") {
+    val nullable = Seeds.clinicB.copy(fields = Seeds.clinicB.fields.map(_.copy(nullable = true)))
+    val Seq(first, second) = Fixtures.jsonlGood.linesIterator.toSeq
+    val base = Fixtures.tmpDir("srcjlnull")
+    Fixtures.write(base.resolve("clinic_b/good.jsonl"), Fixtures.jsonlGood)
+    Fixtures.write(base.resolve("clinic_b/mixed.jsonl"), Seq(first, "not json", second).mkString("", "\n", "\n"))
+    val lake = Fixtures.tmpDir("lakejlnull").toString
+    val p = new Pipeline(spark, lake, registry = Seq(nullable))
+    p.ingest(base.toString)
+    assert(p.validatePending().map(_._2) == Seq(true, true))
+    assert(p.scrubPending().size == 2)
+    def curated(f: String) = Files.readString(Paths.get(lake, "curated", "clinic_b", f)).split("\n").toSeq
+    val good = curated("good.jsonl")
+    assert(good.size == 2 && good.forall(_.contains("[REDACTED_NAME]")))
+    assert(curated("mixed.jsonl") == Seq(good(0), "not json", good(1)))
+    // every line counts as a row; the unparsable one adds no replacement or rule
+    def stats(f: String): (String, String, Set[String]) = {
+      val id = p.provenance.batchRows.find(_.getAs[String]("raw_file_path").endsWith(f)).get.getAs[String]("batch_id")
+      val details = p.provenance.batchTimeline(id).find(_.getAs[String]("step_name") == "SCRUB_PHI").get
+        .getAs[String]("details_json")
+      def field(k: String) = s""""$k":"(\\d+)"""".r.findFirstMatchIn(details).get.group(1)
+      (field("rows"), field("replacements"), p.provenance.batchRules(id).map(_.getAs[String]("rule_id")).toSet)
+    }
+    val (rows, replacements, rules) = stats("good.jsonl")
+    assert(rows == "2" && rules.contains("PHI_COLUMN_REDACT_NAME"))
+    assert(stats("mixed.jsonl") == (("3", replacements, rules)))
+  }
+
   private def countingPipeline(lake: String): (Pipeline, CountingControlBackend) = {
-    val be = new CountingControlBackend(new ParquetControlBackend(spark, lake))
+    val be = new CountingControlBackend(new ParquetControlBackend(lake))
     (new Pipeline(spark, lake, controlBackend = Some(be)), be)
   }
 

@@ -12,7 +12,7 @@ class ProvenanceSpec extends SparkSpec {
     * through the Provenance API.
     */
   private def backends: Seq[(String, () => ControlBackend)] = Seq(
-    "parquet" -> (() => new ParquetControlBackend(spark, Fixtures.tmpDir("prov").toString)),
+    "parquet" -> (() => new ParquetControlBackend(Fixtures.tmpDir("prov").toString)),
     "in-memory" -> (() => new InMemoryControlBackend),
     "jdbc (embedded derby)" -> (() => new JdbcControlBackend(
       s"jdbc:derby:${Fixtures.tmpDir("derby")}/db;create=true")))
@@ -94,7 +94,7 @@ class ProvenanceSpec extends SparkSpec {
   test("a batched scope writes one parquet file per table; other threads append at once") {
     import java.nio.file.Paths
     val lake = Fixtures.tmpDir("prov").toString
-    val be = new CountingControlBackend(new ParquetControlBackend(spark, lake))
+    val be = new CountingControlBackend(new ParquetControlBackend(lake))
     val p = new Provenance(spark, be)
     def files = graft.util.Fs.list(Paths.get(s"$lake/_control/provenance_batch_events"))
       .count(_.toString.endsWith(".parquet"))
@@ -111,11 +111,28 @@ class ProvenanceSpec extends SparkSpec {
     assert(p.batches.count() == 6)
   }
 
+  test("parquet control files are plain parquet in the control table schema; no temp file is left") {
+    import java.nio.file.Paths
+    val lake = Fixtures.tmpDir("prov").toString
+    val p = new Provenance(spark, new ParquetControlBackend(lake))
+    p.createBatch("b1", "s", "/f1", "h1")
+    p.setRowCount("b1", "VALIDATED", 7L)
+    val events = s"$lake/_control/provenance_batch_events"
+    val df = spark.read.parquet(events)
+    assert(df.schema.map(f => f.name -> f.dataType) ==
+      Provenance.tableSchemas("provenance_batch_events").map(f => f.name -> f.dataType))
+    val rows = df.orderBy("event_time").select("status", "total_rows", "source_name").collect()
+      .map(r => (r.getString(0), r.getLong(1), Option(r.getString(2)))).toSeq
+    assert(rows == Seq(("INGESTED", 0L, Some("s")), ("VALIDATED", 7L, None)))
+    assert(graft.util.Fs.list(Paths.get(events)).map(_.getFileName.toString)
+      .forall(f => f.startsWith("part-") && f.endsWith(".parquet")))
+  }
+
   test("parquet backend auto-compacts past the file threshold, data intact") {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
     val lake = Fixtures.tmpDir("prov").toString
-    val p = new Provenance(spark, new ParquetControlBackend(spark, lake, autoCompactAt = 5))
+    val p = new Provenance(spark, new ParquetControlBackend(lake, autoCompactAt = 5))
     (1 to 12).foreach(i => p.createBatch(s"b$i", "s", s"/f$i", "h"))
     val dir = Paths.get(s"$lake/_control/provenance_batch_events")
     val nFiles = Files.list(dir).iterator().asScala.count(_.toString.endsWith(".parquet"))
@@ -130,7 +147,7 @@ class ProvenanceSpec extends SparkSpec {
   test("a compact that crashed mid-swap is repaired before the next access") {
     import java.nio.file.{Files, Paths}
     val lake = Fixtures.tmpDir("prov").toString
-    val be = new ParquetControlBackend(spark, lake)
+    val be = new ParquetControlBackend(lake)
     val p = new Provenance(spark, be)
     (1 to 3).foreach(i => p.createBatch(s"b$i", "s", s"/f$i", "h"))
     // simulate the crash window: table dir moved to _old, new dir never

@@ -1,8 +1,12 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-import graft.model.Seeds
+import graft.model.{PhiRule, Seeds, SourceSpec}
 import graft.operators.Scrubber
 
 class ScrubberSpec extends SparkSpec {
@@ -96,6 +100,95 @@ class ScrubberSpec extends SparkSpec {
     assert(r.getAs[String]("dob") == "[REDACTED_DATE]")
     assert(r.getAs[String]("notes") == "see [REDACTED_PHONE]")
     assert(r.getAs[Long]("_redactions") == 4L)
+  }
+
+  /** The tabular scrub as one `foldLeft` of the rules per column plus a
+    * `filter` over per-rule flags, each flag re-running its own prefix
+    * of the fold: the reference [[Scrubber.scrubTabular]] must equal.
+    */
+  private def referenceScrub(df: DataFrame, spec: SourceSpec, rules: Seq[PhiRule], byName: Boolean): DataFrame = {
+    def fired(c: Column): Column = {
+      val (_, flags) = rules.foldLeft((c, Seq.empty[Column])) { case ((acc, fs), r) =>
+        val next = regexp_replace(acc, Scrubber.ciPattern(r.pattern), r.replacement)
+        (next, fs :+ when(acc.isNotNull && (next =!= acc), lit(r.ruleId)))
+      }
+      filter(array(flags: _*), x => x.isNotNull)
+    }
+    var redactions: Column = lit(0L)
+    var firedAll: Column = array()
+    val outCols = df.columns.toSeq.map { c =>
+      spec.field(c) match {
+        case Some(f) if f.isPhi =>
+          val token = if (byName) Scrubber.phiTokenByName(c) else Scrubber.phiToken(c, f.dataType)
+          val ruleId = token match {
+            case "[REDACTED_NAME]" => "PHI_COLUMN_REDACT_NAME"
+            case "[REDACTED_DATE]" => "PHI_COLUMN_REDACT_DATE"
+            case _                 => "PHI_COLUMN_REDACT_GENERIC"
+          }
+          redactions = redactions + lit(1L)
+          firedAll = array_union(firedAll, array(lit(ruleId)))
+          lit(token).as(c)
+        case Some(_) =>
+          val v = col(c)
+          val rf = fired(v)
+          redactions = redactions + size(rf).cast(LongType)
+          firedAll = array_union(firedAll, rf)
+          when(v.isNull || v === "", v).otherwise(Scrubber.applyRules(v, rules)).as(c)
+        case None => col(c)
+      }
+    }
+    df.select(outCols :+ redactions.as("_redactions") :+ firedAll.as("_fired_rules"): _*)
+  }
+
+  /** A fuzzed corpus in the shape of `spec` plus one column outside it,
+    * with nulls and empty strings, read back from parquet so the scrub
+    * runs as a compiled plan rather than being folded into a local
+    * relation at planning time.
+    */
+  private def fuzzedFrame(spec: SourceSpec, seed: Int): DataFrame = {
+    val words = Vector("visit", "note", "stable", "111-22-3333", "555-867-5309",
+      "a.b@c.org", "19990101", "2024-12-31", "12 Main Street", "123-45-6789 end", "123456789", "(x)")
+    val rnd = new scala.util.Random(seed)
+    def cell(): String = rnd.nextInt(10) match {
+      case 0 => null
+      case 1 => ""
+      case _ => (1 to 1 + rnd.nextInt(5)).map(_ => words(rnd.nextInt(words.size))).mkString(" ")
+    }
+    val cols = spec.fields.map(_.name) :+ "extra"
+    val rows = (1 to 120).map(_ => Row(cols.map(_ => cell()): _*))
+    val schema = StructType(cols.map(StructField(_, StringType)))
+    val path = Fixtures.tmpDir("scrubfuzz").resolve("t.parquet").toString
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema).write.parquet(path)
+    spark.read.parquet(path)
+  }
+
+  /** Rules of the seed set plus one whose pattern is not a valid regex
+    * (the literal-match fallback).
+    */
+  private val fuzzRules = Seeds.phiRulesV1 :+ PhiRule("PHI_ZZ_LITERAL", "(x", "[X]", "invalid regex")
+
+  test("scrubTabular equals the foldLeft/filter reference on fuzzed corpora") {
+    for ((spec, byName, seed) <- Seq((Seeds.hospitalA, false, 11), (Seeds.clinicB, true, 12))) {
+      val df = fuzzedFrame(spec, seed)
+      val got = Scrubber.scrubTabular(df, spec, fuzzRules, byName).collect().map(_.toSeq).toSeq
+      val want = referenceScrub(df, spec, fuzzRules, byName).collect().map(_.toSeq).toSeq
+      assert(got.size == 120)
+      got.zip(want).foreach { case (g, w) => assert(g == w, spec.name) }
+      assert(got.exists(_.last.asInstanceOf[scala.collection.Seq[String]].contains("PHI_ZZ_LITERAL")))
+    }
+  }
+
+  test("scrubTabular plans no CodegenFallback expression and compiles in whole-stage codegen") {
+    val out = Scrubber.scrubTabular(fuzzedFrame(Seeds.hospitalA, 13), Seeds.hospitalA, fuzzRules)
+    val plan = out.queryExecution.executedPlan
+    val fallbacks = plan.flatMap(_.expressions.flatMap(_.collect { case e: CodegenFallback => e.prettyName }))
+    assert(fallbacks.isEmpty, s"interpreted expressions in the scrub plan: ${fallbacks.distinct}")
+    assert(plan.collectFirst { case w: WholeStageCodegenExec => w }.nonEmpty, plan.toString)
+    // with the fallback off, a whole-stage compile failure throws
+    // instead of quietly running the plan without whole-stage codegen
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try assert(out.collect().length == 120)
+    finally spark.conf.unset("spark.sql.codegen.fallback")
   }
 
   test("HL7 scrub mirrors reference positional semantics exactly") {
