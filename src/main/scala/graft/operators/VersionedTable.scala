@@ -1,11 +1,17 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, NoSuchFileException, Path, Paths, StandardCopyOption}
+import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.io.LocalInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Hudi-semantics versioned table on plain parquet (the image ships no
   * Hudi jars, so this reimplements the reference's surface —
@@ -37,6 +43,14 @@ import org.apache.spark.sql.functions._
   * table. This is the same file-group/commit-timeline idea Hudi uses.
   * The merge itself is one shuffle on recordKey (row_number window)
   * over just the touched buckets' rows.
+  *
+  * Commit metadata is memoized per instance: a complete commit never
+  * changes, so its manifest and the row schema of the files it wrote
+  * are read from disk at most once (the schema from one parquet footer
+  * on the driver, or from the footers a commit reads anyway for its
+  * stamps). Every scan is built with that schema, so no read or commit
+  * launches a schema-inference job, and a read's branch count is
+  * bounded by the distinct schemas its manifest references.
   */
 object VersionedTable {
   /** Executable form of the bucket-sizing guidance: enough buckets to
@@ -55,6 +69,38 @@ object VersionedTable {
     var p = 1L
     while (p < capped) p <<= 1
     p.toInt
+  }
+
+  /** One commit's `manifest.tsv`, the single codec of its format: header
+    * lines `#buckets=<n>` and, on payload-partitioned tables,
+    * `#partcol=<c>`, then one line per live bucket naming the commit that
+    * last wrote it, `bucket \t writer` (v1) or `bucket \t writer \t stamp`
+    * (v2). The stamp is the bucket's exact max(<precombine>) as of its
+    * writing commit, `-` when it holds no non-null value; a v1 line or an
+    * unparsable stamp leaves the bucket out of `stamps` (stat unknown).
+    * `buckets` is None for a pre-header or unparsable header.
+    */
+  private final case class Manifest(buckets: Option[Int], partCol: Option[String],
+      writers: Map[Int, String], stamps: Map[Int, Option[Long]]) {
+    def render: String =
+      (buckets.map(n => s"#buckets=$n").toSeq ++ partCol.map(c => s"#partcol=$c") ++
+        writers.toSeq.sortBy(_._1).map { case (b, c) =>
+          stamps.get(b).fold(s"$b\t$c")(s => s"$b\t$c\t${s.fold("-")(_.toString)}")
+        }).mkString("", "\n", "\n")
+  }
+
+  private object Manifest {
+    def parse(lines: Seq[String]): Manifest = {
+      def header(key: String) =
+        lines.find(_.startsWith(s"#$key=")).map(_.stripPrefix(s"#$key=").trim)
+      val entries = lines.filter(l => l.nonEmpty && !l.startsWith("#")).map(_.split("\t"))
+      Manifest(header("buckets").flatMap(_.toIntOption), header("partcol"),
+        entries.map(p => p(0).toInt -> p(1)).toMap,
+        entries.filter(_.length >= 3).flatMap { p =>
+          if (p(2) == "-") Some(p(0).toInt -> None)
+          else p(2).toLongOption.map(v => p(0).toInt -> Some(v))
+        }.toMap)
+    }
   }
 }
 
@@ -110,10 +156,14 @@ final class VersionedTable(spark: SparkSession, root: String,
     * `data/`). A dir with `data/` but no manifest is a crashed upsert —
     * it must be ignored, NOT read as a legacy snapshot: its data/ holds
     * only the touched buckets, and treating that partial write as the
-    * whole table would silently drop every other bucket.
+    * whole table would silently drop every other bucket. A dir holding
+    * neither (a commit that died before its data, or while publishing
+    * its manifest's temp file) is no commit either.
     */
   private def isComplete(ts: String): Boolean =
-    Files.exists(manifestPath(ts)) || !Files.isDirectory(Paths.get(s"$root/$ts/data"))
+    manifests.contains(ts) || Files.exists(manifestPath(ts)) ||
+      (!Files.isDirectory(Paths.get(s"$root/$ts/data")) &&
+        graft.util.Fs.list(Paths.get(s"$root/$ts")).exists(isParquet))
 
   private def commitDirs: Seq[String] = commitDirsAll.filter(isComplete)
 
@@ -128,25 +178,81 @@ final class VersionedTable(spark: SparkSession, root: String,
       .map(last => (last.toLong + 1).toString).getOrElse(base)
   }
 
-  // ---- manifest: bucket -> commit that last wrote it ----
+  // ---- commit metadata, memoized per instance ----
+  //
+  // A complete commit never changes, so its parsed manifest and the row
+  // schema of the files it wrote are kept by commit id. Only a manifest
+  // that exists is memoized: an absent one may be a commit still in
+  // flight. A manifest is published with an atomic move, so a reader
+  // never parses (and memoizes) a torn one.
+
+  private val manifests = TrieMap.empty[String, VersionedTable.Manifest]
+  private val schemas = TrieMap.empty[String, StructType]
 
   private def manifestPath(ts: String) = Paths.get(s"$root/$ts/manifest.tsv")
 
-  private def readManifest(ts: String): Map[Int, String] =
-    if (!Files.exists(manifestPath(ts))) Map.empty
-    else Files.readAllLines(manifestPath(ts)).asScala
-      .filter(l => l.nonEmpty && !l.startsWith("#")).map { line =>
-        val parts = line.split("\t")
-        parts(0).toInt -> parts(1)
-      }.toMap
+  /** The commit's manifest, or None for a legacy or incomplete dir. */
+  private def manifest(ts: String): Option[VersionedTable.Manifest] =
+    manifests.get(ts).orElse {
+      try {
+        val m = VersionedTable.Manifest.parse(Files.readAllLines(manifestPath(ts)).asScala.toSeq)
+        manifests.put(ts, m)
+        Some(m)
+      } catch { case _: NoSuchFileException => None }
+    }
+
+  /** Bucket → writer map of a commit (empty for a legacy snapshot). */
+  private def writersOf(ts: String): Map[Int, String] =
+    manifest(ts).fold(Map.empty[Int, String])(_.writers)
+
+  private def isParquet(p: Path) = p.getFileName.toString.endsWith(".parquet")
+
+  private def parquetFiles(dir: String): Seq[Path] =
+    graft.util.Fs.list(Paths.get(dir)).filter(isParquet).sortBy(_.toString)
+
+  /** A parquet file's footer, read on the driver. */
+  private def footer(f: Path): ParquetMetadata = {
+    val r = ParquetFileReader.open(new LocalInputFile(f))
+    try r.getFooter finally r.close()
+  }
+
+  /** The row schema of a parquet file as a `spark.read.parquet`
+    * inference job gives it: Spark's own row schema from the footer key
+    * `org.apache.spark.sql.parquet.row.metadata`, else Spark's conversion
+    * of the parquet schema, then made nullable throughout, as Spark makes
+    * every file source's data schema. Commits that differ only in
+    * nullability (a first write from non-nullable literals, say) thus
+    * share one scan.
+    */
+  private def schemaOf(file: Path, meta: ParquetMetadata): StructType =
+    nullable(ParquetFileFormat.readSchemaFromFooter(
+      new Footer(new org.apache.hadoop.fs.Path(file.toUri), meta),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))).asInstanceOf[StructType]
+
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
+  }
+
+  /** Row schema of the files commit `ts` wrote (one write, one schema),
+    * from the first footer under `dir`, one of its bucket directories.
+    */
+  private def writerSchema(ts: String, dir: String): StructType =
+    schemas.getOrElseUpdate(ts, {
+      val f = parquetFiles(dir).headOption.getOrElse(
+        sys.error(s"commit $ts references $dir, which holds no parquet file"))
+      schemaOf(f, footer(f))
+    })
 
   // ---- per-bucket precombine stamp stats (r17 optimization) --------
   //
-  // Manifest line format v2: `bucket \t commit \t stamp`, where stamp
-  // is the bucket's EXACT max(<precombine>) as of its writing commit
-  // ("-" when the bucket holds no non-null precombine value). v1
-  // two-field lines read as "stamp unknown" and simply disable the
-  // stat for the table until every bucket rewrites — full back-compat.
+  // The v2 manifest stamp (see [[VersionedTable.Manifest]]) is the
+  // bucket's EXACT max(<precombine>) as of its writing commit. v1
+  // two-field lines read as "stamp unknown" and simply disable the stat
+  // for the table until every bucket rewrites — full back-compat.
   // The stamps come from the parquet FOOTER statistics of the files
   // each commit just wrote (driver-side metadata reads, zero Spark
   // jobs), and carried-forward buckets carry their stamp with them, so
@@ -157,77 +263,41 @@ final class VersionedTable(spark: SparkSession, root: String,
   // driver term in the maintenance gates (VERDICT r16 item 1a): the
   // per-ingest maintainClusters floor was a full-table columnar scan.
 
-  /** Stamps of the lines that carry one (known buckets only; a line
-    * without a stamp field is simply absent here).
+  /** Exact max(<precombine>) over one bucket's parquet footers, from
+    * their statistics alone — no Spark job. Returns None when the stat
+    * cannot be trusted (missing/untyped stats, a non-integer precombine
+    * column): the caller then writes a stampless line and consumers fall
+    * back to the agg. Some(None) means "known: no non-null precombine
+    * values".
     */
-  private def readManifestStamps(ts: String): Map[Int, Option[Long]] =
-    if (!Files.exists(manifestPath(ts))) Map.empty
-    else Files.readAllLines(manifestPath(ts)).asScala
-      .filter(l => l.nonEmpty && !l.startsWith("#")).flatMap { line =>
-        val parts = line.split("\t")
-        if (parts.length < 3) None
-        else if (parts(2) == "-") Some(parts(0).toInt -> None)
-        else scala.util.Try(parts(2).toLong).toOption
-          .map(v => parts(0).toInt -> Some(v))
-      }.toMap
-
-  /** Exact max(<precombine>) over one bucket directory's parquet files,
-    * from their footer statistics alone — no Spark job. Returns
-    * None when the stat cannot be trusted (missing/untyped stats, a
-    * non-integer precombine column, or an IO error): the caller then
-    * writes a stampless line and consumers fall back to the agg.
-    * Some(None) means "known: no non-null precombine values".
-    */
-  private def bucketStampFromFooters(dir: String): Option[Option[Long]] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
+  private def stampOf(fs: Seq[ParquetMetadata]): Option[Option[Long]] =
     try {
-      val files = graft.util.Fs.list(Paths.get(dir))
-        .filter(_.getFileName.toString.endsWith(".parquet"))
       var best: Option[Long] = None
-      for (f <- files) {
-        val in = HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f.toString),
-          spark.sparkContext.hadoopConfiguration)
-        val r = ParquetFileReader.open(in)
-        try {
-          val blocks = r.getFooter.getBlocks.asScala
-          for (blk <- blocks) {
-            blk.getColumns.asScala
-              .find(_.getPath.toDotString == precombine) match {
-              case None =>
-                // column absent from this file (possible only across
-                // schema evolution) — contributes no values, which is
-                // exactly what agg(max) would see (nulls)
-                ()
-              case Some(cc) =>
-                val st = cc.getStatistics
-                if (st == null) return None
-                if (st.hasNonNullValue) {
-                  val mx = st.genericGetMax match {
-                    case n: java.lang.Number => n.longValue()
-                    case _ => return None // non-integer precombine
-                  }
-                  best = Some(best.fold(mx)(math.max(_, mx)))
-                } else if (!(st.isNumNullsSet && st.getNumNulls == blk.getRowCount)) {
-                  // no min/max AND we cannot prove the block is
-                  // all-null → stats were not gathered; distrust
-                  if (blk.getRowCount > 0) return None
-                }
+      for (f <- fs; blk <- f.getBlocks.asScala) {
+        blk.getColumns.asScala.find(_.getPath.toDotString == precombine) match {
+          case None =>
+            // column absent from this file (possible only across
+            // schema evolution) — contributes no values, which is
+            // exactly what agg(max) would see (nulls)
+            ()
+          case Some(cc) =>
+            val st = cc.getStatistics
+            if (st == null) return None
+            if (st.hasNonNullValue) {
+              val mx = st.genericGetMax match {
+                case n: java.lang.Number => n.longValue()
+                case _ => return None // non-integer precombine
+              }
+              best = Some(best.fold(mx)(math.max(_, mx)))
+            } else if (!(st.isNumNullsSet && st.getNumNulls == blk.getRowCount)) {
+              // no min/max AND we cannot prove the block is
+              // all-null → stats were not gathered; distrust
+              if (blk.getRowCount > 0) return None
             }
-          }
-        } finally r.close()
+        }
       }
       Some(best)
     } catch { case _: Exception => None }
-  }
-
-  /** Footer stamps for the buckets a commit just wrote (known entries
-    * only — an untrusted stat yields a stampless manifest line).
-    */
-  private def writtenStamps(ts: String, written: Seq[Int]): Map[Int, Option[Long]] =
-    written.flatMap(b =>
-      bucketStampFromFooters(bucketPath(b, ts)).map(b -> _)).toMap
 
   /** EXACT table-wide max(<precombine>) over the current snapshot,
     * derived from manifest stamp stats alone — no Spark job, no table
@@ -239,35 +309,9 @@ final class VersionedTable(spark: SparkSession, root: String,
     * each written wholesale by its referencing commit with its stamp
     * recorded from the written files' footers at commit time.
     */
-  def maxPrecombineStat: Option[Option[Long]] = commitDirs.lastOption.flatMap { ts =>
-    val m = readManifest(ts)
-    if (m.isEmpty) None // legacy pre-bucketing snapshot
-    else {
-      val st = readManifestStamps(ts)
-      if (!m.keySet.forall(st.contains)) None
-      else Some(st.values.flatten.reduceOption((a, b) => math.max(a, b)))
-    }
-  }
-
-  /** Bucket count recorded in a commit's manifest header (None for
-    * pre-header or unparsable manifests — the guard then simply
-    * doesn't fire rather than crashing on a mangled header).
-    */
-  private def readBucketCount(ts: String): Option[Int] =
-    if (!Files.exists(manifestPath(ts))) None
-    else Files.readAllLines(manifestPath(ts)).asScala
-      .find(_.startsWith("#buckets="))
-      .flatMap(l => scala.util.Try(l.stripPrefix("#buckets=").trim.toInt).toOption)
-
-  /** Partition column recorded in a commit's manifest header — None
-    * for record-key-bucketed tables (the header is simply absent, so
-    * pre-r16 manifests read correctly as key-bucketed).
-    */
-  private def readPartCol(ts: String): Option[String] =
-    if (!Files.exists(manifestPath(ts))) None
-    else Files.readAllLines(manifestPath(ts)).asScala
-      .find(_.startsWith("#partcol="))
-      .map(_.stripPrefix("#partcol=").trim)
+  def maxPrecombineStat: Option[Option[Long]] = commitDirs.lastOption.flatMap(manifest)
+    .filter(m => m.writers.nonEmpty && m.writers.keySet.forall(m.stamps.contains))
+    .map(_.stamps.values.flatten.reduceOption((a, b) => math.max(a, b)))
 
   /** Shared open-guard for every mutating path: bucket count AND
     * partition column are persisted layout — opening with either
@@ -275,37 +319,39 @@ final class VersionedTable(spark: SparkSession, root: String,
     * into buckets the old manifest doesn't cover and silently unmerge
     * them.
     */
-  private def requireLayoutMatches(prev: String): Unit = {
-    readBucketCount(prev).foreach { stored =>
+  private def requireLayoutMatches(prev: String): Unit = manifest(prev).foreach { m =>
+    m.buckets.foreach { stored =>
       require(stored == numBuckets,
         s"table at $root was written with numBuckets=$stored, opened with $numBuckets")
     }
-    if (Files.exists(manifestPath(prev))) {
-      val stored = readPartCol(prev)
-      require(stored == partitionColOpt,
-        s"table at $root was written with partitionCol=$stored, " +
-          s"opened with $partitionColOpt")
-    }
+    require(m.partCol == partitionColOpt,
+      s"table at $root was written with partitionCol=${m.partCol}, " +
+        s"opened with $partitionColOpt")
   }
 
-  /** `stamps`: per-bucket max(<precombine>) stat for the v2 line
-    * format (see above) — a bucket absent from it writes a stampless
-    * v1 line (stat unknown). Carried-forward buckets must carry their
-    * previous stamp; written buckets get footer-derived ones.
+  /** Publish commit `ts` with bucket → writer map `writers`: one footer
+    * pass over the buckets it `written` gives their stamps and the
+    * commit's row schema; every other bucket carries its stamp from
+    * `prev`. The manifest goes to a hidden temp file in the commit dir
+    * and is moved into place atomically, so a reader sees all of it or
+    * none (the commit is complete from that moment); this instance then
+    * memoizes both without reading them back.
     */
-  private def writeManifest(ts: String, m: Map[Int, String],
-      stamps: Map[Int, Option[Long]] = Map.empty): Unit = {
-    Files.createDirectories(manifestPath(ts).getParent)
-    val headers = s"#buckets=$numBuckets" +:
-      partitionColOpt.map(c => s"#partcol=$c").toSeq
-    Files.writeString(manifestPath(ts),
-      (headers ++
-        m.toSeq.sortBy(_._1).map { case (b, c) =>
-          stamps.get(b) match {
-            case Some(s) => s"$b\t$c\t${s.map(_.toString).getOrElse("-")}"
-            case None => s"$b\t$c"
-          }
-        }).mkString("", "\n", "\n"))
+  private def publish(ts: String, writers: Map[Int, String], written: Seq[Int],
+      prev: Option[String]): Unit = {
+    val read = written.map(b => b -> parquetFiles(bucketPath(b, ts)).map(f => f -> footer(f)))
+    val carried = prev.flatMap(manifest).fold(Map.empty[Int, Option[Long]])(_.stamps)
+    val stamps = ((carried -- written) ++
+      read.flatMap { case (b, fs) => stampOf(fs.map(_._2)).map(b -> _) })
+      .filter(kv => writers.contains(kv._1))
+    val m = VersionedTable.Manifest(Some(numBuckets), partitionColOpt, writers, stamps)
+    val tmp = Paths.get(s"$root/$ts/.manifest.tsv.tmp")
+    Files.writeString(tmp, m.render)
+    Files.move(tmp, manifestPath(ts), StandardCopyOption.ATOMIC_MOVE)
+    read.iterator.flatMap(_._2).nextOption().foreach { case (f, meta) =>
+      schemas.put(ts, schemaOf(f, meta))
+    }
+    manifests.put(ts, m)
   }
 
   private def bucketPath(b: Int, commit: String) = s"$root/$commit/data/$BucketCol=$b"
@@ -323,30 +369,36 @@ final class VersionedTable(spark: SparkSession, root: String,
     * a manifest-less commit dir is read as a plain parquet snapshot).
     */
   private def readCommit(ts: String): DataFrame = {
-    val m = readManifest(ts)
+    val m = writersOf(ts)
     if (m.isEmpty) spark.read.parquet(s"$root/$ts")
     else readGrouped(m)
   }
 
   /** Manifest-driven read with SCHEMA EVOLUTION across commits: bucket
-    * files are grouped by their writing commit (files inside one commit
-    * share a schema) and the groups are unioned by name with implicit
-    * up-cast coercion — a column a later commit ADDED null-fills on
-    * pre-evolution rows, and a column a later commit WIDENED (int→long,
-    * the union's wider common type) reads as the wide type table-wide.
-    * Plain parquet `mergeSchema` refuses mixed int/long files outright,
-    * so the union-of-groups IS the widening read path. Groups are
-    * unioned oldest-writer-first so the oldest schema anchors column
-    * order and evolved columns append. Scans stay manifest-pruned and
-    * filters/pruning push into every branch; the branch count is
-    * bounded by the distinct writer commits a manifest references,
-    * which [[clean]] keeps small.
+    * files are grouped by the memoized row schema of their writing
+    * commit (files inside one commit share a schema), each group is ONE
+    * scan built with that schema, and the groups are unioned by name
+    * with implicit up-cast coercion — a column a later commit ADDED
+    * null-fills on pre-evolution rows, and a column a later commit
+    * WIDENED (int→long, the union's wider common type) reads as the
+    * wide type table-wide. Plain parquet `mergeSchema` refuses mixed
+    * int/long files outright, so the union-of-groups IS the widening
+    * read path. Groups are unioned in the order of their oldest writer
+    * commit, so the oldest schema anchors column order and evolved
+    * columns append. Scans stay manifest-pruned and filters/pruning
+    * push into every branch; the branch count is bounded by the
+    * distinct schemas a manifest references (one scan on a table that
+    * never evolved).
     */
-  private def readGrouped(m: Map[Int, String]): DataFrame =
-    m.toSeq.groupBy(_._2).toSeq.sortBy(_._1)
-      .map { case (c, kvs) =>
-        spark.read.parquet(kvs.map(kv => bucketPath(kv._1, c)).sorted: _*) }
+  private def readGrouped(m: Map[Int, String]): DataFrame = {
+    val byWriter = m.toSeq.groupBy(_._2).toSeq.sortBy(_._1).map { case (c, kvs) =>
+      val paths = kvs.map(kv => bucketPath(kv._1, c)).sorted
+      writerSchema(c, paths.head) -> paths
+    }
+    byWriter.map(_._1).distinct
+      .map(s => spark.read.schema(s).parquet(byWriter.filter(_._1 == s).flatMap(_._2): _*))
       .reduce(_.unionByName(_, allowMissingColumns = true))
+  }
 
   /** COW upsert: touched buckets' latest rows ⟕ updates, keep
     * max-precombine row per key; on precombine ties the incoming
@@ -354,7 +406,7 @@ final class VersionedTable(spark: SparkSession, root: String,
     * precombine values. Buckets the update doesn't touch are carried
     * forward by manifest reference — zero data movement.
     */
-  def upsert(updates0: DataFrame): String = upsertInternal(updates0, None)
+  def upsert(updates0: DataFrame): String = merge("upsert", None, updates0, None)
 
   /** [[upsert]] for updates that MOVE rows across partitions — the
     * partition-scoped-index escape hatch (see the class doc): `oldValues`
@@ -368,96 +420,7 @@ final class VersionedTable(spark: SparkSession, root: String,
     * unconditionally when old values are at hand.
     */
   def upsertMoved(updates0: DataFrame, oldValues: DataFrame): String =
-    upsertInternal(updates0, Some(oldValues))
-
-  private def upsertInternal(updates0: DataFrame,
-      extraProbe: Option[DataFrame]): String = {
-    val ts = newCommitTs()
-    val prev = commitDirs.lastOption
-    prev.foreach(requireLayoutMatches)
-    val prevManifest = prev.map(readManifest).getOrElse(Map.empty[Int, String])
-    // a manifest-less previous commit is a legacy (pre-bucketing)
-    // snapshot: fold the WHOLE snapshot into this commit — treating it
-    // as empty would silently drop every pre-existing row
-    val legacyPrev = prev.filterNot(_ => prevManifest.nonEmpty)
-    // incoming rows are stamped with this commit; carried rows keep the
-    // commit that last wrote them (Hudi per-record _hoodie_commit_time
-    // semantics — rewritten-but-unchanged rows don't advance), which is
-    // what makes [[incremental]] reads record-accurate.
-    val tagged = updates0.withColumn("_is_update", lit(1)).withColumn(CommitCol, lit(ts))
-    // The updates plan is evaluated twice: a cheap column-pruned probe
-    // for the touched buckets, then the merged write. For a
-    // NON-deterministic plan the two could diverge — writing a bucket
-    // the probe never read would silently shadow its history — so the
-    // written set is verified against the probe below and the commit
-    // aborted on divergence (explicit error instead of data loss;
-    // callers with non-deterministic sources should checkpoint first).
-    var touchedProbe: Option[Set[Int]] = None
-    val prevData: Option[DataFrame] = legacyPrev match {
-      case Some(legacy) => Some(spark.read.parquet(s"$root/$legacy"))
-      case None =>
-        // the probe is the DISTINCT bucket ids of the incoming rows'
-        // bucket-column values (≤ numBuckets longs — bounded collect),
-        // plus, for a move-aware upsert, the buckets of the old values
-        val touched = (updates0.select(bucketExpr.as("b")) +:
-            extraProbe.map(_.select(bucketExpr.as("b"))).toSeq)
-          .reduce(_.unionAll(_)).distinct()
-          .collect().map(_.getLong(0).toInt).toSet
-        touchedProbe = Some(touched)
-        val touchedM = prevManifest.filter { case (b, _) => touched(b) }
-        if (touchedM.isEmpty) None else Some(readGrouped(touchedM))
-    }
-    val merged = prevData match {
-      case None => tagged
-      case Some(p) => p.withColumn("_is_update", lit(0))
-        .unionByName(tagged, allowMissingColumns = true)
-    }
-    val w = Window.partitionBy(col(recordKey))
-      .orderBy(col(precombine).desc, col("_is_update").desc)
-    val deduped = merged.withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1).drop("_rn", "_is_update")
-      .withColumn(BucketCol, bucketExpr)
-    // cluster rows by bucket before the partitioned write: the merge
-    // window shuffles on recordKey, which spreads every bucket across
-    // every task — writing from that layout fans out to (tasks ×
-    // touched buckets) small files per commit. One extra shuffle of
-    // just the touched rows gives ~one file per bucket, the Hudi
-    // file-group layout the ≤1 GB/bucket sizing guidance assumes.
-    // Width = the TOUCHED bucket count, not the table's (r16): a
-    // 10-bucket maintenance commit on a 2048-bucket table otherwise
-    // launches 2048 near-empty write tasks — measured dominating
-    // small-commit latency 3x in the takedownlake2 probe.
-    val writeWidth = touchedProbe.map(t => math.min(numBuckets,
-      math.max(1, t.size))).getOrElse(numBuckets)
-    deduped.repartition(writeWidth, col(BucketCol))
-      .write.mode("overwrite").partitionBy(BucketCol).parquet(s"$root/$ts/data")
-    // manifest = buckets this commit actually wrote (listed from disk,
-    // so legacy fold-ins and normal touched-bucket commits take the
-    // same path) over the carried-forward previous entries
-    val written = writtenBuckets(ts)
-    touchedProbe.foreach { touched =>
-      val unexpected = written.toSet -- touched
-      if (unexpected.nonEmpty) {
-        graft.util.Fs.deleteRecursively(Paths.get(s"$root/$ts"))
-        sys.error(s"upsert aborted: updates wrote buckets $unexpected the probe " +
-          "never read — the updates plan is non-deterministic; checkpoint it first")
-      }
-    }
-    // a probed bucket the merge did NOT write back has no surviving
-    // rows (possible only under payload partitioning, when every row
-    // MOVED out) — keeping its old manifest entry would resurrect the
-    // moved rows from the stale file, so it falls out like delete's
-    // emptied buckets
-    val emptied = touchedProbe.getOrElse(Set.empty)
-      .filter(prevManifest.contains) -- written.toSet
-    // carried buckets keep their stamp; rewritten ones get fresh
-    // footer-derived stats (a stale carried stamp for a rewritten
-    // bucket would silently overestimate the floor)
-    val carried = prev.map(readManifestStamps).getOrElse(Map.empty)
-    writeManifest(ts, (prevManifest -- emptied) ++ written.map(_ -> ts),
-      (carried -- written) ++ writtenStamps(ts, written))
-    ts
-  }
+    merge("upsert", None, updates0, Some(oldValues))
 
   /** COW delete (Hudi `delete` operation): remove every row whose
     * `recordKey` appears in `keys0` (any frame with that column; extra
@@ -481,16 +444,11 @@ final class VersionedTable(spark: SparkSession, root: String,
     val prev = commitDirs.lastOption.getOrElse(
       sys.error(s"delete on $root: table has no commits"))
     requireLayoutMatches(prev)
-    val prevManifest = readManifest(prev)
+    val prevManifest = writersOf(prev)
     // under payload partitioning the keys frame must also carry the
     // partition column (the rows' CURRENT values) — the probe hashes
     // it to find the buckets the doomed rows live in
-    partitionColOpt.foreach { pc =>
-      require(keys0.columns.contains(pc),
-        s"delete on a $pc-partitioned table needs the keys frame to " +
-          s"carry $pc (the rows' current values) for bucket pruning")
-    }
-    val keys = keys0.select(col(recordKey)).distinct()
+    requireCarriesPartCol("delete", keys0)
     // legacy (pre-bucketing) snapshot: fold the whole table, like upsert
     val (prevData, probed): (Option[DataFrame], Set[Int]) =
       if (prevManifest.isEmpty) (Some(spark.read.parquet(s"$root/$prev")), Set.empty)
@@ -501,34 +459,20 @@ final class VersionedTable(spark: SparkSession, root: String,
         val liveM = prevManifest.filter { case (b, _) => live(b) }
         (if (liveM.isEmpty) None else Some(readGrouped(liveM)), live)
       }
-    var survOpt: Option[DataFrame] = None
-    val written: Seq[Int] = prevData match {
+    val surv = prevData.map(pd => withoutKeys(pd, keys0).withColumn(BucketCol, bucketExpr))
+    val written: Seq[Int] = surv match {
       case None => Seq.empty
-      case Some(pd) =>
-        val surv = pd.join(keys.toDF("_del_key"),
-            pd(recordKey) <=> col("_del_key"), "left_anti")
-          .withColumn(BucketCol, bucketExpr)
-        survOpt = Some(surv)
+      case Some(s) =>
         // width = touched buckets (see upsert): a key-set delete only
         // rewrites the probed buckets
         val writeWidth =
           if (probed.isEmpty) numBuckets // legacy fold-in
           else math.min(numBuckets, math.max(1, probed.size))
-        surv.repartition(writeWidth, col(BucketCol))
+        s.repartition(writeWidth, col(BucketCol))
           .write.mode("overwrite").partitionBy(BucketCol).parquet(s"$root/$ts/data")
         writtenBuckets(ts)
     }
-    val emptied = probed -- written.toSet
-    val newManifest = (prevManifest -- emptied) ++ written.map(_ -> ts)
-    val carried = readManifestStamps(prev)
-    if (newManifest.isEmpty) {
-      // every row deleted: a manifest that references nothing would make
-      // the snapshot schema unrecoverable — keep one empty bucket file
-      survOpt.get.limit(0).drop(BucketCol)
-        .write.mode("overwrite").parquet(bucketPath(0, ts))
-      writeManifest(ts, Map(0 -> ts), writtenStamps(ts, Seq(0)))
-    } else writeManifest(ts, newManifest,
-      (carried -- written) ++ writtenStamps(ts, written))
+    publishRewrite(ts, Some(prev), probed, written, surv.get)
     ts
   }
 
@@ -552,29 +496,58 @@ final class VersionedTable(spark: SparkSession, root: String,
     */
   def applyDelta(deleteKeys0: DataFrame, updates0: DataFrame,
       oldValues: Option[DataFrame] = None): String = {
+    requireCarriesPartCol("applyDelta", deleteKeys0)
+    merge("applyDelta", Some(deleteKeys0), updates0, oldValues)
+  }
+
+  private def requireCarriesPartCol(op: String, keys: DataFrame): Unit =
+    partitionColOpt.foreach { pc =>
+      require(keys.columns.contains(pc),
+        s"$op on a $pc-partitioned table needs the keys frame to " +
+          s"carry $pc (the rows' current values) for bucket pruning")
+    }
+
+  /** `rows` without those whose record key appears in `keys` (null-safe). */
+  private def withoutKeys(rows: DataFrame, keys: DataFrame): DataFrame =
+    rows.join(keys.select(col(recordKey)).distinct().toDF("_del_key"),
+      rows(recordKey) <=> col("_del_key"), "left_anti")
+
+  /** The merge commit of [[upsert]], [[upsertMoved]] and [[applyDelta]]:
+    * the touched buckets' rows, minus `deleteKeys0`'s keys, ⟕ the
+    * updates under the precombine window, written back bucket by bucket.
+    */
+  private def merge(op: String, deleteKeys0: Option[DataFrame], updates0: DataFrame,
+      extraProbe: Option[DataFrame]): String = {
     val ts = newCommitTs()
     val prev = commitDirs.lastOption
     prev.foreach(requireLayoutMatches)
-    val prevManifest = prev.map(readManifest).getOrElse(Map.empty[Int, String])
+    val prevManifest = prev.fold(Map.empty[Int, String])(writersOf)
+    // a manifest-less previous commit is a legacy (pre-bucketing)
+    // snapshot: fold the WHOLE snapshot into this commit — treating it
+    // as empty would silently drop every pre-existing row
     val legacyPrev = prev.filterNot(_ => prevManifest.nonEmpty)
-    partitionColOpt.foreach { pc =>
-      require(deleteKeys0.columns.contains(pc),
-        s"applyDelta on a $pc-partitioned table needs the delete-keys " +
-          s"frame to carry $pc (the rows' current values) for bucket pruning")
-    }
-    val delKeys = deleteKeys0.select(col(recordKey)).distinct()
-    val tagged = updates0.withColumn("_is_update", lit(1))
-      .withColumn(CommitCol, lit(ts))
+    // incoming rows are stamped with this commit; carried rows keep the
+    // commit that last wrote them (Hudi per-record _hoodie_commit_time
+    // semantics — rewritten-but-unchanged rows don't advance), which is
+    // what makes [[incremental]] reads record-accurate.
+    val tagged = updates0.withColumn("_is_update", lit(1)).withColumn(CommitCol, lit(ts))
+    // The input plans are evaluated twice: a cheap column-pruned probe
+    // for the touched buckets, then the merged write. For a
+    // NON-deterministic plan the two could diverge — writing a bucket
+    // the probe never read would silently shadow its history — so the
+    // written set is verified against the probe below and the commit
+    // aborted on divergence (explicit error instead of data loss;
+    // callers with non-deterministic sources should checkpoint first).
     var touchedProbe: Option[Set[Int]] = None
     val prevData: Option[DataFrame] = legacyPrev match {
       case Some(legacy) => Some(spark.read.parquet(s"$root/$legacy"))
       case None =>
-        // ONE probe over every frame that names a bucket: update rows,
-        // doomed keys, and (for moves) the old partition values
-        val touched = (updates0.select(bucketExpr.as("b")) +:
-            deleteKeys0.select(bucketExpr.as("b")) +:
-            oldValues.map(_.select(bucketExpr.as("b"))).toSeq)
-          .reduce(_.unionAll(_)).distinct()
+        // ONE probe over every frame that names a bucket: the update
+        // rows, the doomed keys, and (for moves) the old partition
+        // values — DISTINCT bucket ids, ≤ numBuckets longs, a bounded
+        // collect
+        val touched = (updates0 +: (deleteKeys0 ++ extraProbe).toSeq)
+          .map(_.select(bucketExpr.as("b"))).reduce(_.unionAll(_)).distinct()
           .collect().map(_.getLong(0).toInt).toSet
         touchedProbe = Some(touched)
         val touchedM = prevManifest.filter { case (b, _) => touched(b) }
@@ -585,9 +558,7 @@ final class VersionedTable(spark: SparkSession, root: String,
       case Some(p) =>
         // delete BEFORE the merge window — the stored copy of a doomed
         // key must not survive via precombine
-        p.join(delKeys.toDF("_del_key"),
-            p(recordKey) <=> col("_del_key"), "left_anti")
-          .withColumn("_is_update", lit(0))
+        deleteKeys0.fold(p)(withoutKeys(p, _)).withColumn("_is_update", lit(0))
           .unionByName(tagged, allowMissingColumns = true)
     }
     val w = Window.partitionBy(col(recordKey))
@@ -595,32 +566,54 @@ final class VersionedTable(spark: SparkSession, root: String,
     val deduped = merged.withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1).drop("_rn", "_is_update")
       .withColumn(BucketCol, bucketExpr)
+    // cluster rows by bucket before the partitioned write: the merge
+    // window shuffles on recordKey, which spreads every bucket across
+    // every task — writing from that layout fans out to (tasks ×
+    // touched buckets) small files per commit. One extra shuffle of
+    // just the touched rows gives ~one file per bucket, the Hudi
+    // file-group layout the ≤1 GB/bucket sizing guidance assumes.
+    // Width = the TOUCHED bucket count, not the table's (r16): a
+    // 10-bucket maintenance commit on a 2048-bucket table otherwise
+    // launches 2048 near-empty write tasks — measured dominating
+    // small-commit latency 3x in the takedownlake2 probe.
     val writeWidth = touchedProbe.map(t => math.min(numBuckets,
       math.max(1, t.size))).getOrElse(numBuckets)
     deduped.repartition(writeWidth, col(BucketCol))
       .write.mode("overwrite").partitionBy(BucketCol).parquet(s"$root/$ts/data")
+    // buckets this commit actually wrote, listed from disk, so legacy
+    // fold-ins and normal touched-bucket commits take the same path
     val written = writtenBuckets(ts)
     touchedProbe.foreach { touched =>
       val unexpected = written.toSet -- touched
       if (unexpected.nonEmpty) {
         graft.util.Fs.deleteRecursively(Paths.get(s"$root/$ts"))
-        sys.error(s"applyDelta aborted: inputs wrote buckets $unexpected the " +
-          "probe never read — a plan is non-deterministic; checkpoint it first")
+        sys.error(s"$op aborted: inputs wrote buckets $unexpected the probe " +
+          "never read — a plan is non-deterministic; checkpoint it first")
       }
     }
-    val emptied = touchedProbe.getOrElse(Set.empty)
-      .filter(prevManifest.contains) -- written.toSet
-    val newManifest = (prevManifest -- emptied) ++ written.map(_ -> ts)
-    val carried = prev.map(readManifestStamps).getOrElse(Map.empty)
-    if (newManifest.isEmpty) {
-      // every row deleted and nothing upserted: keep one empty bucket
-      // file so the snapshot schema stays recoverable (delete's guard)
-      deduped.limit(0).drop(BucketCol)
-        .write.mode("overwrite").parquet(bucketPath(0, ts))
-      writeManifest(ts, Map(0 -> ts), writtenStamps(ts, Seq(0)))
-    } else writeManifest(ts, newManifest,
-      (carried -- written) ++ writtenStamps(ts, written))
+    publishRewrite(ts, prev, touchedProbe.getOrElse(Set.empty), written, deduped)
     ts
+  }
+
+  /** Publish a commit that rewrote `written` of the `probed` buckets:
+    * written buckets point at `ts`, and a probed bucket it did NOT
+    * write back has no surviving rows (deleted, or under payload
+    * partitioning every row MOVED out) — keeping its old manifest entry
+    * would resurrect them from the stale file, so it falls out. A
+    * commit left with no bucket keeps one empty bucket file in `rows`'
+    * schema: a manifest that references nothing would make the snapshot
+    * schema unrecoverable.
+    */
+  private def publishRewrite(ts: String, prev: Option[String], probed: Set[Int],
+      written: Seq[Int], rows: => DataFrame): Unit = {
+    val prevManifest = prev.fold(Map.empty[Int, String])(writersOf)
+    val emptied = probed.filter(prevManifest.contains) -- written
+    val writers = (prevManifest -- emptied) ++ written.map(_ -> ts)
+    if (writers.nonEmpty) publish(ts, writers, written, prev)
+    else {
+      rows.limit(0).drop(BucketCol).write.mode("overwrite").parquet(bucketPath(0, ts))
+      publish(ts, Map(0 -> ts), Seq(0), prev)
+    }
   }
 
   /** [[applyDelta]] with the write sets PINNED here (r16): upserts and
@@ -670,7 +663,7 @@ final class VersionedTable(spark: SparkSession, root: String,
     */
   def diff(tsA: String, tsB: String): DataFrame = {
     val dirA = resolveCommit(tsA); val dirB = resolveCommit(tsB)
-    val mA = readManifest(dirA); val mB = readManifest(dirB)
+    val mA = writersOf(dirA); val mB = writersOf(dirB)
     // manifest pruning: a bucket whose manifests reference the SAME
     // writing commit holds byte-identical files on both sides — it
     // cannot contribute a change row, so only buckets whose references
@@ -682,7 +675,7 @@ final class VersionedTable(spark: SparkSession, root: String,
     // file groups" — the same bucket-granularity COW argument as
     // upsert.
     val prunable = mA.nonEmpty && mB.nonEmpty && {
-      val (ba, bb) = (readBucketCount(dirA), readBucketCount(dirB))
+      val (ba, bb) = (manifest(dirA).flatMap(_.buckets), manifest(dirB).flatMap(_.buckets))
       ba.isDefined && ba == bb
     }
     val (a, b) =
@@ -802,8 +795,7 @@ final class VersionedTable(spark: SparkSession, root: String,
       .repartition(targetBuckets, col(BucketCol)) // ~one file per bucket (see upsert)
       .write.mode("overwrite").partitionBy(BucketCol).parquet(s"$root/$ts/data")
     val written = writtenBuckets(ts)
-    target.writeManifest(ts, written.map(_ -> ts).toMap,
-      writtenStamps(ts, written))
+    target.publish(ts, written.map(_ -> ts).toMap, written, None)
     ts
   }
 
@@ -868,7 +860,7 @@ final class VersionedTable(spark: SparkSession, root: String,
   def incremental(sinceTs: String): DataFrame = commitDirs.lastOption match {
     case None => sys.error(s"no commits under $root")
     case Some(latest) =>
-      val m = readManifest(latest)
+      val m = writersOf(latest)
       if (m.isEmpty) {
         // legacy pre-bucketing snapshot: record-filter when it carries
         // per-row commits; else the whole commit is newer-or-not
@@ -916,7 +908,7 @@ final class VersionedTable(spark: SparkSession, root: String,
         s"'$bucketCol', got [${values.columns.mkString(", ")}]")
     val prev = commitDirs.lastOption.getOrElse(
       sys.error(s"no commits under $root"))
-    val m = readManifest(prev)
+    val m = writersOf(prev)
     if (m.isEmpty) return readCommit(prev) // legacy: no pruning possible
     val wanted = values.select(bucketExprOf(col(bucketCol)).as("b"))
       .distinct().collect().map(_.getLong(0).toInt).toSet
@@ -964,14 +956,17 @@ final class VersionedTable(spark: SparkSession, root: String,
     var keep = retained.toSet
     var frontier = retained.toSet
     while (frontier.nonEmpty) {
-      val next = frontier.flatMap(ts => readManifest(ts).values) -- keep
+      val next = frontier.flatMap(ts => writersOf(ts).values) -- keep
       keep ++= next
       frontier = next
     }
     val deletable = all
       .filter(_ < horizon) // in-flight (crashed) dirs ≥ horizon survive
       .filterNot(keep)
-    deletable.foreach(ts => graft.util.Fs.deleteRecursively(Paths.get(s"$root/$ts")))
+    deletable.foreach { ts =>
+      graft.util.Fs.deleteRecursively(Paths.get(s"$root/$ts"))
+      manifests.remove(ts); schemas.remove(ts)
+    }
     deletable
   }
 }

@@ -1,8 +1,10 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.Row
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{Row, SparkSession}
 
 import graft.operators.ControlBackend
 
@@ -38,6 +40,39 @@ object Fixtures {
   }
 
   def tmpDir(prefix: String): Path = Files.createTempDirectory(prefix)
+
+  /** `body`'s result and, for each Spark job launched while it ran, the
+    * SQL execution the job belongs to (None for a job outside any, such
+    * as a parquet schema-inference job), seen on the listener bus
+    * between two marker jobs.
+    */
+  def jobsDuring[A](spark: SparkSession)(body: => A): (A, Seq[Option[String]]) = {
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Option[String])]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+        jobs.add(prop("spark.job.description").getOrElse("") -> prop("spark.sql.execution.id"))
+      }
+    }
+    val sc = spark.sparkContext
+    def mark(m: String): Unit = {
+      sc.setJobDescription(m)
+      try spark.range(1).count() finally sc.setJobDescription(null)
+    }
+    def seen(m: String) = jobs.asScala.exists(_._1 == m)
+    sc.addSparkListener(listener)
+    try {
+      mark("jobs-during:start")
+      val a = body
+      mark("jobs-during:end")
+      val deadline = System.nanoTime() + 30000000000L
+      while (!seen("jobs-during:end") && System.nanoTime() < deadline) Thread.sleep(5)
+      assert(seen("jobs-during:end"), "end marker never reached the listener")
+      val during = jobs.asScala.toSeq.dropWhile(_._1 != "jobs-during:start")
+        .dropWhile(_._1 == "jobs-during:start").takeWhile(_._1 != "jobs-during:end")
+      (a, during.map(_._2))
+    } finally sc.removeSparkListener(listener)
+  }
 
   def write(path: Path, content: String): Path = {
     Files.createDirectories(path.getParent)

@@ -3,7 +3,6 @@ package graft
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -324,32 +323,10 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
-  /** `body`'s result and the Spark jobs launched while it ran, counted
-    * on the listener bus between two marker jobs.
-    */
+  /** `body`'s result and the number of Spark jobs launched while it ran. */
   private def jobsDuring[A](body: => A): (A, Int) = {
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
-    }
-    val sc = spark.sparkContext
-    def mark(m: String): Unit = {
-      sc.setJobDescription(m)
-      try spark.range(1).count() finally sc.setJobDescription(null)
-    }
-    sc.addSparkListener(listener)
-    try {
-      mark("jobs-during:start")
-      val a = body
-      mark("jobs-during:end")
-      val deadline = System.nanoTime() + 30000000000L
-      while (!jobs.contains("jobs-during:end") && System.nanoTime() < deadline) Thread.sleep(5)
-      val during = jobs.asScala.toSeq.dropWhile(_ != "jobs-during:start")
-        .dropWhile(_ == "jobs-during:start").takeWhile(_ != "jobs-during:end")
-      assert(jobs.contains("jobs-during:end"), "end marker never reached the listener")
-      (a, during.size)
-    } finally sc.removeSparkListener(listener)
+    val (a, jobs) = Fixtures.jobsDuring(spark)(body)
+    (a, jobs.size)
   }
 
   test("stage queues and lineage requests launch no Spark jobs; a cold reader sees the same rows") {

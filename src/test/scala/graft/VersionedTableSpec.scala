@@ -1,9 +1,76 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
+
 import graft.operators.{AsOf, VersionedTable}
 
 class VersionedTableSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Bucket of string key `k` in an `n`-bucket key-bucketed table. */
+  private def bucketOf(k: String, n: Int): Int =
+    Math.floorMod(org.apache.spark.sql.catalyst.expressions.XxHash64Function.hash(
+      org.apache.spark.unsafe.types.UTF8String.fromString(k),
+      org.apache.spark.sql.types.StringType, 42L), n.toLong).toInt
+
+  /** One key per bucket of an `n`-bucket table: the first of K1, K2, … that lands there. */
+  private def keyPerBucket(n: Int): IndexedSeq[String] = {
+    val byBucket = (1 to 500).map(i => s"K$i").groupBy(bucketOf(_, n))
+    (0 until n).map(b => byBucket(b).minBy(_.drop(1).toInt))
+  }
+
+  /** The table at commit `ts` as the per-writer-commit union of
+    * `spark.read.parquet` reads over the commit's `manifest.tsv`,
+    * oldest writer first (the read path before commit metadata was
+    * memoized), limited to the buckets whose writer passes `keep`.
+    */
+  private def referenceRead(root: String, ts: String,
+      keep: String => Boolean = _ => true): Option[DataFrame] = {
+    val entries = Files.readAllLines(Paths.get(s"$root/$ts/manifest.tsv")).asScala.toSeq
+      .filter(l => l.nonEmpty && !l.startsWith("#")).map(_.split("\t"))
+      .map(a => a(0).toInt -> a(1)).filter(e => keep(e._2))
+    entries.groupBy(_._2).toSeq.sortBy(_._1).map { case (c, kvs) =>
+      spark.read.parquet(kvs.map(kv => s"$root/$c/data/_bucket=${kv._1}").sorted: _*)
+    }.reduceOption(_.unionByName(_, allowMissingColumns = true))
+  }
+
+  private def sortedRows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+
+  private def assertSameRead(got: DataFrame, want: DataFrame, what: String): Unit = {
+    assert(got.schema == want.schema,
+      s"$what: schema\n${got.schema.treeString}differs from\n${want.schema.treeString}")
+    assert(sortedRows(got) == sortedRows(want), s"$what: rows differ")
+  }
+
+  /** Every read of `vt` — snapshot, asOf and incremental at each commit —
+    * against [[referenceRead]]: same fields in the same order, types and
+    * nullability, and the same rows.
+    */
+  private def assertReadsMatchReference(vt: VersionedTable, root: String, what: String): Unit = {
+    val latest = vt.commits.head
+    assertSameRead(vt.snapshot, referenceRead(root, latest).get, s"$what snapshot")
+    vt.commits.foreach { c =>
+      assertSameRead(vt.asOf(c), referenceRead(root, c).get, s"$what asOf($c)")
+      val inc = referenceRead(root, latest, _ > c)
+        .getOrElse(referenceRead(root, latest).get.limit(0))
+        .filter($"_commit_time" > c)
+      assertSameRead(vt.incremental(c), inc, s"$what incremental($c)")
+    }
+  }
+
+  /** Physical file scans in `df`'s plan. */
+  private def fileScans(df: DataFrame): Int =
+    df.queryExecution.sparkPlan.collect { case s: FileSourceScanExec => s }.size
+
+  /** Spark jobs `body` launched outside any SQL execution (a parquet
+    * schema-inference job is one). */
+  private def jobsOutsideSql(body: => Any): Int =
+    Fixtures.jobsDuring(spark)(body)._2.count(_.isEmpty)
 
   test("upsert merges by recordkey with precombine max; time travel works") {
     val root = Fixtures.tmpDir("vt").toString
@@ -223,6 +290,11 @@ class VersionedTableSpec extends SparkSpec {
     // the table remains usable after a full wipe
     vt.upsert(Seq(("b", 1L, "back")).toDF("k", "pre", "payload"))
     assert(vt.snapshot.collect().map(_.getAs[String]("k")).toSeq == Seq("b"))
+    // a first upsert of no rows leaves no bucket either: same guard
+    val vt0 = new VersionedTable(spark, Fixtures.tmpDir("vt").toString, "k", "pre", numBuckets = 2)
+    vt0.upsert(Seq.empty[(String, Long, String)].toDF("k", "pre", "payload"))
+    assert(vt0.snapshot.count() == 0 &&
+      vt0.snapshot.columns.toSet == Set("k", "pre", "payload", "_commit_time"))
   }
 
   test("diff classifies insert/delete/update; identical rewrites and null keys handled") {
@@ -915,11 +987,11 @@ class VersionedTableSpec extends SparkSpec {
       Seq(("e1", 10L)).toDF("ek", "cid"))
     check(vtp, "after cross-partition move")
 
-    // v1 (stampless) manifest lines disable the stat — back-compat
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val vtl = new VersionedTable(spark, Fixtures.tmpDir("vts").toString,
-      "k", "pre", numBuckets = 2)
+    // v1 (stampless) manifest lines disable the stat — back-compat. A
+    // commit is immutable and memoized per instance, so the rewritten
+    // manifest is read by a table opened after the rewrite
+    val vtlRoot = Fixtures.tmpDir("vts").toString
+    val vtl = new VersionedTable(spark, vtlRoot, "k", "pre", numBuckets = 2)
     vtl.upsert(Seq(("A", 1L, "x"), ("B", 2L, "y")).toDF("k", "pre", "payload"))
     val manifest = Paths.get(
       vtl.snapshot.inputFiles.head.stripPrefix("file:")
@@ -928,12 +1000,112 @@ class VersionedTableSpec extends SparkSpec {
       if (l.startsWith("#")) l else l.split("\t").take(2).mkString("\t")
     }
     Files.writeString(manifest, legacy.mkString("", "\n", "\n"))
-    assert(vtl.maxPrecombineStat.isEmpty,
+    assert(new VersionedTable(spark, vtlRoot, "k", "pre", numBuckets = 2)
+      .maxPrecombineStat.isEmpty,
       "v1 manifest: stat unavailable, consumers fall back to the agg")
     // a non-integer precombine never stamps (stat stays unavailable)
     val vts = new VersionedTable(spark, Fixtures.tmpDir("vts").toString,
       "k", "ts", numBuckets = 2)
     vts.upsert(Seq(("A", "2025-01-01", "x")).toDF("k", "ts", "payload"))
     assert(vts.maxPrecombineStat.isEmpty, "string precombine: no stat")
+  }
+
+  test("reads and commits launch no schema-inference job; a snapshot scans once per schema") {
+    val root = Fixtures.tmpDir("vtjobs").toString
+    val kb = keyPerBucket(4)
+    val writer = new VersionedTable(spark, root, "k", "pre", numBuckets = 4)
+    val c1 = writer.upsert((1 to 40).map(i => (s"K$i", 1L, s"p$i")).toDF("k", "pre", "payload"))
+    writer.upsert(Seq((kb(0), 2L, "b0")).toDF("k", "pre", "payload"))
+    val c3 = writer.upsert(Seq((kb(1), 2L, "b1")).toDF("k", "pre", "payload"))
+    assert(jobsOutsideSql(spark.read.parquet(s"$root/$c1/data/_bucket=0")) > 0,
+      "the counter must see an inference job")
+    assert(fileScans(writer.snapshot) == 1, "three writer commits, one schema, one scan")
+    // a fourth writer commit adds a column: two schemas, two scans
+    writer.upsert(Seq((kb(2), 2L, "b2", 7L)).toDF("k", "pre", "payload", "extra"))
+    assert(fileScans(writer.snapshot) == 2)
+    assert(fileScans(new VersionedTable(spark, root, "k", "pre", numBuckets = 4).snapshot) == 2)
+    def reads(vt: VersionedTable): Seq[(String, () => Any)] = Seq(
+      "snapshot" -> (() => vt.snapshot.collect()),
+      "asOf" -> (() => vt.asOf(c3).collect()),
+      "diff" -> (() => vt.diff(c1, vt.commits.head).collect()),
+      "incremental" -> (() => vt.incremental(c1).collect()),
+      "snapshotPrunedBy" -> (() => vt.snapshotPrunedBy(Seq(kb(0), kb(2)).toDF("k")).collect()))
+    val cold = new VersionedTable(spark, root, "k", "pre", numBuckets = 4)
+    val commits: Seq[(String, () => Any)] = Seq(
+      "upsert" -> (() => cold.upsert(Seq((kb(3), 3L, "b3")).toDF("k", "pre", "payload"))),
+      "delete" -> (() => cold.delete(Seq(kb(1)).toDF("k"))),
+      "applyDelta" -> (() => cold.applyDelta(Seq(kb(0)).toDF("k"),
+        Seq((kb(2), 3L, "b2c", 8L)).toDF("k", "pre", "payload", "extra"))))
+    for ((name, op) <- reads(new VersionedTable(spark, root, "k", "pre", numBuckets = 4)) ++
+        reads(writer) ++ commits)
+      assert(jobsOutsideSql(op()) == 0, s"$name launched a job outside a SQL execution")
+    assert(cold.snapshot.collect().map(r => r.getAs[String]("k") -> r.getAs[String]("payload"))
+      .toMap == (1 to 40).map(i => s"K$i" -> s"p$i").toMap - kb(0) - kb(1) +
+        (kb(2) -> "b2c") + (kb(3) -> "b3"))
+  }
+
+  test("a manifest is published by an atomic move: a temp manifest alone is no commit") {
+    val root = Fixtures.tmpDir("vtpub").toString
+    val vt = new VersionedTable(spark, root, "k", "pre", numBuckets = 4)
+    val c1 = vt.upsert((1 to 20).map(i => (s"K$i", 1L, s"p$i")).toDF("k", "pre", "payload"))
+    val c2 = vt.delete(Seq("K1").toDF("k"))
+    for (c <- Seq(c1, c2)) assert(graft.util.Fs.list(Paths.get(s"$root/$c"))
+      .map(_.getFileName.toString).toSet == Set("data", "manifest.tsv"),
+      s"commit $c must leave no temp file")
+    // a commit that died after its data, while its manifest was still a
+    // temp file, and one that died holding only the temp file
+    val body = Files.readString(Paths.get(s"$root/$c2/manifest.tsv"))
+    val torn = (c2.toLong + 5).toString
+    Seq(("K2", 9L, "SHOULD_NOT_WIN")).toDF("k", "pre", "payload")
+      .write.parquet(s"$root/$torn/data/_bucket=0")
+    Files.writeString(Paths.get(s"$root/$torn/.manifest.tsv.tmp"), body)
+    val bare = (c2.toLong + 9).toString
+    Files.createDirectories(Paths.get(s"$root/$bare"))
+    Files.writeString(Paths.get(s"$root/$bare/.manifest.tsv.tmp"), body)
+    val want = (2 to 20).map(i => s"K$i" -> s"p$i").toMap
+    for (t <- Seq(vt, new VersionedTable(spark, root, "k", "pre", numBuckets = 4))) {
+      assert(t.commits == Seq(c2, c1))
+      assert(t.snapshot.collect().map(r => r.getAs[String]("k") -> r.getAs[String]("payload"))
+        .toMap == want)
+    }
+    // the next commit lands after both dead ones and merges against c2
+    val c3 = vt.upsert(Seq(("K3", 2L, "p3b")).toDF("k", "pre", "payload"))
+    assert(c3 > bare && vt.commits == Seq(c3, c2, c1))
+    assert(vt.snapshot.collect().map(r => r.getAs[String]("k") -> r.getAs[String]("payload"))
+      .toMap == want + ("K3" -> "p3b"))
+  }
+
+  test("schema evolution reads as the per-writer-commit union, after clean and rebucket too") {
+    import org.apache.spark.sql.functions.col
+    val root = Fixtures.tmpDir("vtevo").toString
+    val kb = keyPerBucket(4)
+    val vt = new VersionedTable(spark, root, "k", "pre", numBuckets = 4)
+    // schema A: n and m are ints
+    def rowsA(keys: Seq[String], pre: Long) = keys.map(k => (k, pre, k.length, 7, s"a$k$pre"))
+      .toDF("k", "pre", "n", "m", "a")
+    vt.upsert(rowsA((1 to 40).map(i => s"K$i"), 1L))
+    // an added column in bucket 0
+    vt.upsert(rowsA(Seq(kb(0)), 2L).withColumn("extra", col("pre") * 10))
+    // implicit int→long widening in bucket 1
+    vt.upsert(rowsA(Seq(kb(1)), 2L).withColumn("n", col("n").cast("long") + 3000000000L))
+    // back to schema A in bucket 2: writers c1 and c4 share a schema
+    val c4 = vt.upsert(rowsA(Seq(kb(2)), 2L))
+    assert(fileScans(vt.asOf(c4)) == 3, "four writer commits, three schemas")
+    assertReadsMatchReference(vt, root, "alternating schemas")
+    vt.widenColumn("m", "bigint")
+    vt.upsert(rowsA(Seq(kb(3)), 3L))
+    vt.renameColumn("a", "aa")
+    vt.dropColumn("extra")
+    vt.upsert(rowsA(Seq(kb(0)), 4L).withColumnRenamed("a", "aa"))
+    def cold(buckets: Int) = new VersionedTable(spark, root, "k", "pre", numBuckets = buckets)
+    assertReadsMatchReference(vt, root, "warm")
+    assertReadsMatchReference(cold(4), root, "cold")
+    assert(vt.clean(keepLast = 3).nonEmpty)
+    assertReadsMatchReference(vt, root, "warm after clean")
+    assertReadsMatchReference(cold(4), root, "cold after clean")
+    val vt8 = vt.rebucket(8)
+    assertReadsMatchReference(vt8, root, "rebucketed")
+    assertReadsMatchReference(cold(8), root, "cold after rebucket")
+    assertReadsMatchReference(vt, root, "pre-rebucket handle")
   }
 }
