@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.expressions.{BestCell, BloomTestLong, DotFold, DotFoldLong, Md5Long60, MinhashSig, SimhashText, TopKPairs}
+import graft.expressions.{BestCell, BloomTestLong, DotFold, DotFoldLong, LenientDate, Md5Long60, MinhashSig, PhiChain, SimhashText,
+  TopKPairs}
 
 /** Session extensions: registers graft's native expressions for SQL
   * use. Attach with
@@ -47,6 +48,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new FunctionIdentifier(BloomTestLong.FnName),
       new ExpressionInfo(classOf[BloomTestLong].getName, BloomTestLong.FnName),
       BloomTestLong.builder))
+    e.injectFunction((
+      new FunctionIdentifier(PhiChain.FnName),
+      new ExpressionInfo(classOf[PhiChain].getName, PhiChain.FnName),
+      PhiChain.builder))
+    e.injectFunction((
+      new FunctionIdentifier(LenientDate.FnName),
+      new ExpressionInfo(classOf[LenientDate].getName, LenientDate.FnName),
+      LenientDate.builder))
     // composed aggregate(zip_with(...)) dot products → native DotFold
     e.injectOptimizerRule(_ => graft.plans.RewriteDotFold)
   }

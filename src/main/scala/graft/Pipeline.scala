@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.model._
 import graft.operators._
@@ -22,11 +23,14 @@ import graft.sources.Readers
   * control table once for all the batches it moves, and reads its
   * queue from driver-local control rows without a Spark job. Batches
   * are per-file to mirror the reference's unit of work
-  * (etl/ingest.py:71-77), and so are the stages: each runs its Spark
-  * jobs once per file, so stage jobs grow linearly with the file
-  * count. The operators are plain DataFrame transforms that would take
-  * a set of files as well; one scan per source per stage is not built
-  * yet.
+  * (etl/ingest.py:71-77), and so are the stages: each runs one Spark job
+  * per file — validation's count-and-probe scan
+  * ([[operators.Validator]]), the scrub's write, the transform's write —
+  * and no header or schema inference job (the CSV header is read on
+  * the driver, curated JSONL with its spec's fields). Stage jobs still
+  * grow linearly with the file count. The operators are plain
+  * DataFrame transforms that would take a set of files as well; one
+  * scan per source per stage is not built yet.
   *
   * Deliberate behavioral fix vs the reference: TRANSFORM reads the
   * *curated* (scrubbed) file, not the raw one — the reference
@@ -191,7 +195,7 @@ final class Pipeline(
   }
 
   private def scrubCsvFile(spec: SourceSpec, in: String, out: Path): (Long, Long, Set[String]) = {
-    // preserve the file's own header set (K3): read with inferred header
+    // preserve the file's own header set (K3): read with the header the file has
     val df = Readers.csvInferHeader(spark, in)
     writeScrubbed(Scrubber.scrubTabular(df, spec, rules))(writeSingleFile(_, out, "csv"))
   }
@@ -246,11 +250,15 @@ final class Pipeline(
       val curatedPath = Option(curated).getOrElse(
         zone("curated", source, Paths.get(rawPath).getFileName.toString).toString)
       val spec = registry.find(_.name == source)
-      val df = spec.map(_.format) match {
-        case Some(SourceFormat.Csv)   => Readers.csvInferHeader(spark, curatedPath)
-        case Some(SourceFormat.Jsonl) => spark.read.json(curatedPath)
-        case Some(SourceFormat.Hl7)   => Readers.hl7Messages(spark, curatedPath)
-        case None                     => Readers.csvInferHeader(spark, curatedPath) // P8 best effort
+      val df = spec match {
+        // scrub writes only spec fields, as JSON strings, plus unparsable
+        // lines verbatim: the spec's fields as plain strings read it with
+        // no inference job (rawSchema's field metadata would reach the
+        // qlm_ready footer)
+        case Some(sp) if sp.format == SourceFormat.Jsonl =>
+          spark.read.schema(StructType(sp.fields.map(f => StructField(f.name, StringType)))).json(curatedPath)
+        case Some(sp) if sp.format == SourceFormat.Hl7   => Readers.hl7Messages(spark, curatedPath)
+        case _ => Readers.csvInferHeader(spark, curatedPath) // CSV, and P8 best effort
       }
       val canonical = Canonicalizer.canonicalize(source, df)
       val outDir = zone("qlm_ready", source, ts(), batchId)

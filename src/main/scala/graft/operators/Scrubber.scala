@@ -3,20 +3,24 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.expressions.PhiChain
 import graft.model.{PhiRule, SourceSpec}
 
 /** PHI scrubbing (reference: etl/scrub_phi.py).
   *
   * Everything is compiled to column expressions at plan-build time: the
-  * rule list is *data* loaded once per run, the expressions are built
-  * from it once, and Catalyst codegen compiles each regex once per task
-  * — the Spark analogue of the reference's single compiled-regex reuse
-  * (etl/scrub_phi.py:26). No UDFs anywhere. The tabular scrub
-  * ([[scrubTabular]]) holds no higher-order function, so it stays inside
-  * whole-stage codegen, whose subexpression elimination evaluates each
-  * rule once per cell for the scrubbed value, the fired rules and the
-  * replacement count together. The HL7 scrub ([[scrubHl7]]) is built
-  * from `transform` over split lines and fields, which Spark evaluates
+  * rule list is *data* loaded once per run and the expressions are
+  * built from it once. No UDFs anywhere. The tabular scrub
+  * ([[scrubTabular]]) gives each non-PHI column one
+  * [[graft.expressions.PhiChain]], which compiles the rule patterns once
+  * per task (the reference's single compiled-regex reuse,
+  * etl/scrub_phi.py:26) and returns the scrubbed value, the fired rules
+  * and the replacement count together. Its plan stays inside whole-stage
+  * codegen, whose subexpression elimination evaluates each chain once
+  * per cell, and its generated code is one call per column whatever the
+  * rule count, so wide sources compile too. The HL7 scrub
+  * ([[scrubHl7]]) is built from `transform` over split lines and fields
+  * with the [[applyRules]] fold inside, which Spark evaluates
   * interpreted.
   *
   * Semantics preserved from the reference:
@@ -46,31 +50,18 @@ object Scrubber {
     if (ok) "(?i)" + p else "(?i)" + java.util.regex.Pattern.quote(p)
   }
 
-  /** The values of the rule fold over `c`: element 0 is `c`, element k
-    * the value after rules 1..k (the last one is [[applyRules]]).
+  /** The rule fold over `c` as one [[PhiChain]]: `struct<value, fired,
+    * n>`, the value after every rule, the ids of the rules that changed
+    * it (the reference's subn count>0 on the running value) and their
+    * count.
     */
-  private def chain(c: Column, rules: Seq[PhiRule]): Seq[Column] =
-    rules.scanLeft(c)((acc, r) => regexp_replace(acc, ciPattern(r.pattern), r.replacement))
-
-  /** Per rule, whether it fired: the replacement changed the value at
-    * that point of the fold, matching the reference's subn count>0 on
-    * the running value.
-    */
-  private def flags(chain: Seq[Column], rules: Seq[PhiRule]): Seq[(String, Column)] =
-    rules.zip(chain.zip(chain.tail)).map { case (r, (before, after)) =>
-      r.ruleId -> (before.isNotNull && after =!= before)
-    }
-
-  private val noRules = typedLit(Seq.empty[String])
-
-  private def firedIds(flags: Seq[(String, Column)]): Column =
-    if (flags.isEmpty) noRules
-    else concat(flags.map { case (id, f) => when(f, array(lit(id))).otherwise(noRules) }: _*)
+  private def phiChain(c: Column, rules: Seq[PhiRule]): Column =
+    PhiChain(c, rules.map(r => r.copy(pattern = ciPattern(r.pattern))))
 
   /** Which rules fired on a value — an array<string> of rule ids in rule
     * order, used for the per-file rules_applied set (A3).
     */
-  def firedRules(c: Column, rules: Seq[PhiRule]): Column = firedIds(flags(chain(c, rules), rules))
+  def firedRules(c: Column, rules: Seq[PhiRule]): Column = phiChain(c, rules).getField("fired")
 
   /** Contextual whole-column redaction token for a PHI column (F3).
     * CSV branch: name-like column → NAME; "dob" in the column name or
@@ -117,14 +108,14 @@ object Scrubber {
           lit(token).as(c)
         case Some(_) =>
           // one rule chain per column: the scrubbed value, the fired ids
-          // and the count all read its intermediate values
+          // and the count read one PhiChain, which subexpression
+          // elimination evaluates once per cell
           val v = col(c)
-          val values = chain(v, rules)
-          val fs = flags(values, rules)
-          redactions = fs.foldLeft(redactions) { case (n, (_, f)) => n + when(f, 1L).otherwise(0L) }
-          fired = array_union(fired, firedIds(fs))
+          val chain = phiChain(v, rules)
+          redactions = redactions + chain.getField("n")
+          fired = array_union(fired, chain.getField("fired"))
           // empty/null values pass through untouched (reference `if val:`)
-          when(v.isNull || v === "", v).otherwise(values.last).as(c)
+          when(v.isNull || v === "", v).otherwise(chain.getField("value")).as(c)
         case None =>
           col(c) // column not in metadata → untouched (reference skips)
       }

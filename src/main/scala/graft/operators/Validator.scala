@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Observation}
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.expressions.LenientDate
 import graft.model.{FieldSpec, SourceSpec}
 
 /** Result of validating one batch frame (reference: etl/validate.py). */
@@ -25,14 +26,14 @@ final case class ValidationResult(
   *  - empty string counts as null for nullability checks (validate.py:115-116);
   *  - unknown declared types pass (validate.py:23-34).
   *
-  * Scale: for CSV the probe frame is a limit(sampleRows) — Catalyst
-  * plans it as a LocalLimit that short-circuits the scan — and the
-  * exact count is a separate count(*) over the (columnar, pushed-down)
-  * source. Where the probe covers every row (JSONL, HL7), the exact
-  * count is observed on the probe's own scan, one Spark job: each
-  * partition reads to its end and keeps only its first
-  * maxErrorSamples errors, so a 100 TB file never ships per-row error
-  * objects to the driver.
+  * Scale: every format validates in one Spark job, one scan that counts
+  * the rows exactly and probes them on the way ([[countAndProbe]]). For
+  * CSV the type and null probes are evaluated only on each partition's
+  * first `sampleRows` rows, and the driver keeps the errors of the file's
+  * first `sampleRows` rows, as the reference's sample does; JSONL and
+  * HL7 probe every row. Each partition ships at most maxErrorSamples
+  * error strings to the driver, so a 100 TB file never ships per-row
+  * error objects.
   */
 object Validator {
 
@@ -41,8 +42,8 @@ object Validator {
 
   /** Lenient type-conformance predicate (F8): true when the value does
     * NOT conform. Empty/null passes (counted by nullability instead).
-    * try_* keeps this ANSI-safe and mirrors dateutil's "parses or not"
-    * probe with a multi-format coalesce.
+    * try_cast and [[lenientTimestamp]] keep this ANSI-safe: a value that
+    * does not parse is null, never an error.
     */
   def typeViolation(c: Column, f: FieldSpec): Column = {
     val nonEmpty = c.isNotNull && c =!= ""
@@ -56,62 +57,19 @@ object Validator {
     nonEmpty && parsed.isNull
   }
 
-  /** dateutil-parity permissive date probe: first format that sticks
-    * (reference validate.py:19-37 calls dateutil.parser.parse). Month
-    * names are case-normalized via initcap (dateutil is
+  /** dateutil-parity permissive date probe: the first form that parses
+    * (reference validate.py:19-37 calls dateutil.parser.parse), null
+    * when none does. Month names are case-normalized (dateutil is
     * case-insensitive), US month-first slash dates are tried before
     * day-first (dateutil's default ordering), bare 4-digit years and
-    * time-only values parse (dateutil fills today's defaults), and
+    * time-only values parse (dateutil fills today's defaults),
     * offset/'T'/fraction ISO forms ride on Spark's default parser, and
     * year-less month-day forms ("Feb 15", "15 Feb") parse against a
-    * fixed non-leap default year.
-    * ValidatorSpec pins this against a generated table of
-    * dateutil-accepted/rejected strings.
+    * fixed non-leap default year; [[graft.expressions.LenientDate]]
+    * lists the forms. ValidatorSpec pins this against a generated table
+    * of dateutil-accepted/rejected strings.
     */
-  def lenientTimestamp(c: Column): Column = {
-    val n = initcap(regexp_replace(trim(c), "\\s+", " "))
-    val bareYear = when(trim(c).rlike("^\\d{4}$"), trim(c))
-    // Year-less month-day forms ("Feb 15", "15 Feb"): dateutil fills
-    // today's year. A fixed NON-leap default year keeps the probe
-    // deterministic while matching dateutil's calendar validation in a
-    // non-leap year ("Feb 29" rejected, "Feb 28" accepted) — the one
-    // divergence is Feb 29 probed during a real leap year, which
-    // dateutil would then accept.
-    val y = concat(n, lit(" 2001"))
-    coalesce(
-      try_to_timestamp(c), // ISO date/datetime incl. 'T', offsets, fractions
-      try_to_timestamp(c, lit("yyyy-MM-dd")),
-      try_to_timestamp(c, lit("yyyyMMdd")),
-      try_to_timestamp(c, lit("MM/dd/yyyy")),
-      try_to_timestamp(c, lit("dd/MM/yyyy")),
-      try_to_timestamp(c, lit("dd-MM-yyyy")),
-      try_to_timestamp(c, lit("yyyy/MM/dd")),
-      try_to_timestamp(c, lit("dd.MM.yyyy")),
-      try_to_timestamp(c, lit("yyyy-MM-dd HH:mm:ss")),
-      try_to_timestamp(c, lit("yyyyMMddHHmmss")),
-      try_to_timestamp(c, lit("MM/dd/yyyy HH:mm")),
-      try_to_timestamp(c, lit("HH:mm:ss")),
-      try_to_timestamp(c, lit("HH:mm")),
-      try_to_timestamp(n, lit("MMM d yyyy")),
-      try_to_timestamp(n, lit("MMM d, yyyy")),
-      try_to_timestamp(n, lit("d MMM yyyy")),
-      try_to_timestamp(n, lit("MMMM d yyyy")),
-      try_to_timestamp(n, lit("MMMM d, yyyy")),
-      try_to_timestamp(n, lit("d MMMM yyyy")),
-      // ctime(): Spark forbids day-of-week in parse patterns, so the
-      // leading weekday token is stripped instead (dateutil ignores it)
-      try_to_timestamp(
-        regexp_replace(n, "^(Mon|Tue|Wed|Thu|Fri|Sat|Sun) ", ""),
-        lit("MMM d HH:mm:ss yyyy")),
-      // year-less forms (dateutil today-defaults; see `y` above) —
-      // an input that already ends in a year fails these patterns on
-      // the appended token and is caught by the with-year forms above
-      try_to_timestamp(y, lit("MMM d yyyy")),
-      try_to_timestamp(y, lit("d MMM yyyy")),
-      try_to_timestamp(y, lit("MMMM d yyyy")),
-      try_to_timestamp(y, lit("d MMMM yyyy")),
-      try_to_timestamp(bareYear, lit("yyyy")))
-  }
+  def lenientTimestamp(c: Column): Column = LenientDate(c)
 
   def nullabilityViolation(c: Column, f: FieldSpec): Column =
     if (f.nullable) lit(false) else c.isNull || c === ""
@@ -137,31 +95,46 @@ object Validator {
   def validate(df: DataFrame, spec: SourceSpec, probeAll: Boolean = false): ValidationResult = {
     val expected = spec.fields.map(_.name)
     val missing = expected.diff(df.columns.toSeq)
-    val (rowCount, errors) =
-      if (probeAll) countAndProbe(df, errorArray(df, spec))
-      else {
-        val probed = df.limit(SampleRows)
-        (df.count(), // exact, full scan — columnar + pushdown
-          probed.select(explode(errorArray(probed, spec))).limit(MaxErrorSamples)
-            .collect().map(_.getString(0)).toSeq)
-      }
+    val (rowCount, errors) = countAndProbe(df, errorArray(df, spec), if (probeAll) None else Some(SampleRows))
     ValidationResult(missing.isEmpty && errors.isEmpty, rowCount, missing, errors)
   }
 
   /** The exact row count of `df` and the first [[MaxErrorSamples]]
-    * error strings of `errors` over every row, in one Spark job: the
-    * count is observed on the probe's scan, so no partition may stop
-    * early — each reads to its end and keeps its first samples.
+    * error strings of `errors` over its first `probeRows` rows (every
+    * row when None), in one Spark job. Each partition reads to its end,
+    * counting its rows, and reports its first MaxErrorSamples errors
+    * among its own first `probeRows` rows, each with its row index in
+    * the partition; past those rows `errors` is not evaluated. The
+    * driver walks the partitions in order, the order a limit takes
+    * them, and keeps the errors of rows within the first `probeRows`
+    * overall, so a 100 TB file never ships per-row error objects to
+    * the driver.
     */
-  private def countAndProbe(df: DataFrame, errors: Column): (Long, Seq[String]) = {
-    val obs = Observation()
+  private def countAndProbe(df: DataFrame, errors: Column, probeRows: Option[Int]): (Long, Seq[String]) = {
+    val limit = probeRows.fold(Long.MaxValue)(_.toLong)
     val max = MaxErrorSamples
-    val samples = df.observe(obs, count(lit(1)).as("n"))
-      .select(explode(errors)).as(Encoders.STRING)
-      .mapPartitions(it => it.foldLeft(Vector.empty[String])((kept, e) =>
-        if (kept.size < max) kept :+ e else kept).iterator)(Encoders.STRING)
-      .collect().take(max).toSeq
-    (obs.get("n").asInstanceOf[Long], samples)
+    // the row's index in its partition: monotonically_increasing_id's
+    // low 33 bits
+    val probed = probeRows.fold(errors)(n => when((monotonically_increasing_id() % (1L << 33)) < n, errors))
+    val parts = df.select(probed).mapPartitions { rows =>
+      var n = 0L
+      val at = Vector.newBuilder[Long]
+      val kept = Vector.newBuilder[String]
+      var k = 0
+      rows.foreach { r =>
+        if (n < limit && k < max && !r.isNullAt(0))
+          r.getSeq[String](0).iterator.take(max - k).foreach { e => at += n; kept += e; k += 1 }
+        n += 1
+      }
+      Iterator[(Long, Seq[Long], Seq[String])]((n, at.result(), kept.result()))
+    }(Encoders.product[(Long, Seq[Long], Seq[String])]).collect()
+    var offset = 0L
+    val kept = Vector.newBuilder[String]
+    parts.foreach { case (n, at, es) =>
+      at.zip(es).foreach { case (i, e) => if (offset + i < limit) kept += e }
+      offset += n
+    }
+    (offset, kept.result().take(max))
   }
 
   /** HL7 validation (etl/validate.py:160-213): every message must have
@@ -181,7 +154,7 @@ object Validator {
           val v = trim(arrGet(parts, lit(n)))
           when(pidLine.isNotNull && (v.isNull || v === ""), lit(s"missing_required:$name"))
         }
-    val (rowCount, errors) = countAndProbe(messages, filter(array(checks: _*), x => x.isNotNull))
+    val (rowCount, errors) = countAndProbe(messages, filter(array(checks: _*), x => x.isNotNull), None)
     ValidationResult(errors.isEmpty, rowCount, Nil, errors)
   }
 }

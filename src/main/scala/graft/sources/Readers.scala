@@ -1,6 +1,10 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.io.{BufferedReader, InputStreamReader}
+import java.nio.charset.StandardCharsets
+
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -39,12 +43,30 @@ object Readers {
       .csv(path)
 
   /** CSV where we must keep *whatever* header the file has (used by the
-    * scrub stage, which preserves input fieldnames — K3).
+    * scrub stage, which preserves input fieldnames — K3), every column
+    * read as string. The header is the file's first non-blank line, read
+    * on the driver; Spark's own CSV header logic names the columns
+    * (empty and duplicate names made unique) over a one-line local
+    * Dataset, so no Spark job infers the schema. A file without a
+    * non-blank line reads with no columns.
     */
   def csvInferHeader(spark: SparkSession, path: String): DataFrame = {
-    val df = spark.read.option("header", "true").csv(path)
-    // force all-string view regardless of what inference guessed
-    df.select(df.columns.toIndexedSeq.map(c => col(c).cast(StringType).as(c)): _*)
+    val header = spark.createDataset(firstNonBlankLine(spark, path).toSeq)(Encoders.STRING)
+    val schema = spark.read.option("header", "true").csv(header).schema
+    spark.read.option("header", "true").schema(schema).csv(path)
+  }
+
+  /** The first line of a text file that is not empty or all spaces (the
+    * CSV source's own test), less a leading byte-order mark.
+    */
+  private def firstNonBlankLine(spark: SparkSession, path: String): Option[String] = {
+    val p = new HPath(path)
+    val in = new BufferedReader(new InputStreamReader(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p), StandardCharsets.UTF_8))
+    try Iterator.continually(in.readLine()).takeWhile(_ != null).zipWithIndex
+      .map { case (l, i) => if (i == 0) l.stripPrefix("\uFEFF") else l }
+      .find(_.exists(_ != ' '))
+    finally in.close()
   }
 
   /** JSONL: one JSON object per line, blank lines skipped by the JSON

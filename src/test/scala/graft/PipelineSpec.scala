@@ -329,6 +329,89 @@ class PipelineSpec extends SparkSpec {
     (a, jobs.size)
   }
 
+  test("each stage launches one Spark job per batch, every one inside a SQL execution") {
+    val base = Fixtures.sourceTree(Fixtures.tmpDir("srconejob"))
+    // a CSV with no data rows, and one whose header repeats a name and
+    // ends in an empty one: the scrub keeps the header Spark makes of it
+    Fixtures.write(base.resolve("hospital_a/2025-02-03_header_only.csv"), Fixtures.csvGood.linesIterator.next() + "\n")
+    Fixtures.write(base.resolve("hospital_a/2025-02-04_dup_header.csv"),
+      "patient_id,patient_name,ssn,dob,visit_date,diagnosis,notes,notes,\n" +
+        "P1,Ann Lee,123-45-6789,1971-04-12,2025-02-01,Flu,call 555-123-4567,x 12 Main Street,z\n")
+    val lake = Fixtures.tmpDir("lakeonejob").toString
+    val p = new Pipeline(spark, lake)
+    p.ingest(base.toString)
+    def oneJobPerBatch[A](stage: String)(run: => Seq[A]): Unit = {
+      val (batches, jobs) = Fixtures.jobsDuring(spark)(run)
+      assert(jobs.size == batches.size && jobs.forall(_.isDefined), s"$stage: ${batches.size} batches, jobs $jobs")
+    }
+    oneJobPerBatch("validate")(p.validatePending())
+    oneJobPerBatch("scrub")(p.scrubPending())
+    oneJobPerBatch("transform")(p.transformPending())
+    assert(p.provenance.batches.filter(col("status") === "COMPLETED").count() == 5)
+    // no source field metadata reaches a qlm_ready footer
+    p.provenance.batchRows.flatMap(r => Option(r.getAs[String]("version_path"))).foreach { v =>
+      assert(spark.read.parquet(v).schema.forall(_.metadata == org.apache.spark.sql.types.Metadata.empty), v)
+    }
+
+    // the curated bytes and canonical rows of the two odd headers, as
+    // the header inference read gave them
+    def curated(f: String) = Files.readString(Paths.get(lake, "curated", "hospital_a", f))
+    def canonical(f: String) = spark.read.parquet(p.provenance.batchRows
+      .find(_.getAs[String]("raw_file_path").endsWith(f)).get.getAs[String]("version_path"))
+      .collect().map(_.toSeq.mkString("|")).toSeq
+    assert(curated("2025-02-03_header_only.csv") == "patient_id,patient_name,ssn,dob,visit_date,diagnosis,notes\n")
+    assert(canonical("2025-02-03_header_only.csv").isEmpty)
+    assert(curated("2025-02-04_dup_header.csv") ==
+      "patient_id,patient_name,ssn,dob,visit_date,diagnosis,notes6,notes7,_c8\n" +
+        "P1,[REDACTED_NAME],[REDACTED],[REDACTED_DATE],[REDACTED_DATE],Flu,call 555-123-4567,x 12 Main Street,z\n")
+    assert(canonical("2025-02-04_dup_header.csv") ==
+      Seq("P1|[REDACTED_NAME]|[REDACTED_DATE]|[REDACTED_DATE]|Flu|null|null|null|hospital_a"))
+  }
+
+  test("csvInferHeader names the columns as the inference read does, with no Spark job") {
+    val dir = Fixtures.tmpDir("csvheader")
+    val body = "1,2,3,4,5\n"
+    val headers = Seq(
+      "plain" -> "a,b,c,d,e\n",
+      "blank_lead" -> "\n   \n\ta,b,c,d,e \n",
+      "bom" -> "\uFEFFa,b,c,d,e\n",
+      "duplicates" -> "a,A,a,b,\n",
+      "quoted" -> "\"a,b\",\"c\"\"d\",,e,\n",
+      "crlf" -> "a,b,c,d,e\r\n")
+    headers.foreach { case (name, header) =>
+      val f = Fixtures.write(dir.resolve(s"$name.csv"), header + body).toString
+      val (df, jobs) = Fixtures.jobsDuring(spark)(Readers.csvInferHeader(spark, f))
+      assert(jobs.isEmpty, name)
+      val inferred = spark.read.option("header", "true").csv(f)
+      assert(df.schema == inferred.schema, name)
+      assert(df.collect().toSeq == inferred.collect().toSeq, name)
+    }
+    val empty = Fixtures.write(dir.resolve("empty.csv"), "").toString
+    assert(Readers.csvInferHeader(spark, empty).schema.isEmpty)
+  }
+
+  test("in a CSV read as several splits, a bad date at row 150 fails validation and one at row 250 passes") {
+    def file(badRow: Int): String = (Fixtures.csvGood.linesIterator.next() +: (1 to 600).map(i =>
+      s"P$i,Name $i,123-45-6789,1971-04-12,${if (i == badRow) "BADDATE" else "2025-02-01"},Flu,note $i"))
+      .mkString("", "\n", "\n")
+    val base = Fixtures.tmpDir("srcsplitdate")
+    Fixtures.write(base.resolve("hospital_a/a_bad_150.csv"), file(150))
+    Fixtures.write(base.resolve("hospital_a/b_bad_250.csv"), file(250))
+    val p = new Pipeline(spark, Fixtures.tmpDir("lakesplitdate").toString)
+    p.ingest(base.toString)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "4k")
+    try {
+      val raw = p.pendingBatches("INGESTED").map(_._3)
+      assert(raw.forall(f => Readers.csv(spark, Seeds.hospitalA, f).rdd.getNumPartitions > 3))
+      val (verdicts, jobs) = jobsDuring(p.validatePending())
+      assert(verdicts.map(_._2) == Seq(false, true) && jobs == 2)
+    } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    val state = p.provenance.batchRows.map(r => Paths.get(r.getAs[String]("raw_file_path")).getFileName.toString ->
+      (r.getAs[String]("status"), r.getAs[String]("error_details"), r.getAs[Long]("total_rows"))).toMap
+    assert(state("a_bad_150.csv") == (("FAILED_VALIDATION", "type_error:visit_date:BADDATE", 0L)))
+    assert(state("b_bad_250.csv") == (("VALIDATED", null, 600L)))
+  }
+
   test("stage queues and lineage requests launch no Spark jobs; a cold reader sees the same rows") {
     val base = Fixtures.sourceTree(Fixtures.tmpDir("srcnojobs"))
     val lake = Fixtures.tmpDir("lakenojobs").toString

@@ -2,11 +2,11 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.execution.WholeStageCodegenExec
+import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-import graft.model.{PhiRule, Seeds, SourceSpec}
+import graft.model.{FieldSpec, PhiRule, Seeds, SourceFormat, SourceSpec}
 import graft.operators.Scrubber
 
 class ScrubberSpec extends SparkSpec {
@@ -189,6 +189,34 @@ class ScrubberSpec extends SparkSpec {
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try assert(out.collect().length == 120)
     finally spark.conf.unset("spark.sql.codegen.fallback")
+  }
+
+  test("a 100-column source compiles in whole-stage codegen, one rule chain per cell, and equals the reference") {
+    // 99 spec columns (90 of them scrubbed by the rules) plus one outside it
+    val wide = SourceSpec("wide", SourceFormat.Csv, "wide",
+      (1 to 99).map(i => FieldSpec(s"c$i", "string", nullable = true, isPhi = i % 10 == 0)))
+    val df = fuzzedFrame(wide, 14)
+    assert(df.columns.length == 100)
+    val want = referenceScrub(df, wide, fuzzRules, byName = false).collect().map(_.toSeq).toSeq
+    // the scrub's 102 output fields exceed Spark's default whole-stage
+    // field limit (100), which would plan it outside whole-stage codegen
+    spark.conf.set("spark.sql.codegen.maxFields", "200")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try {
+      val out = Scrubber.scrubTabular(df, wide, fuzzRules)
+      val got = out.collect().map(_.toSeq).toSeq
+      assert(got.size == 120 && got == want)
+      val plan = out.queryExecution.executedPlan
+      assert(plan.collectFirst { case w: WholeStageCodegenExec if w.child.exists(_.isInstanceOf[ProjectExec]) => w }
+        .nonEmpty, plan.toString)
+      // subexpression elimination generates each column's chain once,
+      // for its value, fired rules and count together
+      val source = out.queryExecution.debug.codegenToSeq().map(_._2).mkString
+      assert("/\\* phiChain \\*/".r.findAllIn(source).size == 90)
+    } finally {
+      spark.conf.unset("spark.sql.codegen.fallback")
+      spark.conf.unset("spark.sql.codegen.maxFields")
+    }
   }
 
   test("HL7 scrub mirrors reference positional semantics exactly") {
