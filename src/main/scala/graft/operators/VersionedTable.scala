@@ -1,6 +1,7 @@
 package graft.operators
 
-import java.nio.file.{Files, NoSuchFileException, Path, Paths, StandardCopyOption}
+import java.nio.file.{FileAlreadyExistsException, Files, NoSuchFileException, Path, Paths,
+  StandardCopyOption}
 import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
@@ -34,15 +35,29 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   *  - `commits`: distinct commit times desc (A4/O6).
   *
   * Layout and scale: rows are hash-partitioned on `recordKey` into
-  * `numBuckets` buckets. Each commit dir holds `data/_bucket=<b>/`
-  * parquet for ONLY the buckets its updates touched, plus a manifest
-  * mapping every live bucket to the commit that last wrote it. A
-  * snapshot read unions the manifest's bucket paths; untouched buckets'
-  * files are shared between commits without being copied or rewritten —
-  * so a 1-row upsert into a 100 TB table rewrites one bucket, not the
-  * table. This is the same file-group/commit-timeline idea Hudi uses.
-  * The merge itself is one shuffle on recordKey (row_number window)
-  * over just the touched buckets' rows.
+  * buckets. Each commit dir holds `data/_bucket=<b>/` parquet for ONLY
+  * the buckets its updates touched, plus a manifest mapping every live
+  * bucket to the commit that last wrote it. A snapshot read unions the
+  * manifest's bucket paths; untouched buckets' files are shared between
+  * commits without being copied or rewritten — so a 1-row upsert into a
+  * 100 TB table rewrites one bucket, not the table. This is the same
+  * file-group/commit-timeline idea Hudi uses. The merge itself is one
+  * shuffle on recordKey (row_number window) over just the touched
+  * buckets' rows.
+  *
+  * The bucket count follows the table's bytes, as Hudi's file sizing
+  * does (https://hudi.apache.org/docs/file_sizing). A table's first
+  * commit takes the count its caller seeded, or else
+  * [[VersionedTable.suggestBucketCount]] of the input's Catalyst size
+  * estimate, which runs no job: a small table is one bucket, one file.
+  * Every later commit, on any handle, takes the count from the latest
+  * manifest's `#buckets=` header. When the buckets a commit rewrote
+  * average more than [[VersionedTable.TargetBucketBytes]], the same
+  * call migrates a record-key-bucketed table to at least twice the
+  * buckets (a [[rebucket]] commit), so bytes per small commit stay
+  * bounded as the table grows. A file group costs a task, a parquet
+  * writer or footer and its directories on every commit and read that
+  * touches it, which on a small table outweighs the bytes.
   *
   * Commit metadata is memoized per instance: a complete commit never
   * changes, so its manifest and the row schema of the files it wrote
@@ -53,19 +68,24 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * bounded by the distinct schemas its manifest references.
   */
 object VersionedTable {
-  /** Executable form of the bucket-sizing guidance: enough buckets to
-    * keep each at or under `targetBucketBytes` (default 1 GB — the
-    * size where a touched-bucket rewrite stays a single comfortable
-    * task), rounded UP to a power of two so successive [[VersionedTable.rebucket]]
-    * migrations double cleanly as the table grows.
+  /** The size a bucket's file group is kept at or under: Hudi's default
+    * maximum parquet file size (`hoodie.parquet.max.file.size`), so a
+    * touched-bucket rewrite stays one comfortable task.
     */
-  def suggestBucketCount(tableBytes: Long, targetBucketBytes: Long = 1L << 30): Int = {
+  val TargetBucketBytes: Long = 128L << 20
+
+  /** The bucket-sizing rule: enough buckets to keep each at or under
+    * `targetBucketBytes`, rounded UP to a power of two so successive
+    * growth migrations double cleanly. A table sizes its first commit
+    * and its growth with it (see the class doc's layout paragraph).
+    */
+  def suggestBucketCount(tableBytes: Long, targetBucketBytes: Long = TargetBucketBytes): Int = {
     require(tableBytes >= 0 && targetBucketBytes > 0)
     // div-then-round-up: the add-before-divide ceiling would overflow
     // Long for near-Long.MaxValue sizes and answer 1
     val needed = math.max(1L, tableBytes / targetBucketBytes +
       (if (tableBytes % targetBucketBytes == 0) 0L else 1L))
-    val capped = math.min(needed, 1L << 20) // 2^20 buckets ≈ 1 PB at 1 GB each
+    val capped = math.min(needed, 1L << 20) // 2^20 buckets ≈ 128 TB at 128 MB each
     var p = 1L
     while (p < capped) p <<= 1
     p.toInt
@@ -104,7 +124,10 @@ object VersionedTable {
   }
 }
 
-/** @param partitionColOpt bucket the table's FILES by this payload
+/** @param numBuckets the bucket count of a NEW table's first commit; 0
+  *   (the default) sizes it from the input's bytes. An existing table
+  *   keeps the count its manifest records, whatever a handle passes.
+  * @param partitionColOpt bucket the table's FILES by this payload
   *   column instead of the record key (VERDICT r15 item 2 — e.g. a
   *   dedup edge store bucketed by `cluster_id` so a takedown's
   *   induced-subgraph read is file-pruned via [[VersionedTable.snapshotPrunedBy]]).
@@ -121,11 +144,17 @@ object VersionedTable {
   *   layout (manifest header) — reopening with a different one fails.
   */
 final class VersionedTable(spark: SparkSession, root: String,
-    val recordKey: String, val precombine: String, numBuckets: Int = 16,
+    val recordKey: String, val precombine: String, numBuckets: Int = 0,
     val partitionColOpt: Option[String] = None) {
+  require(numBuckets >= 0, s"numBuckets must be >= 0, got $numBuckets")
 
   val CommitCol = "_commit_time"
   private val BucketCol = "_bucket"
+
+  /** The mean rewritten-bucket size past which a commit grows the
+    * table; package-visible so specs can grow a table of a few KB.
+    */
+  private[graft] var targetBucketBytes: Long = VersionedTable.TargetBucketBytes
 
   /** The column whose hash places a row's FILE: the payload partition
     * column when configured, else the record key.
@@ -140,16 +169,18 @@ final class VersionedTable(spark: SparkSession, root: String,
     * the persisted layout — changing it re-buckets null keys, so
     * existing tables with null-key rows would stop merging them.
     */
-  private def bucketExpr = bucketExprOf(col(bucketCol))
+  private def bucketExpr(n: Int) =
+    pmod(xxhash64(coalesce(col(bucketCol).cast("string"), lit("__graft_null_key__"))),
+      lit(n.toLong))
 
-  private def bucketExprOf(c: org.apache.spark.sql.Column) =
-    pmod(xxhash64(coalesce(c.cast("string"), lit("__graft_null_key__"))),
-      lit(numBuckets.toLong))
-
+  /** Commit dirs, oldest first: ids are `yyyyMMddHHmmssSSS`, or
+    * `yyyyMMddHHmmss` from before commit ids carried milliseconds; a
+    * 14-digit id sorts as the first millisecond of its second.
+    */
   private def commitDirsAll: Seq[String] =
     graft.util.Fs.list(Paths.get(root))
       .filter(Files.isDirectory(_)).map(_.getFileName.toString)
-      .filter(_.matches("\\d{14}")).sorted
+      .filter(_.matches("\\d{14}(\\d{3})?")).sorted
 
   /** A commit is COMPLETE when its manifest exists, or when it is a
     * legacy pre-bucketing snapshot (parquet directly in the dir, no
@@ -169,13 +200,20 @@ final class VersionedTable(spark: SparkSession, root: String,
 
   def commits: Seq[String] = commitDirs.reverse
 
+  /** Mint a commit id and claim its dir: the clock's millisecond, or
+    * the millisecond after the newest dir when the clock has not passed
+    * it (crashed, incomplete commits still reserve their name). A name
+    * another writer claimed first moves the id on by one.
+    */
   private def newCommitTs(): String = {
-    val base = java.time.format.DateTimeFormatter.ofPattern("yyyyMMddHHmmss")
-      .withZone(java.time.ZoneOffset.UTC).format(java.time.Instant.now())
-    // strictly increasing even within one second; crashed (incomplete)
-    // commit dirs still reserve their name
-    commitDirsAll.lastOption.filter(_ >= base)
-      .map(last => (last.toLong + 1).toString).getOrElse(base)
+    val now = java.time.format.DateTimeFormatter.ofPattern("yyyyMMddHHmmssSSS")
+      .withZone(java.time.ZoneOffset.UTC).format(java.time.Instant.now()).toLong
+    val after = commitDirsAll.lastOption.fold(0L)(_.padTo(17, '0').toLong + 1)
+    Files.createDirectories(Paths.get(root))
+    Iterator.iterate(math.max(now, after))(_ + 1).map(_.toString).find { id =>
+      try { Files.createDirectory(Paths.get(s"$root/$id")); true }
+      catch { case _: FileAlreadyExistsException => false }
+    }.get
   }
 
   // ---- commit metadata, memoized per instance ----
@@ -313,38 +351,68 @@ final class VersionedTable(spark: SparkSession, root: String,
     .filter(m => m.writers.nonEmpty && m.writers.keySet.forall(m.stamps.contains))
     .map(_.stamps.values.flatten.reduceOption((a, b) => math.max(a, b)))
 
-  /** Shared open-guard for every mutating path: bucket count AND
-    * partition column are persisted layout — opening with either
-    * different from what the table was written with would hash rows
+  /** Shared open-guard for every mutating path: the partition column is
+    * persisted layout — opening with a different one would hash rows
     * into buckets the old manifest doesn't cover and silently unmerge
-    * them.
+    * them. The bucket count needs no guard: every commit adopts the
+    * stored one ([[bucketsOf]]).
     */
   private def requireLayoutMatches(prev: String): Unit = manifest(prev).foreach { m =>
-    m.buckets.foreach { stored =>
-      require(stored == numBuckets,
-        s"table at $root was written with numBuckets=$stored, opened with $numBuckets")
-    }
     require(m.partCol == partitionColOpt,
       s"table at $root was written with partitionCol=${m.partCol}, " +
         s"opened with $partitionColOpt")
   }
 
-  /** Publish commit `ts` with bucket → writer map `writers`: one footer
-    * pass over the buckets it `written` gives their stamps and the
-    * commit's row schema; every other bucket carries its stamp from
-    * `prev`. The manifest goes to a hidden temp file in the commit dir
-    * and is moved into place atomically, so a reader sees all of it or
-    * none (the commit is complete from that moment); this instance then
-    * memoizes both without reading them back.
+  /** The bucket count commit `ts` was written with: its manifest's
+    * `#buckets=`, else (a legacy snapshot, or a manifest from before the
+    * header) the count this handle was seeded with, if any.
     */
-  private def publish(ts: String, writers: Map[Int, String], written: Seq[Int],
-      prev: Option[String]): Unit = {
+  private def bucketsOf(ts: String): Option[Int] = manifest(ts).flatMap(_.buckets).orElse(seeded)
+
+  private def seeded: Option[Int] = Some(numBuckets).filter(_ > 0)
+
+  /** The bucket count of a commit after `prev` (None: the first): the
+    * stored or seeded one, else [[VersionedTable.suggestBucketCount]] of
+    * `rows`' Catalyst size estimate (no job). An estimate Spark could
+    * not make (`spark.sql.defaultSizeInBytes`) counts as one bucket,
+    * which the first commit's growth check then corrects.
+    */
+  private def commitBuckets(prev: Option[String], rows: => DataFrame): Int =
+    prev.fold(seeded)(bucketsOf).getOrElse {
+      val est = rows.queryExecution.optimizedPlan.stats.sizeInBytes
+      if (est >= spark.sessionState.conf.defaultSizeInBytes) 1
+      else VersionedTable.suggestBucketCount(est.toLong, targetBucketBytes)
+    }
+
+  /** Grow an oversized layout: when the `rewritten` buckets of a commit
+    * under `n` buckets hold more than [[targetBucketBytes]] on average,
+    * migrate the table to at least twice the buckets, or as many as its
+    * extrapolated size needs. Only record-key buckets grow: a payload-
+    * partitioned bucket holds whole partition values, and one value
+    * past the target would double the table on every commit.
+    */
+  private def growIfOversized(n: Int, rewritten: Int, bytes: Long): Unit =
+    if (partitionColOpt.isEmpty && rewritten > 0 && bytes / rewritten > targetBucketBytes)
+      migrationCommit(identity, Some(math.max(2 * n,
+        VersionedTable.suggestBucketCount(bytes / rewritten * n, targetBucketBytes))))
+
+  /** Publish commit `ts` of an `n`-bucket layout with bucket → writer
+    * map `writers`: one footer pass over the buckets it `written` gives
+    * their stamps and the commit's row schema; every other bucket
+    * carries its stamp from `prev`. The manifest goes to a hidden temp
+    * file in the commit dir and is moved into place atomically, so a
+    * reader sees all of it or none (the commit is complete from that
+    * moment); this instance then memoizes both without reading them
+    * back. Returns the bytes of the written buckets' files.
+    */
+  private def publish(ts: String, n: Int, writers: Map[Int, String], written: Seq[Int],
+      prev: Option[String]): Long = {
     val read = written.map(b => b -> parquetFiles(bucketPath(b, ts)).map(f => f -> footer(f)))
     val carried = prev.flatMap(manifest).fold(Map.empty[Int, Option[Long]])(_.stamps)
     val stamps = ((carried -- written) ++
       read.flatMap { case (b, fs) => stampOf(fs.map(_._2)).map(b -> _) })
       .filter(kv => writers.contains(kv._1))
-    val m = VersionedTable.Manifest(Some(numBuckets), partitionColOpt, writers, stamps)
+    val m = VersionedTable.Manifest(Some(n), partitionColOpt, writers, stamps)
     val tmp = Paths.get(s"$root/$ts/.manifest.tsv.tmp")
     Files.writeString(tmp, m.render)
     Files.move(tmp, manifestPath(ts), StandardCopyOption.ATOMIC_MOVE)
@@ -352,6 +420,7 @@ final class VersionedTable(spark: SparkSession, root: String,
       schemas.put(ts, schemaOf(f, meta))
     }
     manifests.put(ts, m)
+    read.flatMap(_._2).map(fm => Files.size(fm._1)).sum
   }
 
   private def bucketPath(b: Int, commit: String) = s"$root/$commit/data/$BucketCol=$b"
@@ -440,39 +509,40 @@ final class VersionedTable(spark: SparkSession, root: String,
     * unrewritten bucket. Crash-safe: data before manifest.
     */
   def delete(keys0: DataFrame): String = {
-    val ts = newCommitTs()
     val prev = commitDirs.lastOption.getOrElse(
       sys.error(s"delete on $root: table has no commits"))
     requireLayoutMatches(prev)
+    val ts = newCommitTs()
     val prevManifest = writersOf(prev)
     // under payload partitioning the keys frame must also carry the
     // partition column (the rows' CURRENT values) — the probe hashes
     // it to find the buckets the doomed rows live in
     requireCarriesPartCol("delete", keys0)
+    val n = commitBuckets(Some(prev), readCommit(prev))
     // legacy (pre-bucketing) snapshot: fold the whole table, like upsert
     val (prevData, probed): (Option[DataFrame], Set[Int]) =
       if (prevManifest.isEmpty) (Some(spark.read.parquet(s"$root/$prev")), Set.empty)
       else {
-        val touched = keys0.select(bucketExpr.as("b")).distinct()
+        val touched = keys0.select(bucketExpr(n).as("b")).distinct()
           .collect().map(_.getLong(0).toInt).toSet
         val live = touched.filter(prevManifest.contains)
         val liveM = prevManifest.filter { case (b, _) => live(b) }
         (if (liveM.isEmpty) None else Some(readGrouped(liveM)), live)
       }
-    val surv = prevData.map(pd => withoutKeys(pd, keys0).withColumn(BucketCol, bucketExpr))
+    val surv = prevData.map(pd => withoutKeys(pd, keys0).withColumn(BucketCol, bucketExpr(n)))
     val written: Seq[Int] = surv match {
       case None => Seq.empty
       case Some(s) =>
         // width = touched buckets (see upsert): a key-set delete only
         // rewrites the probed buckets
         val writeWidth =
-          if (probed.isEmpty) numBuckets // legacy fold-in
-          else math.min(numBuckets, math.max(1, probed.size))
+          if (probed.isEmpty) n // legacy fold-in
+          else math.min(n, math.max(1, probed.size))
         s.repartition(writeWidth, col(BucketCol))
           .write.mode("overwrite").partitionBy(BucketCol).parquet(s"$root/$ts/data")
         writtenBuckets(ts)
     }
-    publishRewrite(ts, Some(prev), probed, written, surv.get)
+    growIfOversized(n, written.size, publishRewrite(ts, n, Some(prev), probed, written, surv.get))
     ts
   }
 
@@ -507,9 +577,12 @@ final class VersionedTable(spark: SparkSession, root: String,
           s"carry $pc (the rows' current values) for bucket pruning")
     }
 
-  /** `rows` without those whose record key appears in `keys` (null-safe). */
+  /** `rows` without those whose record key appears in `keys` (null-safe).
+    * An anti join never repeats a left row, so duplicate keys need no
+    * distinct.
+    */
   private def withoutKeys(rows: DataFrame, keys: DataFrame): DataFrame =
-    rows.join(keys.select(col(recordKey)).distinct().toDF("_del_key"),
+    rows.join(keys.select(col(recordKey).as("_del_key")),
       rows(recordKey) <=> col("_del_key"), "left_anti")
 
   /** The merge commit of [[upsert]], [[upsertMoved]] and [[applyDelta]]:
@@ -518,9 +591,10 @@ final class VersionedTable(spark: SparkSession, root: String,
     */
   private def merge(op: String, deleteKeys0: Option[DataFrame], updates0: DataFrame,
       extraProbe: Option[DataFrame]): String = {
-    val ts = newCommitTs()
     val prev = commitDirs.lastOption
     prev.foreach(requireLayoutMatches)
+    val ts = newCommitTs()
+    val n = commitBuckets(prev, updates0)
     val prevManifest = prev.fold(Map.empty[Int, String])(writersOf)
     // a manifest-less previous commit is a legacy (pre-bucketing)
     // snapshot: fold the WHOLE snapshot into this commit — treating it
@@ -544,10 +618,9 @@ final class VersionedTable(spark: SparkSession, root: String,
       case None =>
         // ONE probe over every frame that names a bucket: the update
         // rows, the doomed keys, and (for moves) the old partition
-        // values — DISTINCT bucket ids, ≤ numBuckets longs, a bounded
-        // collect
+        // values — DISTINCT bucket ids, ≤ n longs, a bounded collect
         val touched = (updates0 +: (deleteKeys0 ++ extraProbe).toSeq)
-          .map(_.select(bucketExpr.as("b"))).reduce(_.unionAll(_)).distinct()
+          .map(_.select(bucketExpr(n).as("b"))).reduce(_.unionAll(_)).distinct()
           .collect().map(_.getLong(0).toInt).toSet
         touchedProbe = Some(touched)
         val touchedM = prevManifest.filter { case (b, _) => touched(b) }
@@ -565,19 +638,18 @@ final class VersionedTable(spark: SparkSession, root: String,
       .orderBy(col(precombine).desc, col("_is_update").desc)
     val deduped = merged.withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1).drop("_rn", "_is_update")
-      .withColumn(BucketCol, bucketExpr)
+      .withColumn(BucketCol, bucketExpr(n))
     // cluster rows by bucket before the partitioned write: the merge
     // window shuffles on recordKey, which spreads every bucket across
     // every task — writing from that layout fans out to (tasks ×
     // touched buckets) small files per commit. One extra shuffle of
     // just the touched rows gives ~one file per bucket, the Hudi
-    // file-group layout the ≤1 GB/bucket sizing guidance assumes.
+    // file-group layout the bucket sizing assumes.
     // Width = the TOUCHED bucket count, not the table's (r16): a
     // 10-bucket maintenance commit on a 2048-bucket table otherwise
     // launches 2048 near-empty write tasks — measured dominating
     // small-commit latency 3x in the takedownlake2 probe.
-    val writeWidth = touchedProbe.map(t => math.min(numBuckets,
-      math.max(1, t.size))).getOrElse(numBuckets)
+    val writeWidth = touchedProbe.map(t => math.min(n, math.max(1, t.size))).getOrElse(n)
     deduped.repartition(writeWidth, col(BucketCol))
       .write.mode("overwrite").partitionBy(BucketCol).parquet(s"$root/$ts/data")
     // buckets this commit actually wrote, listed from disk, so legacy
@@ -591,7 +663,8 @@ final class VersionedTable(spark: SparkSession, root: String,
           "never read — a plan is non-deterministic; checkpoint it first")
       }
     }
-    publishRewrite(ts, prev, touchedProbe.getOrElse(Set.empty), written, deduped)
+    growIfOversized(n, written.size,
+      publishRewrite(ts, n, prev, touchedProbe.getOrElse(Set.empty), written, deduped))
     ts
   }
 
@@ -602,17 +675,17 @@ final class VersionedTable(spark: SparkSession, root: String,
     * would resurrect them from the stale file, so it falls out. A
     * commit left with no bucket keeps one empty bucket file in `rows`'
     * schema: a manifest that references nothing would make the snapshot
-    * schema unrecoverable.
+    * schema unrecoverable. Returns [[publish]]'s written bytes.
     */
-  private def publishRewrite(ts: String, prev: Option[String], probed: Set[Int],
-      written: Seq[Int], rows: => DataFrame): Unit = {
+  private def publishRewrite(ts: String, n: Int, prev: Option[String], probed: Set[Int],
+      written: Seq[Int], rows: => DataFrame): Long = {
     val prevManifest = prev.fold(Map.empty[Int, String])(writersOf)
     val emptied = probed.filter(prevManifest.contains) -- written
     val writers = (prevManifest -- emptied) ++ written.map(_ -> ts)
-    if (writers.nonEmpty) publish(ts, writers, written, prev)
+    if (writers.nonEmpty) publish(ts, n, writers, written, prev)
     else {
       rows.limit(0).drop(BucketCol).write.mode("overwrite").parquet(bucketPath(0, ts))
-      publish(ts, Map(0 -> ts), Seq(0), prev)
+      publish(ts, n, Map(0 -> ts), Seq(0), prev)
     }
   }
 
@@ -726,13 +799,12 @@ final class VersionedTable(spark: SparkSession, root: String,
       .agg(count(lit(1)).as("n"))
 
   /** Bucket-count migration — the growth path for a table whose data
-    * outlives its creation-time layout (Hudi solves the same problem
-    * with sized file groups, register_hudi.py:56-69 at real scale).
-    * Rewrites the FULL current snapshot into `newBuckets` key-hash
-    * buckets as one migration commit and stamps the new `#buckets=`
-    * manifest header; returns the handle for the migrated table (same
-    * root, new bucket count) — subsequent upserts must open with
-    * `numBuckets = newBuckets`, which the [[upsert]] guard enforces.
+    * outlives its layout (Hudi solves the same problem with sized file
+    * groups, register_hudi.py:56-69 at real scale). Rewrites the FULL
+    * current snapshot into `newBuckets` key-hash buckets as one
+    * migration commit and stamps the new `#buckets=` manifest header;
+    * returns this handle. Every later commit, on any handle, adopts the
+    * new count from that header.
     *
     * Older commits stay time-travel readable: every read is driven by
     * its own commit's manifest, so per-commit bucket counts never leak
@@ -742,13 +814,11 @@ final class VersionedTable(spark: SparkSession, root: String,
     * full read until newer commits shrink the changed-bucket set again
     * (every bucket's last writer is now the migration commit).
     *
-    * Sizing guidance: target ≤ ~1 GB per bucket (numBuckets ≈
-    * ceil(tableBytes / 1 GB), rounded up to a power of two) and migrate
-    * as the table grows — a table created with 16 buckets that reaches
-    * 100 TB would otherwise rewrite ~6 TB per touched bucket on every
-    * upsert. The migration itself is one full-table shuffle-free
-    * rewrite (read manifest paths → re-hash → partitioned write), the
-    * same cost as Hudi clustering.
+    * A commit whose rewritten buckets outgrow
+    * [[VersionedTable.TargetBucketBytes]] calls this itself (see the
+    * class doc); an explicit call re-sizes ahead of a known load. The
+    * migration is one full-table rewrite (read manifest paths → re-hash
+    * → partitioned write), the same cost as Hudi clustering.
     *
     * Crash-safe like [[upsert]]: data is written before the manifest,
     * so a dir with `data/` but no manifest is ignored as a crashed
@@ -756,33 +826,32 @@ final class VersionedTable(spark: SparkSession, root: String,
     */
   def rebucket(newBuckets: Int): VersionedTable = {
     require(newBuckets >= 1, s"newBuckets must be >= 1, got $newBuckets")
-    val migrated = new VersionedTable(spark, root, recordKey, precombine,
-      newBuckets, partitionColOpt)
-    migrationCommit(identity, migrated, newBuckets)
-    migrated
+    migrationCommit(identity, Some(newBuckets))
+    this
   }
 
   /** Full-snapshot rewrite commit — the shared engine of [[rebucket]]
     * and the schema migrations below. Reads the current snapshot,
-    * applies `transform`, rewrites every bucket under `target`'s
-    * layout, and stamps a complete manifest (all buckets → this
-    * commit). Per-row `_commit_time`s are preserved — a migration
-    * moves bytes, not records, so [[incremental]] consumers see no
-    * phantom changes. Older commits keep their own schema and layout:
+    * applies `transform`, rewrites every bucket into `buckets` buckets
+    * (the current count when None), and stamps a complete manifest (all
+    * buckets → this commit). Per-row `_commit_time`s are preserved — a
+    * migration moves bytes, not records, so [[incremental]] consumers
+    * see no phantom changes. Older commits keep their own schema and layout:
     * every read is driven by its commit's manifest, so [[asOf]] before
     * the migration returns the pre-migration schema (the time-travel
     * contract a long-lived table depends on). Crash-safe like
     * [[upsert]]: data before manifest.
     */
   private def migrationCommit(transform: DataFrame => DataFrame,
-      target: VersionedTable, targetBuckets: Int): String = {
+      buckets: Option[Int] = None): String = {
     val prev = commitDirs.lastOption.getOrElse(sys.error(s"no commits under $root"))
     // same open-guard as upsert: refuse to migrate a table opened with
-    // the wrong current layout (the caller's mental model of the
+    // the wrong partition column (the caller's mental model of the
     // layout is stale — make them re-open correctly first)
     requireLayoutMatches(prev)
     val ts = newCommitTs()
     val snap = readCommit(prev)
+    val n = buckets.getOrElse(commitBuckets(Some(prev), snap))
     // legacy (pre-bucketing) snapshots carry no per-row commit time;
     // stamp them with the migration commit so incremental stays defined
     val stamped =
@@ -791,11 +860,11 @@ final class VersionedTable(spark: SparkSession, root: String,
     val out = transform(stamped)
     require(out.columns.contains(CommitCol),
       "migration transform must preserve the per-row commit-time column")
-    out.withColumn(BucketCol, target.bucketExpr)
-      .repartition(targetBuckets, col(BucketCol)) // ~one file per bucket (see upsert)
+    out.withColumn(BucketCol, bucketExpr(n))
+      .repartition(n, col(BucketCol)) // ~one file per bucket (see upsert)
       .write.mode("overwrite").partitionBy(BucketCol).parquet(s"$root/$ts/data")
     val written = writtenBuckets(ts)
-    target.publish(ts, written.map(_ -> ts).toMap, written, None)
+    publish(ts, n, written.map(_ -> ts).toMap, written, None)
     ts
   }
 
@@ -813,7 +882,7 @@ final class VersionedTable(spark: SparkSession, root: String,
   def dropColumn(name: String): String = {
     requireMigratable(name)
     require(snapshot.columns.contains(name), s"no column $name to drop")
-    migrationCommit(_.drop(name), this, numBuckets)
+    migrationCommit(_.drop(name))
   }
 
   /** Schema migration: RENAME a payload column in the live schema as a
@@ -824,7 +893,7 @@ final class VersionedTable(spark: SparkSession, root: String,
     val cols = snapshot.columns
     require(cols.contains(from), s"no column $from to rename")
     require(!cols.contains(to), s"column $to already exists")
-    migrationCommit(_.withColumnRenamed(from, to), this, numBuckets)
+    migrationCommit(_.withColumnRenamed(from, to))
   }
 
   /** Schema migration: WIDEN a column's type (int→long, float→double,
@@ -846,7 +915,7 @@ final class VersionedTable(spark: SparkSession, root: String,
     val to = org.apache.spark.sql.types.DataType.fromDDL(toType)
     require(org.apache.spark.sql.catalyst.expressions.Cast.canUpCast(from, to),
       s"cast ${from.simpleString} -> ${to.simpleString} is not a lossless widening")
-    migrationCommit(_.withColumn(name, col(name).cast(to)), this, numBuckets)
+    migrationCommit(_.withColumn(name, col(name).cast(to)))
   }
 
   /** Incremental pull (Hudi incremental-query semantics): records whose
@@ -894,12 +963,13 @@ final class VersionedTable(spark: SparkSession, root: String,
     * manifest-addressed directory. `values` is any frame carrying the
     * table's bucket column (the payload partition column when
     * configured, else the record key); it may be arbitrarily large —
-    * what's collected is the DISTINCT bucket ids, ≤ numBuckets longs,
-    * bounded regardless of input size. Returns the touched buckets'
+    * what's collected is the DISTINCT bucket ids, ≤ bucket-count longs,
+    * bounded regardless of input size. Values hash under the count the
+    * latest commit was written with. Returns the touched buckets'
     * FULL rows (a bucket holds other values too — the caller's
     * semi-join/filter restores exactness, e.g. repairParts' affected-
-    * cluster semi). Legacy manifest-less snapshots fall back to the
-    * full read (nothing to prune). Verify the pruning with
+    * cluster semi). Legacy manifest-less snapshots, and a manifest
+    * whose bucket count is unknown, fall back to the full read. Verify the pruning with
     * `df.inputFiles` — every path carries its `_bucket=N`.
     */
   def snapshotPrunedBy(values: DataFrame): DataFrame = {
@@ -909,8 +979,9 @@ final class VersionedTable(spark: SparkSession, root: String,
     val prev = commitDirs.lastOption.getOrElse(
       sys.error(s"no commits under $root"))
     val m = writersOf(prev)
-    if (m.isEmpty) return readCommit(prev) // legacy: no pruning possible
-    val wanted = values.select(bucketExprOf(col(bucketCol)).as("b"))
+    val n = bucketsOf(prev).getOrElse(0)
+    if (m.isEmpty || n == 0) return readCommit(prev) // nothing to prune by
+    val wanted = values.select(bucketExpr(n).as("b"))
       .distinct().collect().map(_.getLong(0).toInt).toSet
     val pruned = m.filter { case (b, _) => wanted(b) }
     // schema-stable empty WITHOUT a full-manifest listing: one bucket

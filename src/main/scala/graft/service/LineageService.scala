@@ -31,7 +31,12 @@ import graft.operators.Provenance
   * (schema field order, null fields omitted) — so a request launches no
   * Spark job. Control-plane result sets are small by construction
   * (per-batch rows, top-N). A negative `?limit=` or a query string
-  * that does not decode is a client error: 400 with a `detail`.
+  * that does not decode is a client error: 400 with a `detail`. One
+  * client error never reaches a handler: the JDK server refuses a
+  * request line holding a raw malformed percent-escape
+  * (`/provenance/search?status=%zz`) with its own 400, whose body is
+  * HTML (`<h1>400 Bad Request</h1>…`), not `{"detail":…}`. A client
+  * that parses every 4xx body as JSON must allow for it.
   */
 final class LineageService(provenance: Provenance, bindPort: Int = 0) {
   import LineageService.{jsonArray, jsonObject}

@@ -3,8 +3,10 @@ package graft.sources
 import java.io.{BufferedReader, InputStreamReader}
 import java.nio.charset.StandardCharsets
 
+import com.univocity.parsers.csv.CsvParser
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -55,6 +57,19 @@ object Readers {
     val schema = spark.read.option("header", "true").csv(header).schema
     spark.read.option("header", "true").schema(schema).csv(path)
   }
+
+  /** The names in a CSV file's header line as csv.DictReader reads them:
+    * unlike [[csvInferHeader]]'s columns, a repeated name is not renamed
+    * (`notes,notes` keeps `notes`); an empty name is left out. Parsed on
+    * the driver with the CSV source's own parser settings; empty for a
+    * file without a non-blank line.
+    */
+  def csvHeaderNames(spark: SparkSession, path: String): Seq[String] =
+    firstNonBlankLine(spark, path).toSeq.flatMap { line =>
+      val options = new CSVOptions(Map.empty[String, String], false,
+        spark.sessionState.conf.sessionLocalTimeZone)
+      new CsvParser(options.asParserSettings).parseLine(line).toSeq.filter(_ != null)
+    }
 
   /** The first line of a text file that is not empty or all spaces (the
     * CSV source's own test), less a leading byte-order mark.

@@ -175,6 +175,23 @@ class PipelineSpec extends SparkSpec {
     assert(spark.read.parquet(r.getAs[String]("version_path")).count() == 600)
   }
 
+  test("a zero-byte CSV is quarantined; the CSV beside it completes") {
+    val base = Fixtures.tmpDir("srcempty")
+    Fixtures.write(base.resolve("hospital_a/a_empty.csv"), "")
+    Fixtures.write(base.resolve("hospital_a/b_good.csv"), Fixtures.csvGood)
+    val lake = Fixtures.tmpDir("lakeempty").toString
+    val p = new Pipeline(spark, lake)
+    p.runAll(base.toString)
+    val rows = p.provenance.batchRows.map(r =>
+      Paths.get(r.getAs[String]("raw_file_path")).getFileName.toString -> r).toMap
+    assert(rows.view.mapValues(_.getAs[String]("status")).toMap ==
+      Map("a_empty.csv" -> "FAILED_VALIDATION", "b_good.csv" -> "COMPLETED"))
+    val failed = p.provenance.batchTimeline(rows("a_empty.csv").getAs[String]("batch_id"))
+      .find(_.getAs[String]("step_name") == "VALIDATION_FAILED").get.getAs[String]("details_json")
+    assert(failed.contains(s""""missing_columns":"${Seeds.hospitalA.fields.map(_.name).mkString(",")}""""), failed)
+    assert(Files.exists(Paths.get(lake, "quarantine", "hospital_a", "a_empty.csv")))
+  }
+
   test("an HL7 file whose message 230 of 250 has no PID segment is quarantined") {
     val good = Fixtures.hl7Good.split("\n\n")(0).trim
     def file(bad: Option[Int]): String = (1 to 250).map(i =>

@@ -370,13 +370,15 @@ class StreamingSpec extends SparkSpec {
     StreamingIngest.start(spark, pipeline, srcBase.toString, freshCkpt).awaitTermination(120000)
     assert(pipeline.provenance.batches.count() == 3)
 
-    // the streamed batches flow into the normal batch stages (the empty
-    // file is schema-on-read valid with zero rows, like the batch path)
+    // the streamed batches flow into the normal batch stages; the empty
+    // file has no header, so it is quarantined with every column
+    // missing, like the batch path
     val validated = pipeline.validatePending()
-    assert(validated.size == 3 && validated.forall(_._2))
+    assert(validated.size == 3 && validated.map(_._2).sorted == Seq(false, true, true))
+    assert(validated.filterNot(_._2).map(_._1).forall(_.startsWith("hospital_a_empty_csv_")))
     val statuses = pipeline.provenance.batches.select("status")
-      .collect().map(_.getString(0)).toSet
-    assert(statuses == Set("VALIDATED"))
+      .collect().map(_.getString(0)).sorted.toSeq
+    assert(statuses == Seq("FAILED_VALIDATION", "VALIDATED", "VALIDATED"))
   }
 
   test("batch windowed query q29 equals streaming result shape") {

@@ -426,17 +426,29 @@ class VersionedTableSpec extends SparkSpec {
     assert(Files.exists(Paths.get(s"$root/$crashed")), "crashed dir left for inspection")
   }
 
-  test("opening a table with a different bucket count fails fast") {
+  test("a handle opened with another bucket count adopts the stored one") {
     val root = Fixtures.tmpDir("vtb").toString
     new VersionedTable(spark, root, "k", "v", numBuckets = 8)
-      .upsert(Seq(("A", "1", "p")).toDF("k", "v", "payload"))
-    val wrong = new VersionedTable(spark, root, "k", "v", numBuckets = 16)
-    val e = intercept[IllegalArgumentException] {
-      wrong.upsert(Seq(("B", "1", "q")).toDF("k", "v", "payload"))
+      .upsert((1 to 40).map(i => (s"K$i", "1", s"p$i")).toDF("k", "v", "payload"))
+    // hashed into 16 buckets, these keys would land in buckets the
+    // 8-bucket manifest does not cover and survive next to their old rows
+    val other = new VersionedTable(spark, root, "k", "v", numBuckets = 16)
+    val up = Seq("K1", "K2", "K41")
+    val c2 = other.upsert(Seq(("K1", "2", "p1b"), ("K2", "0", "stale"), ("K41", "1", "p41"))
+      .toDF("k", "v", "payload"))
+    val c3 = other.delete(Seq("K3").toDF("k"))
+    def written(c: String): Set[Int] = graft.util.Fs.list(Paths.get(s"$root/$c/data"))
+      .map(_.getFileName.toString).filter(_.startsWith("_bucket="))
+      .map(_.stripPrefix("_bucket=").toInt).toSet
+    assert(written(c2) == up.map(bucketOf(_, 8)).toSet)
+    assert(written(c3).subsetOf(Set(bucketOf("K3", 8))))
+    for (c <- Seq(c2, c3))
+      assert(Files.readAllLines(Paths.get(s"$root/$c/manifest.tsv")).get(0) == "#buckets=8", c)
+    val want = (1 to 41).map(i => s"K$i" -> s"p$i").toMap + ("K1" -> "p1b") - "K3"
+    for (t <- Seq(other, new VersionedTable(spark, root, "k", "v"))) {
+      val rows = t.snapshot.collect().map(r => r.getAs[String]("k") -> r.getAs[String]("payload"))
+      assert(rows.length == want.size && rows.toMap == want)
     }
-    assert(e.getMessage.contains("numBuckets=8"))
-    // reads are unaffected (bucket paths come from the manifest)
-    assert(wrong.snapshot.count() == 1)
   }
 
   test("incremental works on a legacy manifest-less snapshot") {
@@ -573,28 +585,33 @@ class VersionedTableSpec extends SparkSpec {
       .map(r => r.getAs[String]("k") -> r.getAs[String]("payload")).toMap.apply("K1") == "p1")
     assert(vt16.asOf(c2).count() == 80)
 
-    // the upsert guard accepts the post-migration table at 16...
+    // the migrated table takes upserts at 16...
     vt16.upsert(Seq(("K2", "3", "p2c")).toDF("k", "v", "payload"))
     assert(vt16.snapshot.collect()
       .map(r => r.getAs[String]("k") -> r.getAs[String]("payload")).toMap.apply("K2") == "p2c")
-    // ...and rejects the stale 4-bucket handle
-    val e = intercept[IllegalArgumentException] {
-      vt4.upsert(Seq(("K3", "3", "x")).toDF("k", "v", "payload"))
-    }
-    assert(e.getMessage.contains("numBuckets=16"))
+    // ...and so does a handle opened with the old count: it adopts 16
+    val stale = new VersionedTable(spark, root, "k", "v", numBuckets = 4)
+    val c4 = stale.upsert(Seq(("K3", "3", "x")).toDF("k", "v", "payload"))
+    assert(Files.readAllLines(Paths.get(s"$root/$c4/manifest.tsv")).get(0) == "#buckets=16")
+    val m = stale.snapshot.collect().map(r => r.getAs[String]("k") -> r.getAs[String]("payload"))
+    assert(m.length == 80 && m.toMap.apply("K3") == "x" && m.toMap.apply("K2") == "p2c")
   }
 
   test("suggestBucketCount sizes by ~1 GB per bucket in powers of two") {
     val G = 1L << 30
-    assert(VersionedTable.suggestBucketCount(0L) == 1)
-    assert(VersionedTable.suggestBucketCount(G) == 1)
-    assert(VersionedTable.suggestBucketCount(G + 1) == 2)
-    assert(VersionedTable.suggestBucketCount(100L * G) == 128)
-    assert(VersionedTable.suggestBucketCount(100L * 1024 * G) == 131072, "100 TB")
-    assert(VersionedTable.suggestBucketCount(Long.MaxValue / 2) == (1 << 20), "capped")
-    assert(VersionedTable.suggestBucketCount(Long.MaxValue) == (1 << 20),
+    assert(VersionedTable.suggestBucketCount(0L, G) == 1)
+    assert(VersionedTable.suggestBucketCount(G, G) == 1)
+    assert(VersionedTable.suggestBucketCount(G + 1, G) == 2)
+    assert(VersionedTable.suggestBucketCount(100L * G, G) == 128)
+    assert(VersionedTable.suggestBucketCount(100L * 1024 * G, G) == 131072, "100 TB")
+    assert(VersionedTable.suggestBucketCount(Long.MaxValue / 2, G) == (1 << 20), "capped")
+    assert(VersionedTable.suggestBucketCount(Long.MaxValue, G) == (1 << 20),
       "near-max sizes must hit the cap, not overflow to 1")
-    intercept[IllegalArgumentException](VersionedTable.suggestBucketCount(-1))
+    intercept[IllegalArgumentException](VersionedTable.suggestBucketCount(-1, G))
+    // the default target is 128 MB
+    assert(VersionedTable.suggestBucketCount(128L << 20) == 1)
+    assert(VersionedTable.suggestBucketCount((128L << 20) + 1) == 2)
+    assert(VersionedTable.suggestBucketCount(G) == 8)
   }
 
   test("rebucket preserves per-record commit times (incremental sees no phantoms)") {
@@ -1107,5 +1124,158 @@ class VersionedTableSpec extends SparkSpec {
     assertReadsMatchReference(vt8, root, "rebucketed")
     assertReadsMatchReference(cold(8), root, "cold after rebucket")
     assertReadsMatchReference(vt, root, "pre-rebucket handle")
+  }
+
+  /** `df`'s rows with each commit id in `_commit_time` replaced by its
+    * ordinal in `ids`, so two tables' reads compare across commit ids.
+    */
+  private def rowsByOrdinal(df: DataFrame, ids: Seq[String]): Seq[String] = {
+    val ord = ids.zipWithIndex.toMap
+    val at = df.columns.indexOf("_commit_time")
+    df.collect().map(r => r.toSeq.zipWithIndex.map { case (v, i) =>
+      if (i == at) s"c${ord(v.asInstanceOf[String])}" else v
+    }.mkString("|")).toSeq.sorted
+  }
+
+  /** Every read of `got` equals the same read of `want`, commit ids
+    * matched by ordinal: snapshot, and at each commit of `at` (every
+    * one by default) asOf, incremental and diff to the next and the
+    * last commit; and the precombine stat.
+    */
+  private def assertSameTable(got: VersionedTable, gotIds: Seq[String],
+      want: VersionedTable, wantIds: Seq[String], what: String,
+      at: Seq[Int] = Nil): Unit = {
+    def same(g: DataFrame, w: DataFrame, read: String): Unit = {
+      assert(g.schema == w.schema, s"$what $read: schema")
+      assert(rowsByOrdinal(g, gotIds) == rowsByOrdinal(w, wantIds), s"$what $read: rows")
+    }
+    same(got.snapshot, want.snapshot, "snapshot")
+    assert(got.maxPrecombineStat == want.maxPrecombineStat, s"$what maxPrecombineStat")
+    for (i <- if (at.isEmpty) gotIds.indices else at) {
+      same(got.asOf(gotIds(i)), want.asOf(wantIds(i)), s"asOf($i)")
+      same(got.incremental(gotIds(i)), want.incremental(wantIds(i)), s"incremental($i)")
+      for (j <- Set(i + 1, gotIds.size - 1) if j > i && j < gotIds.size)
+        same(got.diff(gotIds(i), gotIds(j)), want.diff(wantIds(i), wantIds(j)), s"diff($i, $j)")
+    }
+  }
+
+  private def parquetBytes(dir: String): Seq[Long] =
+    Files.walk(Paths.get(dir)).iterator().asScala.filter(_.toString.endsWith(".parquet"))
+      .map(Files.size(_)).toSeq
+
+  test("a small default table is one bucket and reads as a 16-bucket table") {
+    val rnd = new scala.util.Random(12)
+    def rec(k: String, pre: Long): (String, Long, String, String) =
+      (k, pre, s"name ${rnd.nextInt(1000)}", rnd.alphanumeric.take(40).mkString)
+    var next = 0
+    def newKey() = { next += 1; f"P$next%07d" }
+    // the op mix of the lake_versioned bench: a bulk load, then upserts
+    // of higher, lower and equal precombine on live keys, re-inserts of
+    // deleted keys and new keys, and deletes of live and absent keys
+    val live = scala.collection.mutable.Map.empty[String, Long]
+    val deleted = scala.collection.mutable.ArrayBuffer.empty[String]
+    val ops = scala.collection.mutable.ArrayBuffer
+      .empty[Either[Seq[String], Seq[(String, Long, String, String)]]]
+    def upsert(rows: Seq[(String, Long, String, String)]): Unit = {
+      rows.foreach(r => if (live.get(r._1).forall(r._2 >= _)) live(r._1) = r._2)
+      ops += Right(rows)
+    }
+    upsert(Seq.fill(1000)(rec(newKey(), rnd.nextInt(1000).toLong)))
+    for (_ <- 1 to 2; step <- 0 until 4) {
+      if (step == 2) {
+        val keys = rnd.shuffle(live.keys.toSeq.sorted).take(4)
+        keys.foreach(live.remove); deleted ++= keys
+        ops += Left(keys :+ newKey())
+      } else {
+        val chosen = rnd.shuffle(live.keys.toSeq.sorted).take(8)
+        val rows = chosen.zipWithIndex.map { case (k, i) =>
+          rec(k, live(k) + (if (i < 3) 3 else if (i < 6) -3 else 0))
+        } ++ (1 to math.min(deleted.size, 2)).map(_ => rec(deleted.remove(rnd.nextInt(deleted.size)), 5L))
+        upsert(rows ++ Seq.fill(16 - rows.size)(rec(newKey(), rnd.nextInt(1000).toLong)))
+      }
+    }
+    def run(vt: VersionedTable): Seq[String] = ops.toSeq.map {
+      case Right(rows) => vt.upsert(rows.toDF("patient_id", "pre", "name", "note"))
+      case Left(keys) => vt.delete(keys.toDF("patient_id"))
+    }
+    val sizedRoot = Fixtures.tmpDir("vtsized").toString
+    val sized = new VersionedTable(spark, sizedRoot, "patient_id", "pre")
+    val fixed = new VersionedTable(spark, Fixtures.tmpDir("vtfixed").toString, "patient_id", "pre",
+      numBuckets = 16)
+    val (sizedIds, fixedIds) = (run(sized), run(fixed))
+    assert(parquetBytes(s"$sizedRoot/${sizedIds.head}/data").size == 1, "the bulk load is one file")
+    assert(sized.commits == sizedIds.reverse, "no growth commit on a 1,000-row table")
+    for (c <- sizedIds)
+      assert(Files.readAllLines(Paths.get(s"$sizedRoot/$c/manifest.tsv")).get(0) == "#buckets=1")
+    assert(sized.snapshot.collect().map(_.getAs[String]("patient_id")).toSet == live.keySet)
+    assertSameTable(sized, sizedIds, fixed, fixedIds, "sized vs fixed")
+  }
+
+  test("past the target a table doubles its buckets; 16-row commits stay small") {
+    val target = 16L << 10
+    val rnd = new scala.util.Random(7)
+    def rows(keys: Seq[Int], pre: Long) =
+      keys.map(k => (f"K$k%06d", pre, rnd.alphanumeric.take(48).mkString)).toDF("k", "pre", "payload")
+    val root = Fixtures.tmpDir("vtgrow").toString
+    val vt = new VersionedTable(spark, root, "k", "pre")
+    vt.targetBucketBytes = target
+    val ref = new VersionedTable(spark, Fixtures.tmpDir("vtgrowref").toString, "k", "pre",
+      numBuckets = 16)
+    def buckets: Int = Files.readAllLines(Paths.get(s"$root/${vt.commits.head}/manifest.tsv"))
+      .get(0).stripPrefix("#buckets=").toInt
+    val ids = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+    // (ordinal of the commit that grew the table, count before, after)
+    val growth = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Int)]
+    def both(df: DataFrame): String = {
+      val before = if (ids.isEmpty) 1 else buckets
+      ids += vt.upsert(df) -> ref.upsert(df)
+      if (buckets != before) growth += ((ids.size - 1, before, buckets))
+      ids.last._1
+    }
+    both(rows(1 to 100, 1L))
+    assert(buckets == 1)
+    var size = 100
+    val smallCommitBytes = scala.collection.mutable.ArrayBuffer.empty[Long]
+    while (size < 10000) {
+      // at most double the rows: every insert rewrites every bucket, so
+      // the mean bucket starts at most at the target and ends at most at
+      // twice it, and each growth is one doubling
+      val add = math.min(size, 10000 - size)
+      both(rows(size + 1 to size + add, 1L))
+      size += add
+      // a 16-row upsert: 12 updates spread over the keys, 4 new keys
+      val keys = (1 to 12).map(i => i * size / 13) ++ (size + 1 to size + 4)
+      size += 4
+      smallCommitBytes += parquetBytes(s"$root/${both(rows(keys, 2L))}/data").sum
+    }
+    assert(vt.snapshot.count() >= 100 * 100)
+    assert(growth.size >= 4 && growth.forall { case (_, a, b) => b == 2 * a }, s"growth: $growth")
+    assert(smallCommitBytes.forall(_ <= 16 * target), s"bytes per 16-row commit: $smallCommitBytes")
+    // reads before, across and after each doubling
+    val around = growth.flatMap(g => Seq(g._1 - 1, g._1, g._1 + 1)).filter(ids.indices.contains)
+    assertSameTable(vt, ids.map(_._1).toSeq, ref, ids.map(_._2).toSeq, "grown vs fixed",
+      around.distinct.sorted.toSeq)
+  }
+
+  test("commit ids carry milliseconds: asOf(now) sees ten back-to-back commits") {
+    val fmt = java.time.format.DateTimeFormatter.ofPattern("yyyyMMddHHmmssSSS")
+      .withZone(java.time.ZoneOffset.UTC)
+    val root = Fixtures.tmpDir("vtclock").toString
+    val vt = new VersionedTable(spark, root, "k", "pre", numBuckets = 1)
+    val ids = (1 to 10).map(i => vt.upsert(Seq(("A", i.toLong, s"v$i")).toDF("k", "pre", "payload")))
+    val now = fmt.format(java.time.Instant.now())
+    assert(ids.forall(_.matches("\\d{17}")) && ids.distinct == ids.sorted, s"$ids")
+    assert(vt.asOf(now).collect().map(_.getAs[String]("payload")).toSeq == Seq("v10"))
+    // a 14-digit id, a second ahead of the clock as the old minting
+    // could leave it: it still reads, and the next id sorts after it
+    val old = (ids.last.take(14).toLong + 1).toString
+    Files.move(Paths.get(s"$root/${ids.last}"), Paths.get(s"$root/$old"))
+    val manifest = Paths.get(s"$root/$old/manifest.tsv")
+    Files.writeString(manifest, Files.readString(manifest).replace(ids.last, old))
+    val reopened = new VersionedTable(spark, root, "k", "pre")
+    assert(reopened.commits.take(2) == Seq(old, ids(8)))
+    assert(reopened.snapshot.collect().map(_.getAs[String]("payload")).toSeq == Seq("v10"))
+    val after = reopened.upsert(Seq(("A", 11L, "v11")).toDF("k", "pre", "payload"))
+    assert(after.length == 17 && after > old && reopened.commits.take(2) == Seq(after, old))
   }
 }
