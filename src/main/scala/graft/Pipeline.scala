@@ -115,10 +115,9 @@ final class Pipeline(
         else spec match {
           case None => ValidationResult(valid = true, 0, Nil, Nil) // VALIDATION_SKIPPED
           case Some(sp) => sp.format match {
-            // missing columns by the file's header line (SURVEY P6): a
-            // zero-byte file has none
-            case SourceFormat.Csv   => Validator.validate(Readers.csv(spark, sp, rawPath), sp,
-              columns = Some(Readers.csvHeaderNames(spark, rawPath)))
+            // columns by the file's header line (SURVEY P6): a zero-byte
+            // file has none
+            case SourceFormat.Csv   => Validator.validate(Readers.csv(spark, sp, rawPath), sp)
             // every JSONL row is checked (etl/validate.py:127-158)
             case SourceFormat.Jsonl => Validator.validate(Readers.jsonl(spark, sp, rawPath), sp, probeAll = true)
             case SourceFormat.Hl7   => Validator.validateHl7(Readers.hl7Messages(spark, rawPath), sp)

@@ -91,13 +91,11 @@ object Validator {
   /** Validate a tabular batch frame against its metadata. The probes
     * cover the first [[SampleRows]] rows (CSV, validate.py:111-120), or
     * every row with `probeAll` (JSONL, validate.py:127-158). A spec
-    * column is missing when `columns` (the file's own header, for a CSV
-    * read with the spec's schema) or else `df` lacks it.
+    * column is missing when `df` lacks it.
     */
-  def validate(df: DataFrame, spec: SourceSpec, probeAll: Boolean = false,
-      columns: Option[Seq[String]] = None): ValidationResult = {
+  def validate(df: DataFrame, spec: SourceSpec, probeAll: Boolean = false): ValidationResult = {
     val expected = spec.fields.map(_.name)
-    val missing = expected.diff(columns.getOrElse(df.columns.toSeq))
+    val missing = expected.diff(df.columns.toSeq)
     val (rowCount, errors) = countAndProbe(df, errorArray(df, spec), if (probeAll) None else Some(SampleRows))
     ValidationResult(missing.isEmpty && errors.isEmpty, rowCount, missing, errors)
   }

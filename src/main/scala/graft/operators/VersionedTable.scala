@@ -5,10 +5,12 @@ import java.nio.file.{FileAlreadyExistsException, Files, NoSuchFileException, Pa
 import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
+import org.apache.parquet.ParquetReadOptions
+import org.apache.parquet.conf.PlainParquetConfiguration
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.io.LocalInputFile
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -41,9 +43,20 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * manifest's bucket paths; untouched buckets' files are shared between
   * commits without being copied or rewritten — so a 1-row upsert into a
   * 100 TB table rewrites one bucket, not the table. This is the same
-  * file-group/commit-timeline idea Hudi uses. The merge itself is one
-  * shuffle on recordKey (row_number window) over just the touched
-  * buckets' rows.
+  * file-group/commit-timeline idea Hudi uses.
+  *
+  * The bucket layout does the clustering a commit needs, as Hudi's
+  * bucket index does (https://hudi.apache.org/docs/indexes). The
+  * touched buckets come from one probe with no shuffle (no job at all on
+  * a one-bucket table). The touched rows are tagged with their bucket
+  * and clustered once before the precombine window: into one task when
+  * they fit [[VersionedTable.TargetBucketBytes]] by Catalyst's size
+  * estimate, else by a shuffle on the bucket. A record-key-bucketed
+  * table windows over (bucket, recordKey) — the same groups as
+  * recordKey alone, as the bucket is a function of the key — so neither
+  * the window nor the bucket-partitioned write adds an exchange: a small
+  * upsert is one Spark job, and every touched bucket is one file. A
+  * small [[diff]] joins its two sides in one task the same way.
   *
   * The bucket count follows the table's bytes, as Hudi's file sizing
   * does (https://hudi.apache.org/docs/file_sizing). A table's first
@@ -73,6 +86,8 @@ object VersionedTable {
     * touched-bucket rewrite stays one comfortable task.
     */
   val TargetBucketBytes: Long = 128L << 20
+
+  private val FooterOptions = ParquetReadOptions.builder(new PlainParquetConfiguration()).build()
 
   /** The bucket-sizing rule: enough buckets to keep each at or under
     * `targetBucketBytes`, rounded UP to a power of two so successive
@@ -182,19 +197,15 @@ final class VersionedTable(spark: SparkSession, root: String,
       .filter(Files.isDirectory(_)).map(_.getFileName.toString)
       .filter(_.matches("\\d{14}(\\d{3})?")).sorted
 
-  /** A commit is COMPLETE when its manifest exists, or when it is a
-    * legacy pre-bucketing snapshot (parquet directly in the dir, no
-    * `data/`). A dir with `data/` but no manifest is a crashed upsert —
-    * it must be ignored, NOT read as a legacy snapshot: its data/ holds
-    * only the touched buckets, and treating that partial write as the
-    * whole table would silently drop every other bucket. A dir holding
-    * neither (a commit that died before its data, or while publishing
-    * its manifest's temp file) is no commit either.
+  /** A commit is COMPLETE when its manifest exists. A dir with `data/`
+    * but no manifest is a crashed commit and is ignored: its data/ holds
+    * only the touched buckets, and reading that partial write as the
+    * whole table would drop every other bucket. A dir that died before
+    * its data, or while publishing its manifest's temp file, is no
+    * commit either.
     */
   private def isComplete(ts: String): Boolean =
-    manifests.contains(ts) || Files.exists(manifestPath(ts)) ||
-      (!Files.isDirectory(Paths.get(s"$root/$ts/data")) &&
-        graft.util.Fs.list(Paths.get(s"$root/$ts")).exists(isParquet))
+    manifests.contains(ts) || Files.exists(manifestPath(ts))
 
   private def commitDirs: Seq[String] = commitDirsAll.filter(isComplete)
 
@@ -229,7 +240,7 @@ final class VersionedTable(spark: SparkSession, root: String,
 
   private def manifestPath(ts: String) = Paths.get(s"$root/$ts/manifest.tsv")
 
-  /** The commit's manifest, or None for a legacy or incomplete dir. */
+  /** The commit's manifest, or None for an incomplete dir. */
   private def manifest(ts: String): Option[VersionedTable.Manifest] =
     manifests.get(ts).orElse {
       try {
@@ -239,18 +250,21 @@ final class VersionedTable(spark: SparkSession, root: String,
       } catch { case _: NoSuchFileException => None }
     }
 
-  /** Bucket → writer map of a commit (empty for a legacy snapshot). */
+  /** Bucket → writer map of a complete commit. */
   private def writersOf(ts: String): Map[Int, String] =
-    manifest(ts).fold(Map.empty[Int, String])(_.writers)
+    manifest(ts).getOrElse(sys.error(s"commit $ts under $root has no manifest")).writers
 
   private def isParquet(p: Path) = p.getFileName.toString.endsWith(".parquet")
 
   private def parquetFiles(dir: String): Seq[Path] =
     graft.util.Fs.list(Paths.get(dir)).filter(isParquet).sortBy(_.toString)
 
-  /** A parquet file's footer, read on the driver. */
+  /** A parquet file's footer, read on the driver with parquet's own
+    * settings: the default options would build a Hadoop `Configuration`
+    * per footer, which re-reads its XML resources.
+    */
   private def footer(f: Path): ParquetMetadata = {
-    val r = ParquetFileReader.open(new LocalInputFile(f))
+    val r = ParquetFileReader.open(new LocalInputFile(f), VersionedTable.FooterOptions)
     try r.getFooter finally r.close()
   }
 
@@ -341,7 +355,7 @@ final class VersionedTable(spark: SparkSession, root: String,
     * derived from manifest stamp stats alone — no Spark job, no table
     * scan. Some(Some(v)): the max is v. Some(None): known — every live
     * row's precombine is null (or the table is logically empty).
-    * None: the stat is unavailable (no commits, a legacy/partially
+    * None: the stat is unavailable (no commits, a v1 or partially
     * stamped manifest) — fall back to the aggregation. Equivalence:
     * the snapshot is the disjoint union of its manifest's buckets,
     * each written wholesale by its referencing commit with its stamp
@@ -364,8 +378,8 @@ final class VersionedTable(spark: SparkSession, root: String,
   }
 
   /** The bucket count commit `ts` was written with: its manifest's
-    * `#buckets=`, else (a legacy snapshot, or a manifest from before the
-    * header) the count this handle was seeded with, if any.
+    * `#buckets=`, else (a manifest from before the header) the count
+    * this handle was seeded with, if any.
     */
   private def bucketsOf(ts: String): Option[Int] = manifest(ts).flatMap(_.buckets).orElse(seeded)
 
@@ -378,11 +392,43 @@ final class VersionedTable(spark: SparkSession, root: String,
     * which the first commit's growth check then corrects.
     */
   private def commitBuckets(prev: Option[String], rows: => DataFrame): Int =
-    prev.fold(seeded)(bucketsOf).getOrElse {
-      val est = rows.queryExecution.optimizedPlan.stats.sizeInBytes
-      if (est >= spark.sessionState.conf.defaultSizeInBytes) 1
-      else VersionedTable.suggestBucketCount(est.toLong, targetBucketBytes)
-    }
+    prev.fold(seeded)(bucketsOf).getOrElse(
+      estimatedBytes(rows).fold(1)(VersionedTable.suggestBucketCount(_, targetBucketBytes)))
+
+  /** `rows`' Catalyst size estimate over the analyzed plan, which runs
+    * no job and no optimizer pass; None when Spark could not make one
+    * (`spark.sql.defaultSizeInBytes` or more).
+    */
+  private def estimatedBytes(rows: DataFrame): Option[Long] = {
+    val est = rows.queryExecution.analyzed.stats.sizeInBytes
+    if (est >= spark.sessionState.conf.defaultSizeInBytes) None else Some(est.toLong)
+  }
+
+  /** Whether `frames` together fit one bucket target by their estimate:
+    * then one task clusters them, with no shuffle.
+    */
+  private def fitsOneTask(frames: DataFrame*): Boolean = {
+    val ests = frames.map(estimatedBytes)
+    ests.forall(_.isDefined) && ests.flatten.sum <= targetBucketBytes
+  }
+
+  /** The buckets `frames`' bucket-column values hash to under `n`
+    * buckets. A one-bucket table needs no job; otherwise one job with no
+    * shuffle, each partition returning its distinct ids — at most `n`
+    * ints, however large the frames.
+    */
+  private def probeBuckets(n: Int, frames: Seq[DataFrame]): Set[Int] =
+    if (n == 1) Set(0)
+    else frames.map(_.select(bucketExpr(n).cast("int"))).reduce(_.unionAll(_))
+      .as(Encoders.scalaInt).mapPartitions(_.toSet.iterator)(Encoders.scalaInt)
+      .collect().toSet
+
+  /** Bucket-tagged `rows` clustered for a write of `width` touched
+    * buckets, each bucket within one task: all in one task when `one`
+    * (no shuffle), else a shuffle on the bucket.
+    */
+  private def cluster(rows: DataFrame, one: Boolean, width: Int): DataFrame =
+    if (one) rows.coalesce(1) else rows.repartition(width, col(BucketCol))
 
   /** Grow an oversized layout: when the `rewritten` buckets of a commit
     * under `n` buckets hold more than [[targetBucketBytes]] on average,
@@ -434,14 +480,8 @@ final class VersionedTable(spark: SparkSession, root: String,
       .map(_.getFileName.toString).filter(_.startsWith(s"$BucketCol="))
       .map(_.stripPrefix(s"$BucketCol=").toInt)
 
-  /** Read the table as of a commit via its manifest (legacy fallback:
-    * a manifest-less commit dir is read as a plain parquet snapshot).
-    */
-  private def readCommit(ts: String): DataFrame = {
-    val m = writersOf(ts)
-    if (m.isEmpty) spark.read.parquet(s"$root/$ts")
-    else readGrouped(m)
-  }
+  /** Read the table as of a commit via its manifest. */
+  private def readCommit(ts: String): DataFrame = readGrouped(writersOf(ts))
 
   /** Manifest-driven read with SCHEMA EVOLUTION across commits: bucket
     * files are grouped by the memoized row schema of their writing
@@ -473,7 +513,10 @@ final class VersionedTable(spark: SparkSession, root: String,
     * max-precombine row per key; on precombine ties the incoming
     * (update) row wins, matching Hudi's "latest write wins" for equal
     * precombine values. Buckets the update doesn't touch are carried
-    * forward by manifest reference — zero data movement.
+    * forward by manifest reference — zero data movement. The touched
+    * rows are clustered once by bucket (see the class doc): an upsert
+    * that fits one bucket target is one Spark job on a one-bucket
+    * table, and a probe job plus the write on a larger one.
     */
   def upsert(updates0: DataFrame): String = merge("upsert", None, updates0, None)
 
@@ -504,43 +547,33 @@ final class VersionedTable(spark: SparkSession, root: String,
     * resurrects them, exactly like Hudi COW time travel.
     *
     * Like [[upsert]], the keys plan is evaluated twice (bucket probe,
-    * then the anti-join); non-deterministic key sets should be
-    * checkpointed first — a key the probe missed would survive in an
-    * unrewritten bucket. Crash-safe: data before manifest.
+    * then the anti-join; a one-bucket table needs no probe);
+    * non-deterministic key sets should be checkpointed first — a key the
+    * probe missed would survive in an unrewritten bucket. The survivors
+    * are clustered by bucket as [[upsert]]'s rows are, so a small delete
+    * is the anti join's key broadcast and the write. Crash-safe: data
+    * before manifest.
     */
   def delete(keys0: DataFrame): String = {
     val prev = commitDirs.lastOption.getOrElse(
       sys.error(s"delete on $root: table has no commits"))
     requireLayoutMatches(prev)
-    val ts = newCommitTs()
-    val prevManifest = writersOf(prev)
     // under payload partitioning the keys frame must also carry the
     // partition column (the rows' CURRENT values) — the probe hashes
     // it to find the buckets the doomed rows live in
     requireCarriesPartCol("delete", keys0)
+    val ts = newCommitTs()
     val n = commitBuckets(Some(prev), readCommit(prev))
-    // legacy (pre-bucketing) snapshot: fold the whole table, like upsert
-    val (prevData, probed): (Option[DataFrame], Set[Int]) =
-      if (prevManifest.isEmpty) (Some(spark.read.parquet(s"$root/$prev")), Set.empty)
-      else {
-        val touched = keys0.select(bucketExpr(n).as("b")).distinct()
-          .collect().map(_.getLong(0).toInt).toSet
-        val live = touched.filter(prevManifest.contains)
-        val liveM = prevManifest.filter { case (b, _) => live(b) }
-        (if (liveM.isEmpty) None else Some(readGrouped(liveM)), live)
-      }
-    val surv = prevData.map(pd => withoutKeys(pd, keys0).withColumn(BucketCol, bucketExpr(n)))
-    val written: Seq[Int] = surv match {
-      case None => Seq.empty
-      case Some(s) =>
-        // width = touched buckets (see upsert): a key-set delete only
-        // rewrites the probed buckets
-        val writeWidth =
-          if (probed.isEmpty) n // legacy fold-in
-          else math.min(n, math.max(1, probed.size))
-        s.repartition(writeWidth, col(BucketCol))
-          .write.mode("overwrite").partitionBy(BucketCol).parquet(s"$root/$ts/data")
-        writtenBuckets(ts)
+    val prevManifest = writersOf(prev)
+    val probed = probeBuckets(n, Seq(keys0)).filter(prevManifest.contains)
+    val live = prevManifest.filter { case (b, _) => probed(b) }
+    val surv = if (live.isEmpty) None else {
+      val rows = withoutKeys(readGrouped(live), keys0)
+      Some(cluster(rows.withColumn(BucketCol, bucketExpr(n)), fitsOneTask(rows), probed.size))
+    }
+    val written = surv.fold(Seq.empty[Int]) { s =>
+      s.write.mode("overwrite").partitionBy(BucketCol).parquet(s"$root/$ts/data")
+      writtenBuckets(ts)
     }
     growIfOversized(n, written.size, publishRewrite(ts, n, Some(prev), probed, written, surv.get))
     ts
@@ -596,10 +629,6 @@ final class VersionedTable(spark: SparkSession, root: String,
     val ts = newCommitTs()
     val n = commitBuckets(prev, updates0)
     val prevManifest = prev.fold(Map.empty[Int, String])(writersOf)
-    // a manifest-less previous commit is a legacy (pre-bucketing)
-    // snapshot: fold the WHOLE snapshot into this commit — treating it
-    // as empty would silently drop every pre-existing row
-    val legacyPrev = prev.filterNot(_ => prevManifest.nonEmpty)
     // incoming rows are stamped with this commit; carried rows keep the
     // commit that last wrote them (Hudi per-record _hoodie_commit_time
     // semantics — rewritten-but-unchanged rows don't advance), which is
@@ -612,60 +641,55 @@ final class VersionedTable(spark: SparkSession, root: String,
     // written set is verified against the probe below and the commit
     // aborted on divergence (explicit error instead of data loss;
     // callers with non-deterministic sources should checkpoint first).
-    var touchedProbe: Option[Set[Int]] = None
-    val prevData: Option[DataFrame] = legacyPrev match {
-      case Some(legacy) => Some(spark.read.parquet(s"$root/$legacy"))
-      case None =>
-        // ONE probe over every frame that names a bucket: the update
-        // rows, the doomed keys, and (for moves) the old partition
-        // values — DISTINCT bucket ids, ≤ n longs, a bounded collect
-        val touched = (updates0 +: (deleteKeys0 ++ extraProbe).toSeq)
-          .map(_.select(bucketExpr(n).as("b"))).reduce(_.unionAll(_)).distinct()
-          .collect().map(_.getLong(0).toInt).toSet
-        touchedProbe = Some(touched)
-        val touchedM = prevManifest.filter { case (b, _) => touched(b) }
-        if (touchedM.isEmpty) None else Some(readGrouped(touchedM))
-    }
-    val merged = prevData match {
-      case None => tagged
-      case Some(p) =>
+    // ONE probe over every frame that names a bucket: the update rows,
+    // the doomed keys, and (for moves) the old partition values.
+    val touched = probeBuckets(n, updates0 +: (deleteKeys0 ++ extraProbe).toSeq)
+    val touchedM = prevManifest.filter { case (b, _) => touched(b) }
+    val merged =
+      if (touchedM.isEmpty) tagged
+      else {
         // delete BEFORE the merge window — the stored copy of a doomed
         // key must not survive via precombine
+        val p = readGrouped(touchedM)
         deleteKeys0.fold(p)(withoutKeys(p, _)).withColumn("_is_update", lit(0))
           .unionByName(tagged, allowMissingColumns = true)
-    }
-    val w = Window.partitionBy(col(recordKey))
-      .orderBy(col(precombine).desc, col("_is_update").desc)
-    val deduped = merged.withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1).drop("_rn", "_is_update")
-      .withColumn(BucketCol, bucketExpr(n))
-    // cluster rows by bucket before the partitioned write: the merge
-    // window shuffles on recordKey, which spreads every bucket across
-    // every task — writing from that layout fans out to (tasks ×
-    // touched buckets) small files per commit. One extra shuffle of
-    // just the touched rows gives ~one file per bucket, the Hudi
-    // file-group layout the bucket sizing assumes.
-    // Width = the TOUCHED bucket count, not the table's (r16): a
-    // 10-bucket maintenance commit on a 2048-bucket table otherwise
-    // launches 2048 near-empty write tasks — measured dominating
-    // small-commit latency 3x in the takedownlake2 probe.
-    val writeWidth = touchedProbe.map(t => math.min(n, math.max(1, t.size))).getOrElse(n)
-    deduped.repartition(writeWidth, col(BucketCol))
-      .write.mode("overwrite").partitionBy(BucketCol).parquet(s"$root/$ts/data")
-    // buckets this commit actually wrote, listed from disk, so legacy
-    // fold-ins and normal touched-bucket commits take the same path
-    val written = writtenBuckets(ts)
-    touchedProbe.foreach { touched =>
-      val unexpected = written.toSet -- touched
-      if (unexpected.nonEmpty) {
-        graft.util.Fs.deleteRecursively(Paths.get(s"$root/$ts"))
-        sys.error(s"$op aborted: inputs wrote buckets $unexpected the probe " +
-          "never read — a plan is non-deterministic; checkpoint it first")
       }
+    // Cluster once, before the window. Width = the TOUCHED bucket count,
+    // not the table's: a 10-bucket maintenance commit on a
+    // 2048-bucket table otherwise launches 2048 near-empty write tasks.
+    // A key-bucketed table windows over (bucket, key): the bucket is a
+    // function of the key, so the groups are the key's, and the bucket
+    // clustering satisfies both the window and the write. A payload-
+    // partitioned table must window on the key alone — a moved row's
+    // stale copy sits in another bucket — so unless one task holds all
+    // rows, it shuffles on the key and then on the bucket.
+    val one = fitsOneTask(merged)
+    val width = math.min(n, math.max(1, touched.size))
+    val rows = merged.withColumn(BucketCol, bucketExpr(n))
+    val out =
+      if (partitionColOpt.isEmpty) latestPerKey(cluster(rows, one, width), Seq(col(BucketCol)))
+      else if (one) latestPerKey(cluster(rows, one, width), Nil)
+      else cluster(latestPerKey(rows, Nil), one, width)
+    out.write.mode("overwrite").partitionBy(BucketCol).parquet(s"$root/$ts/data")
+    val written = writtenBuckets(ts)
+    val unexpected = written.toSet -- touched
+    if (unexpected.nonEmpty) {
+      graft.util.Fs.deleteRecursively(Paths.get(s"$root/$ts"))
+      sys.error(s"$op aborted: inputs wrote buckets $unexpected the probe " +
+        "never read — a plan is non-deterministic; checkpoint it first")
     }
-    growIfOversized(n, written.size,
-      publishRewrite(ts, n, prev, touchedProbe.getOrElse(Set.empty), written, deduped))
+    growIfOversized(n, written.size, publishRewrite(ts, n, prev, touched, written, out))
     ts
+  }
+
+  /** Each record key's winning row of `rows` under the precombine
+    * window (max precombine; on ties the incoming row), grouped by
+    * `clusterCols` and the key.
+    */
+  private def latestPerKey(rows: DataFrame, clusterCols: Seq[Column]): DataFrame = {
+    val w = Window.partitionBy(clusterCols :+ col(recordKey): _*)
+      .orderBy(col(precombine).desc, col("_is_update").desc)
+    rows.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1).drop("_rn", "_is_update")
   }
 
   /** Publish a commit that rewrote `written` of the `probed` buckets:
@@ -729,7 +753,10 @@ final class VersionedTable(spark: SparkSession, root: String,
     * (they surface as missing keys on the newer side) at the cost of
     * reading both snapshots rather than only changed buckets — the
     * classic completeness/cost trade; at scale, run it per bucket or
-    * over manifest-diff-pruned buckets.
+    * over manifest-diff-pruned buckets. When the two sides together fit
+    * [[VersionedTable.TargetBucketBytes]] by Catalyst's estimate, both
+    * are read into one task, so the join runs without an exchange: one
+    * Spark job.
     *
     * Output: recordKey, change_type, then `before_<c>` / `after_<c>`
     * for every shared payload column (null on the absent side).
@@ -741,17 +768,17 @@ final class VersionedTable(spark: SparkSession, root: String,
     // writing commit holds byte-identical files on both sides — it
     // cannot contribute a change row, so only buckets whose references
     // differ (or exist on one side only) enter the snapshot compare.
-    // Prunable only when both manifests exist and agree on the bucket
-    // count (a rebucket migration renumbers keys, making bucket ids
+    // Prunable only when both manifests agree on the bucket count (a
+    // rebucket migration renumbers keys, making bucket ids
     // incomparable); otherwise fall back to the full compare. At
     // 100 TB this turns "diff two snapshots" into "diff the touched
     // file groups" — the same bucket-granularity COW argument as
     // upsert.
-    val prunable = mA.nonEmpty && mB.nonEmpty && {
+    val prunable = {
       val (ba, bb) = (manifest(dirA).flatMap(_.buckets), manifest(dirB).flatMap(_.buckets))
       ba.isDefined && ba == bb
     }
-    val (a, b) =
+    val (a0, b0) =
       if (!prunable) (readCommit(dirA), readCommit(dirB))
       else {
         val changed = (mA.keySet ++ mB.keySet)
@@ -763,6 +790,7 @@ final class VersionedTable(spark: SparkSession, root: String,
         }
         (side(mA), side(mB))
       }
+    val (a, b) = if (fitsOneTask(a0, b0)) (a0.coalesce(1), b0.coalesce(1)) else (a0, b0)
     val payload = a.columns.toSeq.filter(c => c != recordKey && c != CommitCol)
       .filter(b.columns.contains)
     val ap = a.select(col(recordKey).as("_ka") +: lit(true).as("_pa") +:
@@ -852,16 +880,10 @@ final class VersionedTable(spark: SparkSession, root: String,
     val ts = newCommitTs()
     val snap = readCommit(prev)
     val n = buckets.getOrElse(commitBuckets(Some(prev), snap))
-    // legacy (pre-bucketing) snapshots carry no per-row commit time;
-    // stamp them with the migration commit so incremental stays defined
-    val stamped =
-      if (snap.columns.contains(CommitCol)) snap
-      else snap.withColumn(CommitCol, lit(ts))
-    val out = transform(stamped)
+    val out = transform(snap)
     require(out.columns.contains(CommitCol),
       "migration transform must preserve the per-row commit-time column")
-    out.withColumn(BucketCol, bucketExpr(n))
-      .repartition(n, col(BucketCol)) // ~one file per bucket (see upsert)
+    cluster(out.withColumn(BucketCol, bucketExpr(n)), fitsOneTask(out), n) // one file per bucket
       .write.mode("overwrite").partitionBy(BucketCol).parquet(s"$root/$ts/data")
     val written = writtenBuckets(ts)
     publish(ts, n, written.map(_ -> ts).toMap, written, None)
@@ -926,22 +948,11 @@ final class VersionedTable(spark: SparkSession, root: String,
     * rewritten bucket are correctly excluded. At 100 TB an incremental
     * consumer reads only the changed file groups, never the table.
     */
-  def incremental(sinceTs: String): DataFrame = commitDirs.lastOption match {
-    case None => sys.error(s"no commits under $root")
-    case Some(latest) =>
-      val m = writersOf(latest)
-      if (m.isEmpty) {
-        // legacy pre-bucketing snapshot: record-filter when it carries
-        // per-row commits; else the whole commit is newer-or-not
-        val df = readCommit(latest)
-        if (df.columns.contains(CommitCol)) df.filter(col(CommitCol) > sinceTs)
-        else if (latest > sinceTs) df
-        else df.filter(lit(false))
-      } else {
-        val touched = m.filter { case (_, c) => c > sinceTs }
-        if (touched.isEmpty) snapshot.filter(lit(false))
-        else readGrouped(touched).filter(col(CommitCol) > sinceTs)
-      }
+  def incremental(sinceTs: String): DataFrame = {
+    val latest = commitDirs.lastOption.getOrElse(sys.error(s"no commits under $root"))
+    val touched = writersOf(latest).filter { case (_, c) => c > sinceTs }
+    if (touched.isEmpty) readCommit(latest).filter(lit(false))
+    else readGrouped(touched).filter(col(CommitCol) > sinceTs)
   }
 
   /** Metadata-only existence check: whether the table has any complete
@@ -968,9 +979,10 @@ final class VersionedTable(spark: SparkSession, root: String,
     * latest commit was written with. Returns the touched buckets'
     * FULL rows (a bucket holds other values too — the caller's
     * semi-join/filter restores exactness, e.g. repairParts' affected-
-    * cluster semi). Legacy manifest-less snapshots, and a manifest
-    * whose bucket count is unknown, fall back to the full read. Verify the pruning with
-    * `df.inputFiles` — every path carries its `_bucket=N`.
+    * cluster semi). The bucket ids come from [[probeBuckets]]: no job on
+    * a one-bucket table, else one job with no shuffle. A manifest whose
+    * bucket count is unknown falls back to the full read. Verify the
+    * pruning with `df.inputFiles` — every path carries its `_bucket=N`.
     */
   def snapshotPrunedBy(values: DataFrame): DataFrame = {
     require(values.columns.contains(bucketCol),
@@ -980,9 +992,8 @@ final class VersionedTable(spark: SparkSession, root: String,
       sys.error(s"no commits under $root"))
     val m = writersOf(prev)
     val n = bucketsOf(prev).getOrElse(0)
-    if (m.isEmpty || n == 0) return readCommit(prev) // nothing to prune by
-    val wanted = values.select(bucketExpr(n).as("b"))
-      .distinct().collect().map(_.getLong(0).toInt).toSet
+    if (n == 0) return readCommit(prev) // nothing to prune by
+    val wanted = probeBuckets(n, Seq(values))
     val pruned = m.filter { case (b, _) => wanted(b) }
     // schema-stable empty WITHOUT a full-manifest listing: one bucket
     // dir carries the schema (a 2048-bucket table's full listing

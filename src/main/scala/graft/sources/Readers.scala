@@ -34,15 +34,32 @@ object Readers {
       case SourceFormat.Hl7   => hl7Messages(spark, path)
     }
 
-  /** CSV with header, all columns read as string (S4). PERMISSIVE mode
-    * retains malformed rows for quarantine accounting.
+  /** CSV with header, the spec's columns read as string by their header
+    * names, as csv.DictReader reads them (S4): a repeated name takes its
+    * last column's value, and a spec column the header lacks is absent
+    * from the frame. The header line is parsed on the driver, so no
+    * Spark job infers the schema. PERMISSIVE mode retains malformed rows
+    * for quarantine accounting.
     */
-  def csv(spark: SparkSession, spec: SourceSpec, path: String): DataFrame =
+  def csv(spark: SparkSession, spec: SourceSpec, path: String): DataFrame = {
+    val header = csvHeaderFields(spark, path)
+    val taken = header.filter(_ != null).groupBy(_.toLowerCase).view.mapValues(_.size).toMap
+    // a column keeps a name the header holds once, so the CSV source
+    // finds the header conforming; a repeated or empty one is renamed
+    val names = header.zipWithIndex.map { case (h, i) =>
+      if (h != null && taken(h.toLowerCase) == 1) h
+      else Iterator.iterate(s"_c$i")(_ + "_").find(n => !taken.contains(n.toLowerCase)).get
+    }
+    val at = header.zipWithIndex.filter(_._1 != null).toMap // a name's last column
     spark.read
       .option("header", "true")
       .option("mode", "PERMISSIVE")
-      .schema(spec.rawSchema)
+      .schema(StructType(names.padTo(1, "_c0").map(StructField(_, StringType))))
       .csv(path)
+      .select(spec.fields.filter(f => at.contains(f.name)).map { f =>
+        col("`" + names(at(f.name)).replace("`", "``") + "`").as(f.name)
+      }: _*)
+  }
 
   /** CSV where we must keep *whatever* header the file has (used by the
     * scrub stage, which preserves input fieldnames — K3), every column
@@ -58,17 +75,14 @@ object Readers {
     spark.read.option("header", "true").schema(schema).csv(path)
   }
 
-  /** The names in a CSV file's header line as csv.DictReader reads them:
-    * unlike [[csvInferHeader]]'s columns, a repeated name is not renamed
-    * (`notes,notes` keeps `notes`); an empty name is left out. Parsed on
-    * the driver with the CSV source's own parser settings; empty for a
-    * file without a non-blank line.
+  /** The fields of a CSV file's header line by position, null where a
+    * name is empty; empty for a file without a non-blank line.
     */
-  def csvHeaderNames(spark: SparkSession, path: String): Seq[String] =
+  private def csvHeaderFields(spark: SparkSession, path: String): Seq[String] =
     firstNonBlankLine(spark, path).toSeq.flatMap { line =>
       val options = new CSVOptions(Map.empty[String, String], false,
         spark.sessionState.conf.sessionLocalTimeZone)
-      new CsvParser(options.asParserSettings).parseLine(line).toSeq.filter(_ != null)
+      new CsvParser(options.asParserSettings).parseLine(line).toSeq
     }
 
   /** The first line of a text file that is not empty or all spaces (the

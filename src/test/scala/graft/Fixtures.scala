@@ -47,11 +47,22 @@ object Fixtures {
     * between two marker jobs.
     */
   def jobsDuring[A](spark: SparkSession)(body: => A): (A, Seq[Option[String]]) = {
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Option[String])]
+    val (a, jobs) = jobShufflesDuring(spark)(body)
+    (a, jobs.map(_._1))
+  }
+
+  /** [[jobsDuring]], with the shuffle map stages each job's stages read
+    * (their parent stages): empty for a job that reads no shuffle. A
+    * shuffle that AQE runs as a job of its own shows in the job that
+    * reads it.
+    */
+  def jobShufflesDuring[A](spark: SparkSession)(body: => A): (A, Seq[(Option[String], Set[Int])]) = {
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Option[String], Set[Int])]
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
-        jobs.add(prop("spark.job.description").getOrElse("") -> prop("spark.sql.execution.id"))
+        jobs.add((prop("spark.job.description").getOrElse(""), prop("spark.sql.execution.id"),
+          e.stageInfos.flatMap(_.parentIds).toSet))
       }
     }
     val sc = spark.sparkContext
@@ -70,7 +81,7 @@ object Fixtures {
       assert(seen("jobs-during:end"), "end marker never reached the listener")
       val during = jobs.asScala.toSeq.dropWhile(_._1 != "jobs-during:start")
         .dropWhile(_._1 == "jobs-during:start").takeWhile(_._1 != "jobs-during:end")
-      (a, during.map(_._2))
+      (a, during.map(j => j._2 -> j._3))
     } finally sc.removeSparkListener(listener)
   }
 

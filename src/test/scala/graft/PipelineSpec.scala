@@ -192,6 +192,27 @@ class PipelineSpec extends SparkSpec {
     assert(Files.exists(Paths.get(lake, "quarantine", "hospital_a", "a_empty.csv")))
   }
 
+  test("CSV validation reads columns by header name: a file with dob and diagnosis swapped completes") {
+    // the good rows with dob and diagnosis swapped in header and rows,
+    // as csv.DictReader reads them alike
+    def swapped(line: String): String = {
+      val f = line.split(",", -1)
+      f.updated(3, f(5)).updated(5, f(3)).mkString(",")
+    }
+    val base = Fixtures.tmpDir("srcswap")
+    Fixtures.write(base.resolve("hospital_a/swapped.csv"),
+      Fixtures.csvGood.linesIterator.map(swapped).mkString("", "\n", "\n"))
+    val p = new Pipeline(spark, Fixtures.tmpDir("lakeswap").toString)
+    p.ingest(base.toString)
+    val (verdicts, jobs) = jobsDuring(p.validatePending())
+    assert(verdicts.map(_._2) == Seq(true) && jobs == 1)
+    p.scrubPending(); p.transformPending()
+    val r = p.provenance.batchRows.head
+    assert(r.getAs[String]("status") == "COMPLETED" && r.getAs[Long]("total_rows") == 3L)
+    assert(spark.read.parquet(r.getAs[String]("version_path")).select("diagnosis")
+      .collect().map(_.getString(0)).toSet == Set("Hypertension", "Flu", "Migraine"))
+  }
+
   test("an HL7 file whose message 230 of 250 has no PID segment is quarantined") {
     val good = Fixtures.hl7Good.split("\n\n")(0).trim
     def file(bad: Option[Int]): String = (1 to 250).map(i =>

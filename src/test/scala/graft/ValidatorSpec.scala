@@ -18,6 +18,23 @@ class ValidatorSpec extends SparkSpec {
     assert(r.valid && r.rowCount == 3 && r.missingColumns.isEmpty)
   }
 
+  test("a CSV is validated by header name; a repeated name takes its last column, as csv.DictReader") {
+    val dir = Fixtures.tmpDir("valnames")
+    def check(name: String, text: String): (Boolean, Seq[String], Seq[String]) = {
+      val r = Validator.validate(Readers.csv(spark, Seeds.hospitalA,
+        Fixtures.write(dir.resolve(name), text).toString), Seeds.hospitalA)
+      (r.valid, r.missingColumns, r.errors)
+    }
+    val header = "patient_id,patient_name,ssn,dob,visit_date,diagnosis,notes"
+    val row = "P1,Ann Lee,123-45-6789,1971-04-12,2025-02-01,Flu,n"
+    assert(check("reversed.csv", header.split(",").reverse.mkString(",") + "\n" +
+      row.split(",").reverse.mkString(",") + "\n") == ((true, Nil, Nil)))
+    assert(check("last_dob_good.csv", s"$header,dob\n$row,1980-01-01\n".replace("1971-04-12", "bad")) ==
+      ((true, Nil, Nil)))
+    assert(check("last_dob_bad.csv", s"$header,dob\n$row,bad\n") == ((false, Nil, Seq("type_error:dob:bad"))))
+    assert(check("no_ssn.csv", header.replace("ssn", "SSN") + "\n" + row + "\n")._2 == Seq("ssn"))
+  }
+
   test("missing column + null violation + type error all reported") {
     // csvBad has no ssn column; read with inferred header so the frame
     // really lacks it (schema-on-read like the reference DictReader)

@@ -389,23 +389,6 @@ class VersionedTableSpec extends SparkSpec {
     assert(!cdc.contains("e"), "emptied group must disappear under CDC refresh")
   }
 
-  test("upsert folds a legacy manifest-less snapshot instead of dropping it") {
-    import org.apache.spark.sql.functions.lit
-    val root = Fixtures.tmpDir("vtl").toString
-    // legacy (pre-bucketing) layout: parquet directly under <root>/<ts>/
-    val legacyTs = "20200101000000"
-    Seq(("A", "1", "a1"), ("B", "1", "b1")).toDF("k", "v", "payload")
-      .withColumn("_commit_time", lit(legacyTs))
-      .write.parquet(s"$root/$legacyTs")
-    val vt = new VersionedTable(spark, root, "k", "v", numBuckets = 4)
-    assert(vt.snapshot.count() == 2) // legacy fallback read works
-    vt.upsert(Seq(("B", "2", "b2")).toDF("k", "v", "payload"))
-    val snap = vt.snapshot.collect()
-      .map(r => r.getAs[String]("k") -> r.getAs[String]("payload")).toMap
-    assert(snap == Map("A" -> "a1", "B" -> "b2"),
-      "legacy rows must be carried into the bucketed commit")
-  }
-
   test("a crashed commit (data/ but no manifest) is skipped, not read as legacy") {
     import java.nio.file.{Files, Paths}
     val root = Fixtures.tmpDir("vtc").toString
@@ -449,18 +432,6 @@ class VersionedTableSpec extends SparkSpec {
       val rows = t.snapshot.collect().map(r => r.getAs[String]("k") -> r.getAs[String]("payload"))
       assert(rows.length == want.size && rows.toMap == want)
     }
-  }
-
-  test("incremental works on a legacy manifest-less snapshot") {
-    import org.apache.spark.sql.functions.lit
-    val root = Fixtures.tmpDir("vtli").toString
-    val legacyTs = "20200101000000"
-    Seq(("A", "1", "a1")).toDF("k", "v", "payload")
-      .withColumn("_commit_time", lit(legacyTs))
-      .write.parquet(s"$root/$legacyTs")
-    val vt = new VersionedTable(spark, root, "k", "v")
-    assert(vt.incremental("00000000000000").count() == 1)
-    assert(vt.incremental(legacyTs).count() == 0)
   }
 
   test("upsert merges rows with null record keys") {
@@ -629,22 +600,6 @@ class VersionedTableSpec extends SparkSpec {
     val commits = vt8.snapshot.collect()
       .map(r => r.getAs[String]("k") -> r.getAs[String](vt8.CommitCol)).toMap
     assert(commits("A") == c1 && commits("B") == c2)
-  }
-
-  test("rebucket folds a legacy manifest-less snapshot into the bucketed layout") {
-    val root = Fixtures.tmpDir("vtml").toString
-    val legacyTs = "20200101000000"
-    Seq(("A", "1", "a1"), ("B", "1", "b1")).toDF("k", "v", "payload")
-      .write.parquet(s"$root/$legacyTs") // no per-row _commit_time at all
-    val vt = new VersionedTable(spark, root, "k", "v", numBuckets = 4)
-    val vt2 = vt.rebucket(4)
-    val snap = vt2.snapshot.collect()
-      .map(r => r.getAs[String]("k") -> r.getAs[String]("payload")).toMap
-    assert(snap == Map("A" -> "a1", "B" -> "b1"))
-    // legacy rows got stamped with the migration commit
-    assert(vt2.incremental(legacyTs).count() == 2)
-    vt2.upsert(Seq(("B", "2", "b2")).toDF("k", "v", "payload"))
-    assert(vt2.snapshot.count() == 2)
   }
 
   test("joinWithin equals the naive range-join result") {
@@ -1277,5 +1232,175 @@ class VersionedTableSpec extends SparkSpec {
     assert(reopened.snapshot.collect().map(_.getAs[String]("payload")).toSeq == Seq("v10"))
     val after = reopened.upsert(Seq(("A", 11L, "v11")).toDF("k", "pre", "payload"))
     assert(after.length == 17 && after > old && reopened.commits.take(2) == Seq(after, old))
+  }
+
+  /** Spark jobs `body` launched, each with the shuffles it wrote or read. */
+  private def jobShuffles(body: => Any): Seq[(Option[String], Set[Int])] =
+    Fixtures.jobShufflesDuring(spark)(body)._2
+
+  test("on a one-bucket table an upsert is one job, a delete two and a diff one, none shuffling") {
+    val root = Fixtures.tmpDir("vtonejob").toString
+    val vt = new VersionedTable(spark, root, "k", "pre")
+    val c1 = vt.upsert((1 to 200).map(i => (s"K$i", 1L, s"p$i")).toDF("k", "pre", "payload"))
+    val up = jobShuffles(vt.upsert(Seq(("K1", 2L, "p1b"), ("K201", 1L, "p201")).toDF("k", "pre", "payload")))
+    val del = jobShuffles(vt.delete(Seq("K2", "KNOPE").toDF("k")))
+    val head = vt.commits.head
+    val diff = jobShuffles(vt.diff(c1, head).collect())
+    for ((name, jobs, want) <- Seq(("upsert", up, 1), ("delete", del, 2), ("diff", diff, 1)))
+      assert(jobs.size == want && jobs.forall(j => j._1.isDefined && j._2.isEmpty), s"$name: $jobs")
+    assert(vt.diff(c1, head).collect().map(r => r.getString(0) -> r.getAs[String]("change_type")).toMap ==
+      Map("K1" -> "update", "K2" -> "delete", "K201" -> "insert"))
+    for (c <- vt.commits) {
+      assert(Files.readAllLines(Paths.get(s"$root/$c/manifest.tsv")).get(0) == "#buckets=1")
+      assert(parquetBytes(s"$root/$c/data").size == 1, s"commit $c is one file")
+    }
+  }
+
+  test("on an 8-bucket table an upsert of several buckets is a probe job and one shuffle") {
+    val root = Fixtures.tmpDir("vtshuffle").toString
+    val vt = new VersionedTable(spark, root, "k", "pre", numBuckets = 8)
+    val c1 = vt.upsert((1 to 80).map(i => (s"K$i", 1L, s"payload $i")).toDF("k", "pre", "payload"))
+    val keys = keyPerBucket(8).take(4)
+    // the touched rows outgrow the target, and no bucket does
+    vt.targetBucketBytes =
+      keys.map(k => parquetBytes(s"$root/$c1/data/_bucket=${bucketOf(k, 8)}").sum).max * 3 / 2
+    val jobs = jobShuffles(vt.upsert(keys.map(k => (k, 2L, s"new $k")).toDF("k", "pre", "payload")))
+    assert(jobs.size == 3 && jobs.head._2.isEmpty && jobs.flatMap(_._2).toSet.size == 1, s"$jobs")
+    val c2 = vt.commits.head
+    assert(Files.readAllLines(Paths.get(s"$root/$c2/manifest.tsv")).get(0) == "#buckets=8", "no growth")
+    assert(graft.util.Fs.list(Paths.get(s"$root/$c2/data")).filter(_.getFileName.toString.startsWith("_bucket="))
+      .map(d => parquetBytes(d.toString).size) == Seq(1, 1, 1, 1), "one file per touched bucket")
+    assert(vt.snapshot.collect().map(r => r.getAs[String]("k") -> r.getAs[String]("payload")).toMap ==
+      (1 to 80).map(i => s"K$i" -> s"payload $i").toMap ++ keys.map(k => k -> s"new $k"))
+  }
+
+  /** The commit and diff plans as they were before the bucket clustering,
+    * over a whole table state: the merge windows on the record key (one
+    * shuffle) and repartitions on the bucket for the write (a second),
+    * and the diff full-outer joins the two sides through two exchanges.
+    */
+  private object Before {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+
+    def merge(state: Option[DataFrame], updates: DataFrame, deleteKeys: Option[DataFrame],
+        ts: String): DataFrame = {
+      val tagged = updates.withColumn("_is_update", lit(1)).withColumn("_commit_time", lit(ts))
+      val merged = state.fold(tagged)(s => deleteKeys.fold(s)(delete(s, _))
+        .withColumn("_is_update", lit(0)).unionByName(tagged, allowMissingColumns = true))
+      val w = Window.partitionBy(col("k")).orderBy(col("pre").desc, col("_is_update").desc)
+      merged.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1).drop("_rn", "_is_update")
+        .withColumn("_bucket", pmod(xxhash64(coalesce(col("k"), lit("-"))), lit(4L)))
+        .repartition(4, col("_bucket")).drop("_bucket")
+    }
+
+    def delete(rows: DataFrame, keys: DataFrame): DataFrame =
+      rows.join(keys.select(col("k").as("_del_key")), rows("k") <=> col("_del_key"), "left_anti")
+
+    def diff(a: DataFrame, b: DataFrame, payload: Seq[String]): DataFrame = {
+      val ap = a.select(col("k").as("_ka") +: lit(true).as("_pa") +: payload.map(c => col(c).as(s"before_$c")): _*)
+      val bp = b.select(col("k").as("_kb") +: lit(true).as("_pb") +: payload.map(c => col(c).as(s"after_$c")): _*)
+      val same = struct(payload.map(c => col(s"before_$c")): _*) <=> struct(payload.map(c => col(s"after_$c")): _*)
+      ap.join(bp, col("_ka") <=> col("_kb"), "full_outer")
+        .withColumn("k", coalesce(col("_ka"), col("_kb")))
+        .withColumn("change_type", when(col("_pa").isNull, lit("insert"))
+          .when(col("_pb").isNull, lit("delete")).when(!same, lit("update")))
+        .filter(col("change_type").isNotNull)
+        .select(col("k") +: col("change_type") +: payload.flatMap(c => Seq(col(s"before_$c"), col(s"after_$c"))): _*)
+    }
+  }
+
+  /** `got` holds `want`'s rows over `got`'s columns; a column only
+    * `want` has is all null (a bucket-emptying delete can drop an added
+    * column's last writer from the manifest).
+    */
+  private def assertSameState(got: DataFrame, want: DataFrame, what: String): Unit = {
+    import org.apache.spark.sql.functions.col
+    assert(got.columns.toSet.subsetOf(want.columns.toSet), s"$what: ${got.columns.toSeq}")
+    for (c <- want.columns if !got.columns.contains(c))
+      assert(want.filter(col(c).isNotNull).isEmpty, s"$what: $c")
+    val cols = got.columns.sorted.toSeq.map(col)
+    assert(sortedRows(got.select(cols: _*)) == sortedRows(want.select(cols: _*)), s"$what: rows")
+  }
+
+  /** A fuzzed op mix on `vt` (key `k`, precombine `pre`, payload, and a
+    * partition column `part` when `vt` is payload-partitioned), checked
+    * against [[Before]] after every commit, then asOf at every commit and
+    * diff between neighbouring and first-to-last commits. Precombine
+    * values are few, so ties are common; key-bucketed tables also see
+    * null keys; past the middle, upserts may add an `extra` column.
+    * Returns, per commit, whether it ran a shuffle.
+    */
+  private def fuzzAgainstBefore(vt: VersionedTable, seed: Int, ops: Int): Seq[Boolean] = {
+    import org.apache.spark.sql.functions.{col, lit}
+    val rnd = new scala.util.Random(seed)
+    val parted = vt.partitionColOpt.isDefined
+    val pool: IndexedSeq[String] = (0 until 40).map(i => s"K$i") ++ (if (parted) Nil else Seq(null))
+    var state: Option[DataFrame] = None
+    val states = scala.collection.mutable.ArrayBuffer.empty[(String, DataFrame)]
+    val shuffled = scala.collection.mutable.ArrayBuffer.empty[Boolean]
+    def keep(df: DataFrame): DataFrame = spark.createDataFrame(df.collect().toSeq.asJava, df.schema)
+    def pick(n: Int): Seq[String] = rnd.shuffle(pool).take(n)
+    def current(keys: Seq[String]): DataFrame =
+      state.get.filter(col("k").isin(keys.filter(_ != null): _*)).select("k", "part")
+    def updates(keys: Seq[String], i: Int): DataFrame = {
+      val base = keys.map(k => (k, rnd.nextInt(3).toLong, s"v$i-${rnd.nextInt(100)}", rnd.nextInt(6).toLong))
+        .toDF("k", "pre", "payload", "part")
+      val df = if (parted) base else base.drop("part")
+      if (i > ops / 2 && rnd.nextBoolean()) df.withColumn("extra", lit(s"x$i")) else df
+    }
+    def deleteKeys(keys: Seq[String]): DataFrame =
+      if (!parted) keys.toDF("k")
+      else current(keys).unionByName(Seq(("KNOPE", 0L)).toDF("k", "part"))
+    for (i <- 0 until ops) {
+      val op = if (i == 0) 0 else rnd.nextInt(3)
+      val keys = pick(if (i == 0) 30 else 1 + rnd.nextInt(8))
+      val dels = pick(1 + rnd.nextInt(4)) :+ "KNOPE"
+      val ups = updates(keys, i)
+      val old = state.filter(_ => parted).map(_ => current(keys))
+      var ts = ""
+      val jobs = jobShuffles {
+        ts = op match {
+          case 0 => old.fold(vt.upsert(ups))(vt.upsertMoved(ups, _))
+          case 1 => vt.delete(deleteKeys(dels))
+          case _ => vt.applyDelta(deleteKeys(dels), ups, old)
+        }
+      }
+      shuffled += jobs.exists(_._2.nonEmpty)
+      val next = keep(op match {
+        case 0 => Before.merge(state, ups, None, ts)
+        case 1 => Before.delete(state.get, dels.toDF("k"))
+        case _ => Before.merge(state, ups, Some(dels.toDF("k")), ts)
+      })
+      state = Some(next)
+      states += ts -> next
+      assertSameState(vt.snapshot, next, s"seed $seed op $i snapshot")
+    }
+    for (((ts, want), i) <- states.zipWithIndex) {
+      assertSameState(vt.asOf(ts), want, s"seed $seed asOf($i)")
+      for (j <- Set(i + 1, states.size - 1) if j > i && j < states.size) {
+        val got = vt.diff(ts, states(j)._1)
+        val payload = got.columns.toSeq.filter(_.startsWith("before_")).map(_.stripPrefix("before_"))
+        val ref = Before.diff(want, states(j)._2, payload)
+        assert(got.columns.toSeq == ref.columns.toSeq && sortedRows(got) == sortedRows(ref),
+          s"seed $seed diff($i, $j)")
+      }
+    }
+    shuffled.toSeq
+  }
+
+  test("clustered commits and diffs equal the shuffled plans over fuzzed op mixes") {
+    // a default (one-bucket) table: no probe job, one task per commit
+    val one = fuzzAgainstBefore(new VersionedTable(spark, Fixtures.tmpDir("vtfz1").toString, "k", "pre"), 1, 14)
+    assert(!one.exists(identity), s"one bucket: $one")
+    // 8 buckets under a small target: touches of one bucket fit one
+    // task, wider touches shuffle on the bucket
+    for ((part, seed) <- Seq(None -> 2, Some("part") -> 3)) {
+      val vt = new VersionedTable(spark, Fixtures.tmpDir("vtfz8").toString, "k", "pre", numBuckets = 8,
+        partitionColOpt = part)
+      vt.targetBucketBytes = 4L << 10
+      val shuffled = fuzzAgainstBefore(vt, seed, 16)
+      assert(shuffled.contains(true) && shuffled.tail.contains(false), s"$part: both sides of the guard: $shuffled")
+    }
   }
 }
