@@ -50,13 +50,14 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * touched buckets come from one probe with no shuffle (no job at all on
   * a one-bucket table). The touched rows are tagged with their bucket
   * and clustered once before the precombine window: into one task when
-  * they fit [[VersionedTable.TargetBucketBytes]] by Catalyst's size
-  * estimate, else by a shuffle on the bucket. A record-key-bucketed
+  * the commit touches one bucket (a one-bucket write is one task
+  * either way), else by a shuffle on the bucket. A record-key-bucketed
   * table windows over (bucket, recordKey) — the same groups as
   * recordKey alone, as the bucket is a function of the key — so neither
-  * the window nor the bucket-partitioned write adds an exchange: a small
-  * upsert is one Spark job, and every touched bucket is one file. A
-  * small [[diff]] joins its two sides in one task the same way.
+  * the window nor the bucket-partitioned write adds an exchange: an
+  * upsert into a one-bucket table is one Spark job, and every touched
+  * bucket is one file. A [[diff]] that reads at most one bucket per
+  * side joins its two sides in one task the same way.
   *
   * The bucket count follows the table's bytes, as Hudi's file sizing
   * does (https://hudi.apache.org/docs/file_sizing). A table's first
@@ -404,18 +405,12 @@ final class VersionedTable(spark: SparkSession, root: String,
     if (est >= spark.sessionState.conf.defaultSizeInBytes) None else Some(est.toLong)
   }
 
-  /** Whether `frames` together fit one bucket target by their estimate:
-    * then one task clusters them, with no shuffle.
-    */
-  private def fitsOneTask(frames: DataFrame*): Boolean = {
-    val ests = frames.map(estimatedBytes)
-    ests.forall(_.isDefined) && ests.flatten.sum <= targetBucketBytes
-  }
-
   /** The buckets `frames`' bucket-column values hash to under `n`
-    * buckets. A one-bucket table needs no job; otherwise one job with no
-    * shuffle, each partition returning its distinct ids — at most `n`
-    * ints, however large the frames.
+    * buckets. A one-bucket table needs no job, so every commit on it
+    * reads bucket 0, even for an empty input. Otherwise one job with no
+    * shuffle, each input partition returning its distinct ids: the
+    * driver collects at most `n` ints per input partition, however many
+    * rows the frames hold.
     */
   private def probeBuckets(n: Int, frames: Seq[DataFrame]): Set[Int] =
     if (n == 1) Set(0)
@@ -424,11 +419,11 @@ final class VersionedTable(spark: SparkSession, root: String,
       .collect().toSet
 
   /** Bucket-tagged `rows` clustered for a write of `width` touched
-    * buckets, each bucket within one task: all in one task when `one`
-    * (no shuffle), else a shuffle on the bucket.
+    * buckets, each bucket within one task: one bucket in one task with
+    * no shuffle, more by a shuffle on the bucket.
     */
-  private def cluster(rows: DataFrame, one: Boolean, width: Int): DataFrame =
-    if (one) rows.coalesce(1) else rows.repartition(width, col(BucketCol))
+  private def cluster(rows: DataFrame, width: Int): DataFrame =
+    if (width == 1) rows.coalesce(1) else rows.repartition(width, col(BucketCol))
 
   /** Grow an oversized layout: when the `rewritten` buckets of a commit
     * under `n` buckets hold more than [[targetBucketBytes]] on average,
@@ -515,8 +510,10 @@ final class VersionedTable(spark: SparkSession, root: String,
     * precombine values. Buckets the update doesn't touch are carried
     * forward by manifest reference — zero data movement. The touched
     * rows are clustered once by bucket (see the class doc): an upsert
-    * that fits one bucket target is one Spark job on a one-bucket
-    * table, and a probe job plus the write on a larger one.
+    * is one Spark job on a one-bucket table, and a probe job plus the
+    * write on a larger one. A one-bucket table runs no probe, so even an
+    * empty `updates0` rewrites bucket 0 (same rows, same per-row commit
+    * times) rather than writing nothing.
     */
   def upsert(updates0: DataFrame): String = merge("upsert", None, updates0, None)
 
@@ -550,9 +547,10 @@ final class VersionedTable(spark: SparkSession, root: String,
     * then the anti-join; a one-bucket table needs no probe);
     * non-deterministic key sets should be checkpointed first — a key the
     * probe missed would survive in an unrewritten bucket. The survivors
-    * are clustered by bucket as [[upsert]]'s rows are, so a small delete
-    * is the anti join's key broadcast and the write. Crash-safe: data
-    * before manifest.
+    * are clustered by bucket as [[upsert]]'s rows are, so a one-bucket
+    * delete is the anti join's key broadcast and the write; with no
+    * probe, an empty key set on a one-bucket table still rewrites
+    * bucket 0 unchanged. Crash-safe: data before manifest.
     */
   def delete(keys0: DataFrame): String = {
     val prev = commitDirs.lastOption.getOrElse(
@@ -569,7 +567,7 @@ final class VersionedTable(spark: SparkSession, root: String,
     val live = prevManifest.filter { case (b, _) => probed(b) }
     val surv = if (live.isEmpty) None else {
       val rows = withoutKeys(readGrouped(live), keys0)
-      Some(cluster(rows.withColumn(BucketCol, bucketExpr(n)), fitsOneTask(rows), probed.size))
+      Some(cluster(rows.withColumn(BucketCol, bucketExpr(n)), probed.size))
     }
     val written = surv.fold(Seq.empty[Int]) { s =>
       s.write.mode("overwrite").partitionBy(BucketCol).parquet(s"$root/$ts/data")
@@ -661,15 +659,14 @@ final class VersionedTable(spark: SparkSession, root: String,
     // function of the key, so the groups are the key's, and the bucket
     // clustering satisfies both the window and the write. A payload-
     // partitioned table must window on the key alone — a moved row's
-    // stale copy sits in another bucket — so unless one task holds all
-    // rows, it shuffles on the key and then on the bucket.
-    val one = fitsOneTask(merged)
+    // stale copy sits in another bucket — so unless the commit touches
+    // one bucket, it shuffles on the key and then on the bucket.
     val width = math.min(n, math.max(1, touched.size))
     val rows = merged.withColumn(BucketCol, bucketExpr(n))
     val out =
-      if (partitionColOpt.isEmpty) latestPerKey(cluster(rows, one, width), Seq(col(BucketCol)))
-      else if (one) latestPerKey(cluster(rows, one, width), Nil)
-      else cluster(latestPerKey(rows, Nil), one, width)
+      if (partitionColOpt.isEmpty) latestPerKey(cluster(rows, width), Seq(col(BucketCol)))
+      else if (width == 1) latestPerKey(cluster(rows, width), Nil)
+      else cluster(latestPerKey(rows, Nil), width)
     out.write.mode("overwrite").partitionBy(BucketCol).parquet(s"$root/$ts/data")
     val written = writtenBuckets(ts)
     val unexpected = written.toSet -- touched
@@ -753,10 +750,9 @@ final class VersionedTable(spark: SparkSession, root: String,
     * (they surface as missing keys on the newer side) at the cost of
     * reading both snapshots rather than only changed buckets — the
     * classic completeness/cost trade; at scale, run it per bucket or
-    * over manifest-diff-pruned buckets. When the two sides together fit
-    * [[VersionedTable.TargetBucketBytes]] by Catalyst's estimate, both
-    * are read into one task, so the join runs without an exchange: one
-    * Spark job.
+    * over manifest-diff-pruned buckets. When each side reads at most
+    * one bucket (one file), both are read into one task, so the join
+    * runs without an exchange: one Spark job.
     *
     * Output: recordKey, change_type, then `before_<c>` / `after_<c>`
     * for every shared payload column (null on the absent side).
@@ -778,19 +774,18 @@ final class VersionedTable(spark: SparkSession, root: String,
       val (ba, bb) = (manifest(dirA).flatMap(_.buckets), manifest(dirB).flatMap(_.buckets))
       ba.isDefined && ba == bb
     }
-    val (a0, b0) =
-      if (!prunable) (readCommit(dirA), readCommit(dirB))
+    val (a0, b0, one) =
+      if (!prunable) (readCommit(dirA), readCommit(dirB), mA.size <= 1 && mB.size <= 1)
       else {
         val changed = (mA.keySet ++ mB.keySet)
           .filter(bk => mA.get(bk) != mB.get(bk))
-        def side(m: Map[Int, String]): DataFrame = {
-          val cm = m.filter(kv => changed(kv._1))
+        val (cA, cB) = (mA.filter(kv => changed(kv._1)), mB.filter(kv => changed(kv._1)))
+        def side(cm: Map[Int, String]): DataFrame =
           if (cm.isEmpty) readCommit(dirA).filter(lit(false)) // schema-only
           else readGrouped(cm)
-        }
-        (side(mA), side(mB))
+        (side(cA), side(cB), cA.size <= 1 && cB.size <= 1)
       }
-    val (a, b) = if (fitsOneTask(a0, b0)) (a0.coalesce(1), b0.coalesce(1)) else (a0, b0)
+    val (a, b) = if (one) (a0.coalesce(1), b0.coalesce(1)) else (a0, b0)
     val payload = a.columns.toSeq.filter(c => c != recordKey && c != CommitCol)
       .filter(b.columns.contains)
     val ap = a.select(col(recordKey).as("_ka") +: lit(true).as("_pa") +:
@@ -883,7 +878,7 @@ final class VersionedTable(spark: SparkSession, root: String,
     val out = transform(snap)
     require(out.columns.contains(CommitCol),
       "migration transform must preserve the per-row commit-time column")
-    cluster(out.withColumn(BucketCol, bucketExpr(n)), fitsOneTask(out), n) // one file per bucket
+    cluster(out.withColumn(BucketCol, bucketExpr(n)), n) // one file per bucket
       .write.mode("overwrite").partitionBy(BucketCol).parquet(s"$root/$ts/data")
     val written = writtenBuckets(ts)
     publish(ts, n, written.map(_ -> ts).toMap, written, None)
@@ -974,8 +969,9 @@ final class VersionedTable(spark: SparkSession, root: String,
     * manifest-addressed directory. `values` is any frame carrying the
     * table's bucket column (the payload partition column when
     * configured, else the record key); it may be arbitrarily large —
-    * what's collected is the DISTINCT bucket ids, ≤ bucket-count longs,
-    * bounded regardless of input size. Values hash under the count the
+    * what's collected is each input partition's distinct bucket ids,
+    * ≤ bucket-count ints per partition, bounded by the partition count
+    * and not by the row count. Values hash under the count the
     * latest commit was written with. Returns the touched buckets'
     * FULL rows (a bucket holds other values too — the caller's
     * semi-join/filter restores exactness, e.g. repairParts' affected-

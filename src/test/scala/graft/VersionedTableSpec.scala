@@ -1259,11 +1259,10 @@ class VersionedTableSpec extends SparkSpec {
   test("on an 8-bucket table an upsert of several buckets is a probe job and one shuffle") {
     val root = Fixtures.tmpDir("vtshuffle").toString
     val vt = new VersionedTable(spark, root, "k", "pre", numBuckets = 8)
-    val c1 = vt.upsert((1 to 80).map(i => (s"K$i", 1L, s"payload $i")).toDF("k", "pre", "payload"))
+    vt.upsert((1 to 80).map(i => (s"K$i", 1L, s"payload $i")).toDF("k", "pre", "payload"))
     val keys = keyPerBucket(8).take(4)
-    // the touched rows outgrow the target, and no bucket does
-    vt.targetBucketBytes =
-      keys.map(k => parquetBytes(s"$root/$c1/data/_bucket=${bucketOf(k, 8)}").sum).max * 3 / 2
+    // however small, a several-bucket write shuffles on the bucket, so
+    // each touched bucket has its own task
     val jobs = jobShuffles(vt.upsert(keys.map(k => (k, 2L, s"new $k")).toDF("k", "pre", "payload")))
     assert(jobs.size == 3 && jobs.head._2.isEmpty && jobs.flatMap(_._2).toSet.size == 1, s"$jobs")
     val c2 = vt.commits.head
@@ -1272,6 +1271,9 @@ class VersionedTableSpec extends SparkSpec {
       .map(d => parquetBytes(d.toString).size) == Seq(1, 1, 1, 1), "one file per touched bucket")
     assert(vt.snapshot.collect().map(r => r.getAs[String]("k") -> r.getAs[String]("payload")).toMap ==
       (1 to 80).map(i => s"K$i" -> s"payload $i").toMap ++ keys.map(k => k -> s"new $k"))
+    // one touched bucket is one write task either way: no shuffle
+    val one = jobShuffles(vt.upsert(Seq((keys.head, 3L, "one")).toDF("k", "pre", "payload")))
+    assert(one.size == 2 && one.forall(_._2.isEmpty), s"one touched bucket: $one")
   }
 
   /** The commit and diff plans as they were before the bucket clustering,
@@ -1393,12 +1395,11 @@ class VersionedTableSpec extends SparkSpec {
     // a default (one-bucket) table: no probe job, one task per commit
     val one = fuzzAgainstBefore(new VersionedTable(spark, Fixtures.tmpDir("vtfz1").toString, "k", "pre"), 1, 14)
     assert(!one.exists(identity), s"one bucket: $one")
-    // 8 buckets under a small target: touches of one bucket fit one
-    // task, wider touches shuffle on the bucket
+    // 8 buckets: a commit touching one bucket runs in one task, a wider
+    // one shuffles on the bucket
     for ((part, seed) <- Seq(None -> 2, Some("part") -> 3)) {
       val vt = new VersionedTable(spark, Fixtures.tmpDir("vtfz8").toString, "k", "pre", numBuckets = 8,
         partitionColOpt = part)
-      vt.targetBucketBytes = 4L << 10
       val shuffled = fuzzAgainstBefore(vt, seed, 16)
       assert(shuffled.contains(true) && shuffled.tail.contains(false), s"$part: both sides of the guard: $shuffled")
     }
